@@ -21,12 +21,6 @@ from pyspark.sql import DataFrame
 from glre_spark.model import GLREModel, build_weights
 from glre_spark.model.weights import MODEL_SEED
 
-PRED_COLS = ["url", "h", "t", "h_name", "t_name", "h_type", "t_type", "r", "score"]
-PRED_SCHEMA = (
-    "url string, h int, t int, h_name string, t_name string, "
-    "h_type string, t_type string, r string, score double"
-)
-
 _MODEL_CACHE: dict[bytes, GLREModel] = {}
 
 
@@ -62,13 +56,19 @@ def infer_stage_agg(
     group_col: str | None = None,
     group_type: str = "int",
 ) -> DataFrame:
-    """Like infer_stage, but performs the first-level
-    (h_name, r, t_name) → (max score, min url, count) aggregation INSIDE
-    the Python stage, per partition. At ~150 predictions/doc the raw
-    stream is ~3× larger than the partition-distinct surface; collapsing
-    before the Arrow boundary cuts python→JVM transfer and the downstream
-    shuffle by the same factor. The JVM's map-side combine then merges
-    partitions (pipeline.predictions_to_triples).
+    """(…, url, text|html) → per-partition aggregated predictions
+    (h_name, r, t_name, score, url, n_pred_rows).
+
+    With ``extract_html=True`` the i1 extraction step runs INSIDE this same
+    Arrow stage (SURVEY.md §2.11: i1-i12 are one fused mapInPandas) — html
+    crosses the JVM↔Python boundary exactly once and no intermediate text
+    column is shuffled. The first-level (h_name, r, t_name) → (max score,
+    min url, count) aggregation also runs INSIDE the stage, per
+    partition. At ~150 predictions/doc the raw stream is ~3× larger than
+    the partition-distinct surface; collapsing before the Arrow boundary
+    cuts python→JVM transfer and the downstream shuffle by the same
+    factor. The JVM's map-side combine then merges partitions
+    (pipeline.predictions_to_triples).
 
     ``group_col`` (e.g. lineage bucket_group, or the streaming crawl_key)
     joins the agg key and rides through — the checkpointed single-pass run
@@ -135,63 +135,6 @@ def infer_stage_agg(
         cols.append(group_col)
         schema = f"{LEAN_SCHEMA}, {group_col} {group_type}"
     return df.select(*cols).mapInPandas(fn, schema)
-
-
-def infer_stage(
-    df: DataFrame, weights_bc=None, text_col: str = "text", extract_html: bool = False
-) -> DataFrame:
-    """(…, url, text|html) → predictions (url, h, t, names, types, r, score).
-
-    With ``extract_html=True`` the i1 extraction step runs INSIDE this same
-    Arrow stage (SURVEY.md §2.11: i1-i12 are one fused mapInPandas) — html
-    crosses the JVM↔Python boundary exactly once and no intermediate text
-    column is shuffled."""
-    from glre_spark.extract import extract_text
-    from glre_spark.nlp import analyze
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_model(weights_bc.value if weights_bc is not None else None)
-        for pdf in batches:
-            # column-wise accumulation: at ~150 predictions/doc the emit
-            # path would otherwise allocate millions of per-row dicts per
-            # partition — pure GC churn under high worker concurrency
-            cols: dict[str, list] = {c: [] for c in PRED_COLS}
-            if extract_html:
-                texts = (extract_text(h) for h in pdf["html"])
-            else:
-                texts = (t or "" for t in pdf["text"])
-            urls = list(pdf["url"])
-            docs = [analyze(url, text) for url, text in zip(urls, texts)]
-            for url, doc, preds in zip(urls, docs, model.predict_batch(docs)):
-                if not preds:
-                    continue
-                names, types = doc.entity_names, doc.entity_types
-                cols["url"].extend([url] * len(preds))
-                for h, t, rel, score in preds:
-                    cols["h"].append(h)
-                    cols["t"].append(t)
-                    cols["h_name"].append(names[h])
-                    cols["t_name"].append(names[t])
-                    cols["h_type"].append(types[h])
-                    cols["t_type"].append(types[t])
-                    cols["r"].append(rel)
-                    cols["score"].append(round(score, 6))
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(cols["url"], dtype="object"),
-                    "h": pd.Series(cols["h"], dtype=np.int32),
-                    "t": pd.Series(cols["t"], dtype=np.int32),
-                    "h_name": pd.Series(cols["h_name"], dtype="object"),
-                    "t_name": pd.Series(cols["t_name"], dtype="object"),
-                    "h_type": pd.Series(cols["h_type"], dtype="object"),
-                    "t_type": pd.Series(cols["t_type"], dtype="object"),
-                    "r": pd.Series(cols["r"], dtype="object"),
-                    "score": pd.Series(cols["score"], dtype=np.float64),
-                }
-            )
-
-    cols = ["url", df["html"]] if extract_html else ["url", df[text_col].alias("text")]
-    return df.select(*cols).mapInPandas(fn, PRED_SCHEMA)
 
 
 def broadcast_weights(spark, seed: int = MODEL_SEED):

@@ -55,12 +55,9 @@ def read_manifest(spark: SparkSession, base: str) -> DataFrame:
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
     except AnalysisException as e:
-        # match the error CLASS when the API provides it (stable across
-        # message rewording); fall back to the 3.x/4.x message tokens
-        err_class = ""
-        get_cls = getattr(e, "getErrorClass", None)
-        if callable(get_cls):
-            err_class = get_cls() or ""
+        # match the error condition (stable across message rewording);
+        # the 3.x/4.x message tokens cover errors raised without one
+        err_class = e.getCondition() or ""
         if "PATH_NOT_FOUND" in err_class or "PATH_NOT_FOUND" in str(e) or (
             "Path does not exist" in str(e)
         ):

@@ -36,6 +36,37 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def staging_root(spark: SparkSession) -> str:
+    """This application's staging root under the warehouse dir. Every
+    layout an op stages lives here, and the root is deleted when the
+    driver exits: synchronously at Python interpreter exit, and by Hadoop
+    ``deleteOnExit`` at JVM exit in case the Python driver was killed.
+    Both go through the Hadoop FileSystem, so a URI-scheme warehouse is
+    cleaned too. Keying on the applicationId keeps two apps sharing one
+    warehouse apart."""
+    import atexit
+
+    sc = spark.sparkContext
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    root = f"{wh.rstrip('/')}/_staging_{sc.applicationId}"
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(root)
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        fs.mkdirs(jpath)
+        fs.deleteOnExit(jpath)
+        atexit.register(fs.delete, jpath, True)
+    return root
+
+
+def staging_dir(spark: SparkSession, name: str) -> str:
+    """A fresh, never-before-used directory for one staged layout. Each
+    call gets its own dir, so a rebuild never touches files a DataFrame
+    built earlier still lists."""
+    import uuid
+
+    return f"{staging_root(spark)}/{name}_{uuid.uuid4().hex[:12]}"
+
+
 def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
     """Spread a narrow input across the cluster before a CPU-heavy
     per-row stage (guide §2.5 "input skew: one huge unsplittable file …

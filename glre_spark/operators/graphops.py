@@ -51,15 +51,20 @@ def cooccur_edges(docs):
     """(src, dst, weight bigint) adjacent-token digraph of a ``text``
     column. The pair fan-out is per-row (no shuffle); the single groupBy
     on the narrow string pair is the only exchange, with map-side combine
-    collapsing the token stream to vocab² rows before it moves.
+    collapsing the token stream to vocab² rows before it moves. The
+    guarded fan_out round-robins the raw ``text`` column before split(),
+    so that exchange moves one string per doc, not a token array.
 
     Pair enumeration is an index explode + two codegen element_at
     lookups, not a transform() lambda building struct arrays: Catalyst
     evaluates higher-order-function lambdas interpreted per element,
     and the whole-stage-codegen form measured ~20% faster on the same
     output (sf1.0: 1.35 vs 1.69 s, bit-identical edges)."""
-    toks = F.split(F.col("text"), " ")
-    d = fan_out(docs.select(toks.alias("toks"))).filter(F.size("toks") >= 2)
+    d = (
+        fan_out(docs.select("text"))
+        .select(F.split(F.col("text"), " ").alias("toks"))
+        .filter(F.size("toks") >= 2)
+    )
     return (
         d.select(
             "toks", F.explode(F.sequence(F.lit(1), F.size("toks") - 1)).alias("i")

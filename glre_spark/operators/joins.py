@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from glre_spark.operators import cents, fround, load, op
+from glre_spark.operators import cents, fround, load, op, staging_dir
 from glre_spark.operators.scans import PAGES_CTE, pages_view
 
 
@@ -264,42 +264,27 @@ def q3_shipping_priority(spark, sf_dir):
 
 
 def bucketed_join_df(spark, sf_dir):
-    """Build (lazily) the co-located bucketed join: (re)materialize both
-    sides as 8-bucket sortBy tables — repartition(8, key) first so every
-    bucket lands in exactly ONE file, the precondition for the reader to
-    trust the sortBy metadata — and return the merge-hinted join + agg.
-    Caller owns the spark.sql.legacy.bucketedTableScan.outputOrdering
-    flag (needed at PLAN time for the zero-Sort read)."""
-    import hashlib
-    import shutil
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    to, tl = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    # the session catalog is in-memory but the managed-table LOCATION is
-    # not: a fresh session that re-runs this op hits LOCATION_ALREADY_
-    # EXISTS unless the orphaned dir from the previous session goes first
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in (to, tl):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    (
-        load(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_orderpriority")
-        .repartition(8, "o_orderkey")
-        .write.bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .mode("overwrite")
-        .saveAsTable(to)
-    )
-    (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice")
-        .repartition(8, "l_orderkey")
-        .write.bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .mode("overwrite")
-        .saveAsTable(tl)
-    )
+    """Build (lazily) the co-located bucketed join: materialize both
+    sides as 8-bucket sortBy tables in fresh staging dirs —
+    repartition(8, key) first so every bucket lands in exactly ONE file,
+    the precondition for the reader to trust the sortBy metadata — and
+    return the merge-hinted join + agg. Caller owns the
+    spark.sql.legacy.bucketedTableScan.outputOrdering flag (needed at
+    PLAN time for the zero-Sort read)."""
+    to, tl = "b_orders", "b_lineitem"
+    for table, src, key, val in (
+        (to, "orders", "o_orderkey", "o_orderpriority"),
+        (tl, "lineitem", "l_orderkey", "l_extendedprice"),
+    ):
+        (
+            load(spark, sf_dir, src)
+            .select(key, val)
+            .repartition(8, key)
+            .write.bucketBy(8, key)
+            .sortBy(key)
+            .mode("overwrite")
+            .saveAsTable(table, path=staging_dir(spark, table))
+        )
     j = spark.table(to).hint("merge").join(
         spark.table(tl), F.col("l_orderkey") == F.col("o_orderkey")
     )

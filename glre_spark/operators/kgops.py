@@ -211,82 +211,21 @@ cand AS (
 )
 
 
-# One-entry memo shared by the dedup family (lsh_candidates,
-# dedup_ngram_jaccard, udf_grouped_map all start from the same capped band
-# table): keyed on (application, sf_dir, input fingerprint, cap) so a new
-# session, a different input dir, OR an overwritten documents.parquet under
-# the same path recomputes (the fingerprint folds the parquet file names,
-# sizes and mtimes). The evicted epoch's checkpoint blocks are released by
-# the ContextCleaner once the old DataFrame is unreferenced (localCheckpoint
-# RDDs are not in the SQL cache manager, so there is no explicit
-# DataFrame-level unpersist for them).
-_BANDS_CACHE: dict[tuple, object] = {}
-
-
-_FINGERPRINT_EPOCH = 0  # bumped per call for non-local paths → cache miss
-
-
-def _input_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
-    """Cheap content fingerprint of a parquet table: (name, size, mtime_ns)
-    of every data file. Catches same-path overwrites within one Spark app
-    without reading any data. LOCAL filesystem only: for a URI-scheme path
-    (hdfs://, s3a://, …) os.stat can't see the files, every file would
-    fingerprint as (-1, -1) and a same-path overwrite would silently hit
-    the stale cache — so such paths get a never-matching epoch token
-    (cache effectively disabled; a cluster deployment would fold in a
-    Hadoop FileSystem listing instead)."""
-    import os
-    import re
-
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", sf_dir):
-        global _FINGERPRINT_EPOCH
-        _FINGERPRINT_EPOCH += 1
-        return ("__non_local_path__", _FINGERPRINT_EPOCH)
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path) if not f.startswith(".")
-        )
-    else:
-        files = [path]
-    out = []
-    for f in files:
-        try:
-            st = os.stat(f)
-            out.append((os.path.basename(f), st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((os.path.basename(f), -1, -1))
-    return tuple(out)
-
-
 def capped_bands(spark, sf_dir, max_block: int = MAX_LSH_BLOCK):
-    """Size-capped LSH band table (doc_id, band_id, band_hash), materialized
-    ONCE per (session, input): the minhash signature expression
-    (all-shingles × 8 permutations) dominates, and every downstream
-    consumer (self-join, pairwise verify, grouped-map) would otherwise
-    recompute it. On a cluster this is "write the signature table, then
-    join" — localCheckpoint is the local analog."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _input_fingerprint(sf_dir),
-        max_block,
-    )
-    hit = _BANDS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """Size-capped LSH band table (doc_id, band_id, band_hash). The band
+    table is checkpointed once per call: the minhash signature expression
+    (all-shingles × 8 permutations) dominates, and the block-size count
+    and the cap join would otherwise each recompute it. On a cluster this
+    is "write the signature table, then join" — localCheckpoint is the
+    local analog."""
     bands = lsh_band(spark, sf_dir).localCheckpoint(eager=True)
     sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bn"))
-    capped = bands.join(
+    return bands.join(
         F.broadcast(
             sizes.filter(F.col("bn") <= max_block).select("band_id", "band_hash")
         ),
         ["band_id", "band_hash"],
     )
-    _BANDS_CACHE.clear()
-    _BANDS_CACHE[key] = capped
-    return capped
 
 
 def _capped_candidates(spark, sf_dir, max_block: int = MAX_LSH_BLOCK):

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from glre_spark.operators import fround, load, op
+from glre_spark.operators import fround, load, op, staging_dir
 
 # Shared Spark/DuckDB derivation of pages from documents (SURVEY.md §3.3).
 PAGES_CTE = """
@@ -109,51 +109,14 @@ def filter_len(spark, sf_dir):
     )
 
 
-def _staging_path(spark, sf_dir, name: str) -> str:
-    """Warehouse staging dir keyed on (op name, input fingerprint).
-
-    The op name keeps each staging op in its OWN directory — r6 shipped
-    both pruning ops overwriting one shared dir, so building one op's
-    DataFrame deleted the part files the other op's live scan still
-    listed (FAILED_READ_FILE on collect; ADVICE r6 #1). The fingerprint
-    (file names/sizes/mtimes) makes the path content-addressed: an
-    unchanged input reuses the staged layout, an overwritten
-    documents.parquet lands in a fresh dir instead of invalidating any
-    live reader of the old one."""
-    import hashlib
-
-    from glre_spark.operators.kgops import _input_fingerprint
-
-    key = hashlib.md5(
-        repr((sf_dir, _input_fingerprint(sf_dir))).encode()
-    ).hexdigest()[:12]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    return f"{wh}/{name}_{key}"
-
-
-def _ensure_staged(path: str, write_fn) -> str:
-    """Run the staging write only when the layout is not already there
-    (the _SUCCESS marker gates a complete committed write)."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_fn(path)
-    return path
-
-
 def lang_partitioned_path(spark, sf_dir, name: str = "docs_by_lang"):
-    """Stage the documents table as a lang-PARTITIONED parquet layout
-    (under the gitignored spark-warehouse dir) and return its path. At
-    10^12 docs this is the ingest-side layout decision that makes every
-    per-language job read 1/Nth of the data — the pruning is free once
-    the layout exists."""
-    return _ensure_staged(
-        _staging_path(spark, sf_dir, name),
-        lambda p: load(spark, sf_dir, "documents")
-        .write.partitionBy("lang")
-        .mode("overwrite")
-        .parquet(p),
-    )
+    """Stage the documents table as a lang-PARTITIONED parquet layout in
+    a fresh staging dir and return its path. At 10^12 docs this is the
+    ingest-side layout decision that makes every per-language job read
+    1/Nth of the data — the pruning is free once the layout exists."""
+    path = staging_dir(spark, name)
+    load(spark, sf_dir, "documents").write.partitionBy("lang").parquet(path)
+    return path
 
 
 @op(
@@ -220,21 +183,16 @@ def scan_nested_pruned(spark, sf_dir):
     over struct-typed lakes cheap: Parquet's columnar layout serves
     individual struct leaves, but only if the plan asks for leaves
     instead of whole structs."""
-    path = _ensure_staged(
-        _staging_path(spark, sf_dir, "docs_nested"),
-        lambda p: load(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.struct(
-                F.col("lang"),
-                F.col("source"),
-                F.col("text"),
-                F.length("text").cast("bigint").alias("n_chars_meta"),
-            ).alias("meta"),
-        )
-        .write.mode("overwrite")
-        .parquet(p),
-    )
+    path = staging_dir(spark, "docs_nested")
+    load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.struct(
+            F.col("lang"),
+            F.col("source"),
+            F.col("text"),
+            F.length("text").cast("bigint").alias("n_chars_meta"),
+        ).alias("meta"),
+    ).write.parquet(path)
     return spark.read.parquet(path).select(
         "doc_id",
         F.col("meta.lang").alias("lang"),

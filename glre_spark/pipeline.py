@@ -64,7 +64,7 @@ def prepare_pages(pages: DataFrame, lang: str = "en", use_extractor: bool = True
                   carry_cols: list[str] | None = None) -> DataFrame:
     """Filter, dedup recrawls, repartition on url-hash. Text extraction is
     NOT done here — it is fused into the inference Arrow stage
-    (inference.infer_stage(extract_html=True)) so the pipeline has exactly
+    (inference.infer_stage_agg(extract_html=True)) so the pipeline has exactly
     one Python stage. With ``use_extractor`` the html column is carried
     through; otherwise the trusted text column is (and html is pruned from
     the scan by Catalyst)."""
@@ -95,18 +95,11 @@ def predictions_to_triples(
     surface-triple space, so the two broadcast joins (and their per-row
     normalization regexes) run on the collapsed table, not the stream."""
     keys = ["h_name", "r", "t_name"] + ([group_col] if group_col else [])
-    if "n_pred_rows" in preds.columns:  # already partition-aggregated in-stage
-        agg = preds.groupBy(*keys).agg(
-            F.max("score").alias("score"),
-            F.min("url").alias("url"),
-            F.sum("n_pred_rows").alias("n_pred_rows"),
-        )
-    else:
-        agg = preds.groupBy(*keys).agg(
-            F.max("score").alias("score"),
-            F.min("url").alias("url"),
-            F.count("*").alias("n_pred_rows"),
-        )
+    agg = preds.groupBy(*keys).agg(
+        F.max("score").alias("score"),
+        F.min("url").alias("url"),
+        F.sum("n_pred_rows").alias("n_pred_rows"),
+    )
     carry = [F.col(group_col)] if group_col else []
     linked_h = link_aliases(
         agg.withColumnRenamed("h_name", "name"), alias_df

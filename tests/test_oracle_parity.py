@@ -7,7 +7,7 @@ import pytest
 
 from glre_spark.operators import REGISTRY, _ensure_loaded
 from tests.conftest import SF_DIR
-from tests.oracle_util import compare, duck_run
+from tests.oracle_util import TABLES, canon, compare, duck_run
 
 _ensure_loaded()
 SQL_OPS = sorted(k for k, (_, sql) in REGISTRY.items() if sql is not None)
@@ -29,3 +29,34 @@ def test_rows_only_ops_run(spark, name):
     df = fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+
+
+@pytest.mark.parametrize(
+    "name", ["scan_partition_pruned", "scan_nested_pruned", "lsh_candidates"]
+)
+def test_overwritten_input_is_read_fresh(spark, tmp_path, name):
+    """Ops that stage a layout or checkpoint an intermediate must not
+    serve a previous build's data: run on corpus A, overwrite
+    documents.parquet at the SAME path with corpus B, and the op must
+    match the oracle on B."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    half = docs.num_rows // 2
+    target = tmp_path / "documents.parquet"
+    fn, sql = REGISTRY[name]
+
+    pq.write_table(docs.slice(0, half), target)
+    before = duck_run(str(tmp_path), sql)
+    assert not compare(fn(spark, str(tmp_path)), before)
+
+    pq.write_table(docs.slice(half), target)
+    after = duck_run(str(tmp_path), sql)
+    assert canon(after) != canon(before), "corpus B must change the rows"
+    problems = compare(fn(spark, str(tmp_path)), after)
+    assert not problems, f"{name}: " + "; ".join(problems)

@@ -381,3 +381,14 @@ def test_staged_pruning_ops_do_not_invalidate_each_other(spark):
     pp(spark, SF_DIR)  # re-build; must not invalidate df_dpp below
     assert df_dpp.count() > 0
     assert df_pp.count() > 0
+    # every staged file lives under THIS application's staging root
+    # (deleted when the driver exits), never in a cross-run shared dir
+    from urllib.parse import urlparse
+
+    from glre_spark.operators import staging_root
+
+    root = urlparse(staging_root(spark)).path + "/"
+    assert spark.sparkContext.applicationId in root
+    for df in (df_pp, df_dpp):
+        files = df.inputFiles()
+        assert files and all(urlparse(f).path.startswith(root) for f in files)

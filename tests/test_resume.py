@@ -46,7 +46,12 @@ def test_crash_and_resume_equals_single_run(spark, tmp_path):
 
 
 def test_missing_manifest_is_empty_first_run(spark, tmp_path):
-    m = read_manifest(spark, str(tmp_path / "never_ran"))
+    import warnings
+
+    # no deprecated-API FutureWarning on the first-run path
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        m = read_manifest(spark, str(tmp_path / "never_ran"))
     assert m.count() == 0
 
 
