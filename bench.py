@@ -19,6 +19,7 @@ per-op progress line goes to stderr; stdout carries only the JSON line.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -72,8 +73,10 @@ def main() -> None:
         extra_conf={"spark.sql.adaptive.coalescePartitions.enabled": "false"},
     )
 
-    # warmup: JVM + Arrow + Python workers
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    # warmup: JVM + Arrow + Python workers, on the largest table the sf dir
+    # ships (a subset run may point at a dir holding only some tables)
+    tables = glob.glob(f"{sf_dir}/*.parquet")
+    spark.read.parquet(max(tables, key=os.path.getsize)).count()
 
     names = sys.argv[1:] or HEADLINE
     # min of N runs per op: this sandbox VM bursts 3-10× slower under

@@ -47,17 +47,17 @@ def sigscan_job(pages):
     shuffle or memory-bus-heavy exchange to degrade."""
     from pyspark.sql import functions as F
 
-    from glre_spark.operators.kgops import _perm_hash, _shingle_hash_col
+    from glre_spark.linking import perm_hash, shingle_hashes
 
     # two-step select: the shingle-hash array is ALIASED once and the 8
-    # permutations reference the alias — inlining _shingle_hash_col into
+    # permutations reference the alias — inlining shingle_hashes into
     # each min would run the md5 pass 8× (Catalyst refuses to collapse
     # projections when that duplicates expensive expressions; writing the
     # duplication by hand defeats that guard)
-    hs = pages.select(_shingle_hash_col(F.col("text")).alias("hs"))
+    hs = pages.select(shingle_hashes(F.col("text")).alias("hs"))
     sig = hs.select(
         *[
-            F.array_min(F.transform(F.col("hs"), _perm_hash(i))).alias(f"mh{i}")
+            F.array_min(F.transform(F.col("hs"), perm_hash(i))).alias(f"mh{i}")
             for i in range(8)
         ]
     )

@@ -1,15 +1,19 @@
 """Entity linking & canonicalization (SURVEY.md §2.12).
 
 Relational stages downstream of inference: name normalization, (salted)
-broadcast alias-dictionary join, MinHash signatures + LSH banding in pure
-SQL functions, candidate-pair self-join, connected components, canonical
-naming, triple dedup. All built-in DataFrame ops — no Python in the path.
+broadcast alias-dictionary join, the one near-duplicate chain (shingle
+hashes → MinHash → LSH bands → capped candidate self-join → verify →
+connected components) behind both the near-dup document keepers and the
+cross-document entity-name clusters, canonical naming, triple dedup. All
+built-in DataFrame ops — no Python in the path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from glre_spark.session import fan_out
 
 # ---------------------------------------------------------------------------
 # Normalization (str_normalize §2.8)
@@ -71,63 +75,131 @@ def link_aliases_salted(
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH blocking (minhash_sig / lsh_band / join_self_block)
-# Pure SQL expressions — md5 is the hash family (stable across engines; the
-# DuckDB oracle computes the identical signatures, SURVEY.md §2.12).
+# The near-duplicate chain (minhash_sig / lsh_band / join_self_block §2.3):
+# shingle base hashes → MinHash → LSH band rows → capped candidate
+# self-join → verify → connected components. Documents (near_dup_keepers
+# and the kgops dedup ops) and entity names (cluster_names) compose the
+# same steps; only the band count differs.
+#
+# One MinHash family: ONE md5 per shingle (28-bit base hash from the first
+# 7 hex chars) + K integer permutations h_i = (A_i·h + B_i) mod P. Every
+# step is exact int64 arithmetic both engines agree on (A·h + B < 2^59, no
+# overflow under ANSI mode), so the DuckDB twins compute bit-identical
+# signatures. P = 2^31-1 (Mersenne prime).
 # ---------------------------------------------------------------------------
 
-MINHASH_K = 8          # signature length
-LSH_BANDS = 4          # bands of r = K/BANDS rows
 SHINGLE_K = 3
+MINHASH_K = 8  # signature length
+MINHASH_P = 2147483647
+MINHASH_A = [1103515245, 1225577, 747796405, 2027382, 1664525, 22695477, 65793, 100005713]
+MINHASH_B = [12345, 987654321, 69069, 8121, 1013904223, 1, 377003613, 55555]
+DOC_BANDS = 2   # bands of r=4: high-precision blocking — r=2 floods the
+                # candidate set on vocabulary-sharing corpora (measured 18.8 s
+                # of self-join at 500 docs; quadratic at web scale)
+NAME_BANDS = 4  # bands of r=2: short names share few shingles
+MAX_LSH_BLOCK = 64  # block-size cap: one hot band block would otherwise go
+                    # quadratic in the self-join (cartesian bomb at web
+                    # scale); oversized blocks are dropped (SURVEY M4)
+KEEPER_TAU = 0.8  # classic near-dup Jaccard threshold
 
 
-def shingles(col, k: int = SHINGLE_K):
-    """Character k-shingles via a higher-order function (str_shingle §2.8)."""
+def shingle_set(c, k: int = SHINGLE_K):
+    """Distinct character k-shingles via a higher-order function
+    (str_shingle §2.8)."""
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(col) - (k - 1), F.lit(1))),
-            lambda i: col.substr(i, F.lit(k)),
+            F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
+            lambda i: c.substr(i, F.lit(k)),
         )
     )
 
 
-def _seed_hash(i: int):
-    # One-arg lambda required: F.transform treats (x, i) as (element, index).
-    return lambda x: F.md5(F.concat(x, F.lit(f":{i}")))
-
-
-def minhash_signature(shingle_col, k: int = MINHASH_K):
-    """array of k min-hashes; hash_i(x) = md5(x || ':' || i), min taken
-    lexicographically over hex strings — a valid deterministic hash family."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_col, _seed_hash(i))).alias(f"mh{i}")
-            for i in range(k)
-        ]
+def shingle_hashes(c, k: int = SHINGLE_K):
+    """Distinct k-shingles → 28-bit base hashes (one md5 per shingle)."""
+    return F.transform(
+        shingle_set(c, k),
+        lambda x: F.conv(F.md5(x).substr(1, 7), 16, 10).cast("bigint"),
     )
 
 
-def lsh_bands(sig_col, bands: int = LSH_BANDS, k: int = MINHASH_K):
-    """signature → array of band hashes (md5 of the concatenated rows)."""
-    r = k // bands
-    return F.array(
+def exact_shingles(c, k: int = SHINGLE_K):
+    """Distinct k-shingles as xxhash64 longs — the exact-verify set: ~2.5×
+    less shuffle through the pair join than 3-char strings, identical set
+    sizes (64 bits are injective on a trigram vocabulary whp). The 28-bit
+    base hash is for signatures only; it would blur the verify."""
+    return F.transform(shingle_set(c, k), lambda x: F.xxhash64(x))
+
+
+def perm_hash(i: int):
+    # NB: must return a ONE-arg lambda — F.transform interprets a two-arg
+    # lambda as (element, index), which would silently shadow the seed.
+    a, b = F.lit(MINHASH_A[i]).cast("bigint"), F.lit(MINHASH_B[i]).cast("bigint")
+    return lambda h: F.pmod(a * h + b, F.lit(MINHASH_P).cast("bigint"))
+
+
+def minhash(hs: DataFrame) -> DataFrame:
+    """(doc_id, hs base hashes) → (doc_id, mh0 … mh{K-1})."""
+    return hs.select(
+        "doc_id",
         *[
-            F.md5(F.concat_ws("|", *[sig_col.getItem(b * r + j) for j in range(r)]))
+            F.array_min(F.transform(F.col("hs"), perm_hash(i))).alias(f"mh{i}")
+            for i in range(MINHASH_K)
+        ],
+    )
+
+
+def band_rows(sig: DataFrame, bands: int) -> DataFrame:
+    """Signature → one (doc_id, band_id, band_hash) row per LSH band of
+    r = K/bands rows; band_hash = md5 of the band's rows joined by '|'."""
+    r = MINHASH_K // bands
+    hashes = F.array(
+        *[
+            F.md5(F.concat_ws("|", *[F.col(f"mh{b * r + j}") for j in range(r)]))
             for b in range(bands)
         ]
     )
+    return sig.select(
+        "doc_id", F.posexplode(hashes).alias("band_id", "band_hash")
+    ).select("doc_id", F.col("band_id").cast("bigint"), "band_hash")
 
 
-def candidate_pairs(keys: DataFrame, id_col: str, band_col: str = "band") -> DataFrame:
-    """Self-join within LSH buckets, a.id < b.id (join_self_block §2.3)."""
-    a = keys.select(F.col(id_col).alias("id_a"), F.col(band_col).alias("b"))
-    b = keys.select(F.col(id_col).alias("id_b"), F.col(band_col).alias("b"))
+def capped_blocks(bands: DataFrame, max_block: int = MAX_LSH_BLOCK) -> DataFrame:
+    """Band rows whose (band_id, band_hash) block holds at most
+    ``max_block`` docs; larger blocks are dropped."""
+    sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bn"))
+    return bands.join(
+        F.broadcast(
+            sizes.filter(F.col("bn") <= max_block).select("band_id", "band_hash")
+        ),
+        ["band_id", "band_hash"],
+    )
+
+
+def candidates(bands: DataFrame, max_block: int = MAX_LSH_BLOCK) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a capped band block."""
+    blocks = capped_blocks(bands, max_block)
+    a = blocks.select(F.col("doc_id").alias("id_a"), "band_id", "band_hash")
+    b = blocks.select(F.col("doc_id").alias("id_b"), "band_id", "band_hash")
     return (
-        a.join(b, "b")
+        a.join(b, ["band_id", "band_hash"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
+
+
+def with_sets(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """Attach each side's set from sets(doc_id, sh) as sh_a / sh_b: the
+    verify runs on candidate PAIRS, never on blocks."""
+    return pairs.join(
+        sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+    ).join(
+        sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"
+    )
+
+
+def jaccard(a: str = "sh_a", b: str = "sh_b"):
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
 
 
 # ---------------------------------------------------------------------------
@@ -201,14 +273,118 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Near-duplicate documents: the keeper decision (dedup_keeper_table /
+# dedup_keeper_sketch, build_triples(drop_near_dups=True)).
+# ---------------------------------------------------------------------------
+
+
+def near_dup_keepers(
+    docs: DataFrame, tau: float = KEEPER_TAU, max_block: int = MAX_LSH_BLOCK,
+    sketch_k: int | None = None, check_ids: bool = True,
+) -> DataFrame:
+    """The dedup DECISION over an ARBITRARY (doc_id, text) DataFrame:
+    MinHash → capped LSH blocks → Jaccard ≥ τ verify → connected
+    components → (doc_id, keeper, is_dup), min-id keeper per near-dup
+    cluster. Zero Python stages; every join is bounded by the block cap,
+    never all-pairs. This is the table a training-data pipeline joins
+    against to drop duplicates, and the flagship pipeline composes it
+    below its inference stage (pipeline.build_triples(drop_near_dups=True)).
+
+    Byte-identical docs (the web's dominant duplication mode — mirrors)
+    also get exact-content star candidates: grouped by md5(text) and
+    paired to the group's min doc_id. An exact-dup group is an equivalence
+    class, so the star edges suffice for CC, and the construction is
+    LINEAR in group size — no cap needed. The banded path alone loses
+    mirrors: on a template-heavy corpus the hot band blocks the cap drops
+    contain exactly those pairs (measured r5: bands found 15% of planted
+    byte-identical mirrors on a 25k-doc template corpus; bands + exact
+    star find all of them). NOT keyed on the minhash signature: equal
+    signatures do NOT imply near-duplicate on shingle-skewed corpora
+    (measured: 24k template docs collapsed into 1.8k full-signature
+    buckets at J far below τ), and star-to-min inside a mixed bucket
+    would pair mirrors with a non-duplicate min and lose them at verify.
+
+    The default verify is exact Jaccard over ``exact_shingles``.
+    ``sketch_k`` trades it for scale: the verify joins a bottom-k sketch
+    (the k smallest base hashes — a KMV/bottom-k sketch) instead of the
+    full shingle set, and estimates Jaccard with the standard KMV
+    estimator |bottom_k(A∪B) ∩ A ∩ B| / min(k, |A∪B|), which degenerates
+    to EXACT Jaccard whenever a doc's distinct-shingle count ≤ k. The
+    full-set verify shuffles every candidate pair's complete shingle
+    arrays — ~8 bytes × shingles/doc × 2 per pair, the measured bomb on
+    long web pages (r5 dup-bench: 4 KB html docs → ~70 s keeper pass at
+    25 k docs); the sketch caps that at 8·k bytes/side and is the variant
+    a 100 TB pass would run.
+
+    PRECONDITION: ``doc_id`` must be unique — a duplicate fans out the
+    verify join and collapses the per-row keep/drop decision across the
+    duplicate's rows (ADVICE r5). ``check_ids=True`` (default) enforces
+    it with one groupBy on the fixed-width id (map-side combine; the
+    cheapest possible whole-input probe). It is an extra eager action:
+    callers whose input DAG is expensive should localCheckpoint first
+    (pipeline.build_triples does) or, at true web scale where the input
+    is a materialized table with a key guarantee, pass False."""
+    docs = fan_out(docs.select("doc_id", "text"))
+    if check_ids:
+        dup = (
+            docs.groupBy("doc_id").agg(F.count("*").alias("n"))
+            .filter(F.col("n") > 1).limit(3).collect()
+        )
+        if dup:
+            ids = [r["doc_id"] for r in dup]
+            raise ValueError(
+                f"near_dup_keepers: doc_id not unique (e.g. {ids}); the "
+                "keeper decision is per-document — dedup or re-key the "
+                "input first"
+            )
+    # one shingle-hash pass feeds the signatures, the block-size count and
+    # the sketches (the local analog of "write the signature table once,
+    # then join")
+    hs = docs.select(
+        "doc_id", F.array_distinct(shingle_hashes(F.col("text"))).alias("hs")
+    ).localCheckpoint(eager=True)
+    ex = docs.select("doc_id", F.md5("text").alias("cx"))
+    exmin = (
+        ex.groupBy("cx")
+        .agg(F.min("doc_id").alias("id_a"), F.count("*").alias("n"))
+        .filter(F.col("n") > 1)
+    )
+    star = (
+        ex.join(exmin, "cx")
+        .filter(F.col("doc_id") != F.col("id_a"))
+        .select("id_a", F.col("doc_id").alias("id_b"))
+    )
+    cand = (
+        candidates(band_rows(minhash(hs), DOC_BANDS), max_block)
+        .unionByName(star)
+        .distinct()
+    )
+    if sketch_k:
+        sets = hs.select("doc_id", F.slice(F.array_sort("hs"), 1, sketch_k).alias("sh"))
+        union = F.array_union("sh_a", "sh_b")
+        both = F.array_intersect("sh_a", "sh_b")
+        union_k = F.slice(F.array_sort(union), 1, sketch_k)
+        jac = F.size(F.array_intersect(both, union_k)).cast("double") / F.least(
+            F.lit(sketch_k), F.size(union)
+        )
+    else:
+        sets = docs.select("doc_id", exact_shingles(F.col("text")).alias("sh"))
+        jac = jaccard()
+    ver = with_sets(cand, sets).filter(jac >= tau).select("id_a", "id_b")
+    comps = connected_components(ver)
+    ids = docs.select("doc_id")
+    keeper = F.coalesce(F.col("component"), F.col("doc_id"))
+    return ids.join(comps, ids.doc_id == comps.id, "left").select(
+        "doc_id", keeper.alias("keeper"), (keeper != F.col("doc_id")).alias("is_dup")
+    )
+
+
+# ---------------------------------------------------------------------------
 # Cross-document entity clustering (north_star: "MinHash-LSH blocking …
 # merge cross-document entity clusters"): near-duplicate surface names →
 # LSH candidate pairs → Jaccard verify → connected components → one
 # canonical name per cluster.
 # ---------------------------------------------------------------------------
-
-MAX_LSH_BLOCK = 64  # cap candidate-block size; oversized blocks are logged
-                    # and dropped (quadratic pair blowup guard, SURVEY M4)
 
 
 def cluster_names(
@@ -219,9 +395,10 @@ def cluster_names(
     max_block: int = MAX_LSH_BLOCK,
 ) -> DataFrame:
     """(name [, weight]) → (name, cluster_name) mapping for near-duplicate
-    names. Pure DataFrame ops: shingle → MinHash → LSH bands → capped
-    block self-join → Jaccard verify → connected components (by hashed
-    name id) → canonical pick (max weight, tie → lexicographic).
+    names. Pure DataFrame ops: the near-duplicate chain with NAME_BANDS
+    bands → Jaccard verify on the normalized names' shingle strings →
+    connected components (by hashed name id) → canonical pick (max weight,
+    tie → lexicographic).
 
     Node ids are xxhash64(name): fully parallel (a dense_rank over a
     global no-partition window would funnel every distinct name through
@@ -231,37 +408,21 @@ def cluster_names(
         if weight_col
         else names.select(name_col).distinct().withColumn("_w", F.lit(1))
     )
-    ided = w.withColumn(
-        "_id", F.xxhash64(F.col(name_col))
-    ).withColumn("_sh", shingles(norm_name(F.col(name_col))))
-    sig = ided.withColumn("_sig", minhash_signature(F.col("_sh")))
-    bands = sig.select(
-        "_id", "_sh", F.explode(lsh_bands(F.col("_sig"))).alias("band")
+    ided = w.withColumn("doc_id", F.xxhash64(F.col(name_col))).withColumn(
+        "_norm", norm_name(F.col(name_col))
     )
-    # block-size cap
-    sizes = bands.groupBy("band").agg(F.count("*").alias("bn"))
-    bands = bands.join(
-        F.broadcast(sizes.filter(F.col("bn") <= max_block).select("band")), "band"
-    )
-    a = bands.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), "band")
-    b = bands.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), "band")
+    sig = minhash(ided.select("doc_id", shingle_hashes(F.col("_norm")).alias("hs")))
+    sets = ided.select("doc_id", shingle_set(F.col("_norm")).alias("sh"))
     pairs = (
-        a.join(b, "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "_j",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("_j") >= jaccard_threshold)
+        with_sets(candidates(band_rows(sig, NAME_BANDS), max_block), sets)
+        .filter(jaccard() >= jaccard_threshold)
         .select("id_a", "id_b")
-        .distinct()
     )
     comps = connected_components(pairs)  # only ids that appear in edges
-    labeled = ided.join(comps, ided._id == comps.id, "left").select(
+    labeled = ided.join(comps, ided.doc_id == comps.id, "left").select(
         F.col(name_col),
         F.col("_w"),
-        F.coalesce(F.col("component"), F.col("_id")).alias("_comp"),
+        F.coalesce(F.col("component"), F.col("doc_id")).alias("_comp"),
     )
     wrep = Window.partitionBy("_comp").orderBy(F.desc("_w"), F.asc(name_col))
     reps = (

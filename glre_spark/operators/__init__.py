@@ -67,30 +67,6 @@ def staging_dir(spark: SparkSession, name: str) -> str:
     return f"{staging_root(spark)}/{name}_{uuid.uuid4().hex[:12]}"
 
 
-def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Spread a narrow input across the cluster before a CPU-heavy
-    per-row stage (guide §2.5 "input skew: one huge unsplittable file …
-    repartition immediately after the read").
-
-    A parquet file is splittable only at row-group granularity: the
-    driver testdata ships ONE row group per table, so every scan arrives
-    as 1-2 partitions and any expensive scan-stage expression (shingle
-    hashing, plane dot products, Arrow stages) runs serial no matter how
-    many cores the master has (measured sf1.0: minhash signatures 28.7 s
-    on the 2-task scan vs 1.6 s fanned out to 64).
-
-    Scale-adaptive by construction: when the input already carries at
-    least ``defaultParallelism`` partitions — any real-scale table, whose
-    scan yields thousands of splits — this is a no-op and NO extra
-    exchange is added. Only a sub-cluster-width input pays one
-    round-robin shuffle of the (projected) rows, which is exactly the
-    case where those bytes are small."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(factor * sc.defaultParallelism)
-
-
 def fround(col, d: int = 4):
     """Engine-stable rounding: +1e-9 nudges half-way values off the
     boundary (Spark rounds HALF_UP on the decimal string, DuckDB on the

@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from glre_spark.operators import fan_out, fround, load, op
+from glre_spark.operators import fround, load, op
+from glre_spark.session import fan_out
 
 # Shared DuckDB front-end: documents → adjacent-pair edges with counts.
 # DuckDB lists are 1-indexed; range(1, L) = 1..L-1, so ts[i] → ts[i+1]

@@ -2,9 +2,10 @@
 large-scale training-data ops (dedup families, ANN similarity) — each with
 a DuckDB twin where SQL-expressible, rows-only otherwise.
 
-MinHash/LSH use md5 as the hash family (stable across engines; min taken
-lexicographically over hex digests — SURVEY.md §2.12) so the oracle can
-compute bit-identical signatures.
+The MinHash/LSH and near-dup keeper ops wrap linking's one near-duplicate
+chain; its hash family (one md5-derived 28-bit base hash per shingle +
+integer permutations, SURVEY.md §2.12) is exact in both engines, so the
+oracles compute bit-identical signatures.
 """
 
 from __future__ import annotations
@@ -12,7 +13,26 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from glre_spark.operators import fan_out, fround, load, op
+from glre_spark.linking import (
+    DOC_BANDS,
+    KEEPER_TAU,
+    MAX_LSH_BLOCK,
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_K,
+    MINHASH_P,
+    band_rows,
+    candidates,
+    connected_components,
+    exact_shingles,
+    jaccard,
+    minhash,
+    near_dup_keepers,
+    shingle_hashes,
+    with_sets,
+)
+from glre_spark.operators import fround, load, op
+from glre_spark.session import fan_out
 
 # ---------------------------------------------------------------------------
 # Entity linking: broadcast alias-dictionary join (link_alias_broadcast)
@@ -71,23 +91,11 @@ def link_alias_broadcast(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH over documents (minhash_sig / lsh_band / lsh_candidates)
+# MinHash + LSH over documents (minhash_sig / lsh_band / lsh_candidates):
+# thin wrappers over linking's near-duplicate chain, DOC_BANDS bands.
 # ---------------------------------------------------------------------------
 
-_K = 8      # signature length
-_BANDS = 2  # bands of r=4: high-precision blocking — r=2 floods the
-            # candidate set on vocabulary-sharing corpora (measured 18.8 s
-            # of self-join at 500 docs; quadratic at web scale)
-_R = _K // _BANDS
-
-# MinHash family: ONE md5 per shingle (28-bit base hash from the first 7
-# hex chars) + K integer permutations h_i = (A_i·h + B_i) mod P. 8× fewer
-# md5 calls than hashing per-seed (the signature stage is md5-bound), and
-# every step is exact int64 arithmetic both engines agree on (A·h + B <
-# 2^59, no overflow under ANSI mode). P = 2^31-1 (Mersenne prime).
-_P = 2147483647
-_A = [1103515245, 1225577, 747796405, 2027382, 1664525, 22695477, 65793, 100005713]
-_B = [12345, 987654321, 69069, 8121, 1013904223, 1, 377003613, 55555]
+_R = MINHASH_K // DOC_BANDS
 
 _SHINGLE_CTE = """sh AS MATERIALIZED (
   SELECT DISTINCT doc_id,
@@ -103,58 +111,27 @@ _SIG_CTE = (
     + """,
 sig AS MATERIALIZED (
   SELECT doc_id, """
-    + ", ".join(f"min(({_A[i]} * h + {_B[i]}) % {_P}) AS mh{i}" for i in range(_K))
+    + ", ".join(
+        f"min(({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}"
+        for i in range(MINHASH_K)
+    )
     + """
   FROM sh GROUP BY doc_id
 )"""
 )
 
 
-def _shingle_col(c, k: int = 3):
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
-            lambda i: c.substr(i, F.lit(k)),
-        )
-    )
-
-
-def _shingle_hash_col(c, k: int = 3):
-    """Distinct k-shingles → 28-bit base hashes (one md5 per shingle)."""
-    return F.transform(
-        _shingle_col(c, k),
-        lambda x: F.conv(F.md5(x).substr(1, 7), 16, 10).cast("bigint"),
-    )
-
-
-def _perm_hash(i: int):
-    # NB: must return a ONE-arg lambda — F.transform interprets a two-arg
-    # lambda as (element, index), which would silently shadow the seed.
-    a, b = F.lit(_A[i]).cast("bigint"), F.lit(_B[i]).cast("bigint")
-    return lambda h: F.pmod(a * h + b, F.lit(_P).cast("bigint"))
-
-
-def _sig_of(docs):
-    """MinHash signature of an arbitrary (doc_id, text) DataFrame."""
-    hs = docs.select("doc_id", _shingle_hash_col(F.col("text")).alias("hs"))
-    return hs.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _perm_hash(i))).alias(f"mh{i}")
-            for i in range(_K)
-        ],
-    )
-
-
-def _sig_df(spark, sf_dir):
+def _docs(spark, sf_dir):
     # fan_out: the signature expression is the family's CPU wall; a
     # single-row-group scan would otherwise run it on 1-2 tasks
-    return _sig_of(fan_out(load(spark, sf_dir, "documents").select("doc_id", "text")))
+    return fan_out(load(spark, sf_dir, "documents").select("doc_id", "text"))
 
 
 @op("minhash_sig", "WITH " + _SIG_CTE + " SELECT * FROM sig")
 def minhash_sig(spark, sf_dir):
-    return _sig_df(spark, sf_dir)
+    return minhash(
+        _docs(spark, sf_dir).select("doc_id", shingle_hashes(F.col("text")).alias("hs"))
+    )
 
 
 _BAND_SELECTS = " UNION ALL ".join(
@@ -164,32 +141,23 @@ _BAND_SELECTS = " UNION ALL ".join(
             f"CAST(mh{b * _R + j} AS VARCHAR)" for j in range(_R)
         ),
     )
-    for b in range(_BANDS)
+    for b in range(DOC_BANDS)
 )
-
-
-def _bands_of_sig(sig):
-    """Signature → one (doc_id, band_id, band_hash) row per LSH band."""
-    bands = F.array(
-        *[
-            F.md5(F.concat_ws("|", *[F.col(f"mh{b * _R + j}") for j in range(_R)]))
-            for b in range(_BANDS)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.posexplode(bands).alias("band_id", "band_hash")
-    ).select("doc_id", F.col("band_id").cast("bigint"), "band_hash")
 
 
 @op("lsh_band", "WITH " + _SIG_CTE + " " + _BAND_SELECTS)
 def lsh_band(spark, sf_dir):
-    return _bands_of_sig(_sig_df(spark, sf_dir))
+    return band_rows(minhash_sig(spark, sf_dir), DOC_BANDS)
 
 
-MAX_LSH_BLOCK = 64  # block-size cap: one hot band bucket would otherwise go
-                    # quadratic in the self-join (cartesian bomb at web
-                    # scale); oversized blocks are dropped, as in
-                    # linking.cluster_names
+def doc_bands(spark, sf_dir):
+    """The documents' LSH band table, checkpointed once per call: the
+    minhash signature expression (all-shingles × 8 permutations)
+    dominates, and the block-size count and the cap join would otherwise
+    each recompute it. On a cluster this is "write the signature table,
+    then join" — localCheckpoint is the local analog."""
+    return lsh_band(spark, sf_dir).localCheckpoint(eager=True)
+
 
 _CAND_CTES = (
     _SIG_CTE
@@ -211,40 +179,11 @@ cand AS (
 )
 
 
-def capped_bands(spark, sf_dir, max_block: int = MAX_LSH_BLOCK):
-    """Size-capped LSH band table (doc_id, band_id, band_hash). The band
-    table is checkpointed once per call: the minhash signature expression
-    (all-shingles × 8 permutations) dominates, and the block-size count
-    and the cap join would otherwise each recompute it. On a cluster this
-    is "write the signature table, then join" — localCheckpoint is the
-    local analog."""
-    bands = lsh_band(spark, sf_dir).localCheckpoint(eager=True)
-    sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bn"))
-    return bands.join(
-        F.broadcast(
-            sizes.filter(F.col("bn") <= max_block).select("band_id", "band_hash")
-        ),
-        ["band_id", "band_hash"],
-    )
-
-
-def _capped_candidates(spark, sf_dir, max_block: int = MAX_LSH_BLOCK):
-    bands = capped_bands(spark, sf_dir, max_block)
-    a = bands.select(F.col("doc_id").alias("id_a"), "band_id", "band_hash")
-    b = bands.select(F.col("doc_id").alias("id_b"), "band_id", "band_hash")
-    return (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 @op("lsh_candidates", "WITH " + _CAND_CTES + " SELECT id_a, id_b FROM cand")
 def lsh_candidates(spark, sf_dir):
     """Candidate near-dup pairs = documents sharing an LSH band bucket,
     bucket size capped at MAX_LSH_BLOCK (skew guard)."""
-    return _capped_candidates(spark, sf_dir)
+    return candidates(doc_bands(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -271,8 +210,6 @@ def cc_label_prop(spark, sf_dir):
     """Connected components by iterative min-label propagation
     (glre_spark.linking.connected_components); oracle = recursive CTE.
     Graph: bipartite nation↔region (components = the 5 region clusters)."""
-    from glre_spark.linking import connected_components
-
     nation = load(spark, sf_dir, "nation")
     edges = nation.select(
         F.col("n_nationkey").cast("bigint").alias("id_a"),
@@ -391,288 +328,44 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-@op(
-    "dedup_ngram_jaccard",
-    "WITH "
-    + _CAND_CTES
-    + """,
-d AS MATERIALIZED (
+# Exact 3-gram string sets, the DuckDB side of every exact verify
+_SETS_CTE = """d AS MATERIALIZED (
   SELECT doc_id,
          list_distinct(list_transform(
            range(1, greatest(length(text) - 1, 2)),
            i -> substr(text, CAST(i AS INTEGER), 3))) AS sh
   FROM documents
-)
+)"""
+_JACCARD_SQL = """CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
+             / len(list_distinct(list_concat(da.sh, db.sh)))"""
+
+NGRAM_JACCARD_SQL = (
+    "WITH " + _CAND_CTES + ",\n" + _SETS_CTE + f"""
 SELECT c.id_a, c.id_b,
-       ROUND(CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-             / len(list_distinct(list_concat(da.sh, db.sh))) + 1e-9, 4) + 0 AS jaccard
+       ROUND({_JACCARD_SQL} + 1e-9, 4) + 0 AS jaccard
 FROM cand c
 JOIN d da ON da.doc_id = c.id_a
-JOIN d db ON db.doc_id = c.id_b""",
+JOIN d db ON db.doc_id = c.id_b"""
 )
+
+
+@op("dedup_ngram_jaccard", NGRAM_JACCARD_SQL)
 def dedup_ngram_jaccard(spark, sf_dir):
     """Exact 3-gram Jaccard verify over the (capped) LSH candidate pairs —
     the verify step is bounded by candidate count, never by block size.
     (An earlier version blocked on exact n_chars equality: real near-dups
     rarely share exact length while boilerplate corpora flood the block.)
-
-    Spark side intersects xxhash64-hashed shingles (8-byte longs) instead
-    of 3-char strings: ~2.5× less shuffle through the pair join, identical
-    set sizes (64-bit hash is injective on a trigram vocabulary whp); the
-    oracle intersects the string sets directly."""
-    d = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id",
-        F.transform(_shingle_col(F.col("text")), lambda x: F.xxhash64(x)).alias("sh"),
-    )
-    cand = _capped_candidates(spark, sf_dir)
-    da = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    db = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            fround(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
+    Spark side intersects ``exact_shingles`` (xxhash64 longs); the oracle
+    intersects the string sets directly."""
+    sets = _docs(spark, sf_dir).select("doc_id", exact_shingles(F.col("text")).alias("sh"))
+    return with_sets(candidates(doc_bands(spark, sf_dir)), sets).select(
+        "id_a", "id_b", fround(jaccard(), 4).alias("jaccard")
     )
 
 
-_KEEPER_TAU = 0.8  # classic near-dup Jaccard threshold
-
-
-@op(
-    "dedup_keeper_table",
-    "WITH RECURSIVE "
-    + _CAND_CTES
-    + f""",
-d AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(length(text) - 1, 2)),
-           i -> substr(text, CAST(i AS INTEGER), 3))) AS sh
-  FROM documents
-),
-ver AS MATERIALIZED (
-  SELECT c.id_a, c.id_b
-  FROM cand c
-  JOIN d da ON da.doc_id = c.id_a
-  JOIN d db ON db.doc_id = c.id_b
-  WHERE CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-        / len(list_distinct(list_concat(da.sh, db.sh))) >= {_KEEPER_TAU}
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM ver
-  UNION ALL
-  SELECT id_b, id_a FROM ver
-),
-reach(id, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-),
-comp AS (SELECT id, MIN(lbl) AS keeper FROM reach GROUP BY id)
-SELECT doc_id,
-       COALESCE(c.keeper, doc_id) AS keeper,
-       COALESCE(c.keeper, doc_id) <> doc_id AS is_dup
-FROM documents LEFT JOIN comp c ON c.id = doc_id""",
-)
-def dedup_keeper_table(spark, sf_dir):
-    """The end-to-end dedup DECISION: LSH candidates → exact 3-gram
-    Jaccard ≥ τ verified pairs → connected components → one keeper (min
-    doc_id) per near-dup cluster; every document gets (keeper, is_dup).
-    This is the table a training-data pipeline actually joins against to
-    drop duplicates — pair detection (lsh_candidates /
-    dedup_ngram_jaccard) composed with clustering (cc_label_prop
-    machinery) into the final verdict. Oracle = the same pipeline as one
-    SQL statement with a recursive CTE for the components.
-
-    Threshold comparison uses the RAW ratio on both engines (identical
-    int/int divisions — hashed-shingle set sizes equal string-shingle set
-    sizes whp), so no rounding convention is needed."""
-    from glre_spark.linking import connected_components
-
-    d = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id",
-        F.transform(_shingle_col(F.col("text")), lambda x: F.xxhash64(x)).alias("sh"),
-    )
-    cand = _capped_candidates(spark, sf_dir)
-    da = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    db = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    ver = (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .filter(
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b"))
-            >= _KEEPER_TAU
-        )
-        .select("id_a", "id_b")
-    )
-    comps = connected_components(ver)
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    return docs.join(comps, docs.doc_id == comps.id, "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("keeper"),
-        (F.coalesce(F.col("component"), F.col("doc_id")) != F.col("doc_id")).alias(
-            "is_dup"
-        ),
-    )
-
-
-def near_dup_keepers(
-    docs, tau: float = _KEEPER_TAU, max_block: int = MAX_LSH_BLOCK,
-    sketch_k: int | None = None, check_ids: bool = True,
-):
-    """dedup_keeper_table's decision generalized to an ARBITRARY
-    (doc_id bigint, text string) DataFrame — no sf_dir, no cache — so the
-    flagship pipeline can compose it below its inference stage
-    (pipeline.build_triples(drop_near_dups=True)). Same machinery end to
-    end: MinHash → capped LSH blocks → Jaccard ≥ τ verify → connected
-    components → (doc_id, keeper, is_dup), min-id keeper. Zero Python
-    stages; every join is bounded by the block cap, never all-pairs.
-
-    ``sketch_k`` trades exact verify for scale: with it set, BOTH the
-    signatures and the verify run off ONE materialized distinct-shingle-
-    hash pass, and the verify joins a bottom-k sketch (the k smallest
-    hashes — a KMV/bottom-k sketch) instead of the full shingle set.
-    Jaccard is estimated with the standard KMV estimator
-    |bottom_k(A∪B) ∩ A ∩ B| / min(k, |A∪B|), which degenerates to EXACT
-    Jaccard whenever a doc's distinct-shingle count ≤ k. The full-set
-    verify shuffles every candidate pair's complete shingle arrays —
-    ~8 bytes × shingles/doc × 2 per pair, the measured bomb on long web
-    pages (r5 dup-bench: 4 KB html docs → ~70 s keeper pass at 25 k
-    docs); the sketch caps that at 8·k bytes/side and is the variant a
-    100 TB pass would run.
-
-    PRECONDITION: ``doc_id`` must be unique — a duplicate fans out the
-    verify join and collapses the per-row keep/drop decision across the
-    duplicate's rows (ADVICE r5). ``check_ids=True`` (default) enforces
-    it with one groupBy on the fixed-width id (map-side combine; the
-    cheapest possible whole-input probe). It is an extra eager action:
-    callers whose input DAG is expensive should localCheckpoint first
-    (pipeline.build_triples does) or, at true web scale where the input
-    is a materialized table with a key guarantee, pass False."""
-    from glre_spark.linking import connected_components
-
-    docs = fan_out(docs.select("doc_id", "text"))
-    if check_ids:
-        dup = (
-            docs.groupBy("doc_id").agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1).limit(3).collect()
-        )
-        if dup:
-            ids = [r["doc_id"] for r in dup]
-            raise ValueError(
-                f"near_dup_keepers: doc_id not unique (e.g. {ids}); the "
-                "keeper decision is per-document — dedup or re-key the "
-                "input first"
-            )
-    hs = docs.select(
-        "doc_id",
-        F.array_distinct(_shingle_hash_col(F.col("text"))).alias("hs"),
-    )
-    if sketch_k:
-        # one shingle-hash pass feeds both signatures and sketches (the
-        # local analog of "write the signature table once, then join")
-        hs = hs.localCheckpoint(eager=True)
-    sig = hs.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _perm_hash(i))).alias(f"mh{i}")
-            for i in range(_K)
-        ],
-    )
-    bands = _bands_of_sig(sig)
-    sized = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bn"))
-    capped = bands.join(
-        F.broadcast(
-            sized.filter(F.col("bn") <= max_block).select("band_id", "band_hash")
-        ),
-        ["band_id", "band_hash"],
-    )
-    a = capped.select(F.col("doc_id").alias("id_a"), "band_id", "band_hash")
-    b = capped.select(F.col("doc_id").alias("id_b"), "band_id", "band_hash")
-    cand = (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # Exact-content star candidates: byte-identical docs (the web's
-    # dominant duplication mode — mirrors) grouped by md5(text) and paired
-    # to the group's min doc_id. An exact-dup group is an equivalence
-    # class, so the star edges suffice for CC, and the construction is
-    # LINEAR in group size — no cap needed. This matters because the
-    # banded path alone can lose mirrors: on a template-heavy corpus the
-    # hot band buckets the skew cap drops contain exactly those pairs
-    # (measured r5: bands found 15% of planted byte-identical mirrors on
-    # a 25k-doc template corpus; bands + exact star find all of them).
-    # NOT keyed on the minhash signature: equal signatures do NOT imply
-    # near-duplicate on shingle-skewed corpora (measured: 24k template
-    # docs collapsed into 1.8k full-signature buckets at J far below τ),
-    # and star-to-min inside a mixed bucket would pair mirrors with a
-    # non-duplicate min and lose them at verify.
-    ex = docs.select("doc_id", F.md5("text").alias("cx"))
-    exmin = (
-        ex.groupBy("cx")
-        .agg(F.min("doc_id").alias("id_a"), F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    star = (
-        ex.join(exmin, "cx")
-        .filter(F.col("doc_id") != F.col("id_a"))
-        .select("id_a", F.col("doc_id").alias("id_b"))
-    )
-    cand = cand.unionByName(star).distinct()
-    if sketch_k:
-        sh = hs.select(
-            "doc_id", F.slice(F.array_sort("hs"), 1, sketch_k).alias("sh")
-        )
-    else:
-        sh = hs.select("doc_id", F.col("hs").alias("sh"))
-    paired = cand.join(
-        sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(
-        sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"
-    )
-    if sketch_k:
-        both = F.array_intersect("sh_a", "sh_b")
-        union_k = F.slice(
-            F.array_sort(F.array_union("sh_a", "sh_b")), 1, sketch_k
-        )
-        denom = F.least(F.lit(sketch_k), F.size(F.array_union("sh_a", "sh_b")))
-        jac = F.size(F.array_intersect(both, union_k)).cast("double") / denom
-    else:
-        jac = (
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b"))
-        )
-    ver = paired.filter(jac >= tau).select("id_a", "id_b")
-    comps = connected_components(ver)
-    ids = docs.select("doc_id")
-    return ids.join(comps, ids.doc_id == comps.id, "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("keeper"),
-        (F.coalesce(F.col("component"), F.col("doc_id")) != F.col("doc_id")).alias(
-            "is_dup"
-        ),
-    )
-
-
-_SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
-
-
-@op(
-    "dedup_keeper_sketch",
-    "WITH RECURSIVE "
-    + _CAND_CTES
-    + f""",
-ex AS (SELECT doc_id, md5(text) AS cx FROM documents),
+# The keeper oracles share their candidates (banded ∪ exact-content star)
+# and their components tail; only the verify CTEs differ.
+_STAR_CTES = """ex AS (SELECT doc_id, md5(text) AS cx FROM documents),
 exmin AS (
   SELECT cx, MIN(doc_id) AS id_a
   FROM ex GROUP BY cx HAVING COUNT(*) > 1
@@ -686,24 +379,9 @@ allc AS (
   SELECT id_a, id_b FROM cand
   UNION
   SELECT id_a, id_b FROM star
-),
-sk AS MATERIALIZED (
-  SELECT doc_id, list_slice(list_sort(list(h)), 1, {_SKETCH_K}) AS sh
-  FROM sh GROUP BY doc_id
-),
-ver AS MATERIALIZED (
-  SELECT c.id_a, c.id_b
-  FROM allc c
-  JOIN sk a ON a.doc_id = c.id_a
-  JOIN sk b ON b.doc_id = c.id_b
-  WHERE CAST(len(list_intersect(
-               list_intersect(a.sh, b.sh),
-               list_slice(list_sort(list_distinct(list_concat(a.sh, b.sh))),
-                          1, {_SKETCH_K}))) AS DOUBLE)
-        / least({_SKETCH_K}, len(list_distinct(list_concat(a.sh, b.sh))))
-        >= {_KEEPER_TAU}
-),
-edges AS (
+)"""
+
+_COMP_TAIL = """edges AS (
   SELECT id_a AS src, id_b AS dst FROM ver
   UNION ALL
   SELECT id_b, id_a FROM ver
@@ -717,7 +395,62 @@ comp AS (SELECT id, MIN(lbl) AS keeper FROM reach GROUP BY id)
 SELECT doc_id,
        COALESCE(c.keeper, doc_id) AS keeper,
        COALESCE(c.keeper, doc_id) <> doc_id AS is_dup
-FROM documents LEFT JOIN comp c ON c.id = doc_id""",
+FROM documents LEFT JOIN comp c ON c.id = doc_id"""
+
+
+def _keeper_sql(verify_ctes: str) -> str:
+    return "WITH RECURSIVE " + ",\n".join(
+        [_CAND_CTES, _STAR_CTES, verify_ctes, _COMP_TAIL]
+    )
+
+
+@op(
+    "dedup_keeper_table",
+    _keeper_sql(
+        _SETS_CTE
+        + f""",
+ver AS MATERIALIZED (
+  SELECT c.id_a, c.id_b
+  FROM allc c
+  JOIN d da ON da.doc_id = c.id_a
+  JOIN d db ON db.doc_id = c.id_b
+  WHERE {_JACCARD_SQL} >= {KEEPER_TAU}
+)"""
+    ),
+)
+def dedup_keeper_table(spark, sf_dir):
+    """The end-to-end dedup DECISION (linking.near_dup_keepers, exact
+    verify): every document gets (keeper, is_dup). Oracle = the same
+    pipeline as one SQL statement with a recursive CTE for the
+    components. Threshold comparison uses the RAW ratio on both engines
+    (identical int/int divisions — hashed-shingle set sizes equal
+    string-shingle set sizes whp), so no rounding convention is needed."""
+    return near_dup_keepers(load(spark, sf_dir, "documents"))
+
+
+_SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
+
+
+@op(
+    "dedup_keeper_sketch",
+    _keeper_sql(
+        f"""sk AS MATERIALIZED (
+  SELECT doc_id, list_slice(list_sort(list(h)), 1, {_SKETCH_K}) AS sh
+  FROM sh GROUP BY doc_id
+),
+ver AS MATERIALIZED (
+  SELECT c.id_a, c.id_b
+  FROM allc c
+  JOIN sk a ON a.doc_id = c.id_a
+  JOIN sk b ON b.doc_id = c.id_b
+  WHERE CAST(len(list_intersect(
+               list_intersect(a.sh, b.sh),
+               list_slice(list_sort(list_distinct(list_concat(a.sh, b.sh))),
+                          1, {_SKETCH_K}))) AS DOUBLE)
+        / least({_SKETCH_K}, len(list_distinct(list_concat(a.sh, b.sh))))
+        >= {KEEPER_TAU}
+)"""
+    ),
 )
 def dedup_keeper_sketch(spark, sf_dir):
     """The 100-TB-shaped keeper decision (near_dup_keepers with
@@ -732,8 +465,7 @@ def dedup_keeper_sketch(spark, sf_dir):
     (list_sort + list_slice) and hence the identical estimate and keeper
     table — the KMV estimator itself is cross-checked, not just row
     counts (VERDICT r5 next-round #4)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return near_dup_keepers(docs, sketch_k=_SKETCH_K)
+    return near_dup_keepers(load(spark, sf_dir, "documents"), sketch_k=_SKETCH_K)
 
 
 _ANN_CTES = """q AS (

@@ -11,7 +11,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from glre_spark.operators import fan_out, fround, load, op
+from glre_spark.linking import shingle_set
+from glre_spark.operators import fround, load, op
+from glre_spark.session import fan_out
 
 
 @op(
@@ -53,14 +55,9 @@ def str_split_tokens(spark, sf_dir):
 def str_shingle(spark, sf_dir):
     """Character 3-shingles via higher-order functions — the MinHash
     front-end (SURVEY.md §2.8/§2.12)."""
-    name = F.col("p_name")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(name) - 2, F.lit(1))),
-        lambda i: name.substr(i, F.lit(3)),
-    )
     return (
         load(spark, sf_dir, "part")
-        .select("p_partkey", F.explode(F.array_distinct(sh)).alias("shingle"))
+        .select("p_partkey", F.explode(shingle_set(F.col("p_name"))).alias("shingle"))
         .distinct()
     )
 

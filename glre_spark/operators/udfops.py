@@ -9,35 +9,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import functions as F
 
+from glre_spark.linking import capped_blocks
 from glre_spark.operators import _ORACLE_PREP, load, op
+from glre_spark.operators.kgops import NGRAM_JACCARD_SQL, doc_bands
 
 
-def _grouped_map_sql():
-    # same contract as dedup_ngram_jaccard's relational verify: exact
-    # 3-gram jaccard over the capped LSH candidate pairs
-    from glre_spark.operators.kgops import _CAND_CTES
-
-    return (
-        "WITH "
-        + _CAND_CTES
-        + """,
-d AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(length(text) - 1, 2)),
-           i -> substr(text, CAST(i AS INTEGER), 3))) AS sh
-  FROM documents
-)
-SELECT c.id_a, c.id_b,
-       ROUND(CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-             / len(list_distinct(list_concat(da.sh, db.sh))) + 1e-9, 4) + 0 AS jaccard
-FROM cand c
-JOIN d da ON da.doc_id = c.id_a
-JOIN d db ON db.doc_id = c.id_b"""
-    )
-
-
-@op("udf_grouped_map", _grouped_map_sql())
+# same contract as dedup_ngram_jaccard's relational verify: exact 3-gram
+# jaccard over the capped LSH candidate pairs
+@op("udf_grouped_map", NGRAM_JACCARD_SQL)
 def udf_grouped_map(spark, sf_dir):
     """groupBy(LSH band bucket).applyInPandas — per-block pairwise jaccard
     verification in vectorized pandas (the §2.12 verify-step as a
@@ -64,10 +43,8 @@ def udf_grouped_map(spark, sf_dir):
             {"id_a": "int64", "id_b": "int64", "jaccard": "float64"}
         )
 
-    from glre_spark.operators.kgops import capped_bands
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    blocks = capped_bands(spark, sf_dir).join(docs, "doc_id")
+    blocks = capped_blocks(doc_bands(spark, sf_dir)).join(docs, "doc_id")
     return (
         blocks.groupBy("band_id", "band_hash")
         .applyInPandas(block_pairs, "id_a long, id_b long, jaccard double")

@@ -17,7 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from glre_spark.inference import broadcast_weights
-from glre_spark.linking import alias_dict_df, dedup_triples, link_aliases
+from glre_spark.linking import (
+    alias_dict_df,
+    apply_name_clusters,
+    cluster_names,
+    dedup_triples,
+    link_aliases,
+    near_dup_keepers,
+)
 
 MAX_DOC_CHARS = 100_000
 URL_BUCKETS = 1024  # deterministic lineage buckets, decoupled from task count
@@ -137,7 +144,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     the streaming log can keep crawl granularity.
 
     ``drop_near_dups=True`` composes the dedup DECISION
-    (kgops.near_dup_keepers: MinHash/LSH → Jaccard-verified → connected
+    (linking.near_dup_keepers: MinHash/LSH → Jaccard-verified → connected
     components → min-id keeper) BELOW the inference stage: non-keeper
     pages are dropped by a left-semi join before any Python runs, the way
     a training-data pipeline spends its dedup pass to save its model
@@ -152,8 +159,6 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     (within-batch-only semantics, pinned by test); at scale the exact
     keeper table is a periodic batch job joined against the log
     instead."""
-    from glre_spark.linking import apply_name_clusters, cluster_names
-
     from glre_spark.inference import infer_stage_agg
 
     docs = prepare_pages(
@@ -161,8 +166,6 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         carry_cols=[group_col] if group_col else [],
     )
     if drop_near_dups:
-        from glre_spark.operators.kgops import near_dup_keepers
-
         content = (
             F.col("html").cast("string") if use_extractor else F.col("text")
         )

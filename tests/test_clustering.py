@@ -65,7 +65,7 @@ def test_near_dup_keepers_sketch_matches_exact(spark):
     from pyspark.sql import functions as F
 
     from glre_spark.datagen import pages_df
-    from glre_spark.operators.kgops import near_dup_keepers
+    from glre_spark.linking import near_dup_keepers
 
     # id folds warc_ts: the corpus seeds RECRAWLS (ids 6/7, 16/17, …
     # share a url), so xxhash64(url) alone duplicates — which the r6
@@ -103,7 +103,7 @@ def test_near_dup_keepers_rejects_duplicate_doc_ids(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from glre_spark.operators.kgops import near_dup_keepers
+    from glre_spark.linking import near_dup_keepers
 
     docs = spark.createDataFrame(
         [(1, "some text one"), (1, "other text entirely"), (2, "unrelated")],

@@ -5,15 +5,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from glre_spark.linking import (
+    NAME_BANDS,
     alias_dict_df,
-    candidate_pairs,
+    band_rows,
+    candidates,
     connected_components,
     dedup_triples,
     link_aliases,
     link_aliases_salted,
-    lsh_bands,
-    minhash_signature,
-    shingles,
+    minhash,
+    shingle_hashes,
 )
 
 
@@ -68,9 +69,9 @@ def test_minhash_lsh_finds_near_duplicates(spark):
         (4, base.replace("quick", "quik")),        # near-dup of 1
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    sig = df.select("id", minhash_signature(shingles(F.col("text"))).alias("sig"))
-    bands = sig.select("id", F.explode(lsh_bands(F.col("sig"))).alias("band"))
-    pairs = {(r.id_a, r.id_b) for r in candidate_pairs(bands, "id").collect()}
+    hs = df.select(F.col("id").alias("doc_id"), shingle_hashes(F.col("text")).alias("hs"))
+    bands = band_rows(minhash(hs), NAME_BANDS)
+    pairs = {(r.id_a, r.id_b) for r in candidates(bands).collect()}
     assert (1, 2) in pairs
     assert (1, 4) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs and (3, 4) not in pairs

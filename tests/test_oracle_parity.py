@@ -60,3 +60,22 @@ def test_overwritten_input_is_read_fresh(spark, tmp_path, name):
     assert canon(after) != canon(before), "corpus B must change the rows"
     problems = compare(fn(spark, str(tmp_path)), after)
     assert not problems, f"{name}: " + "; ".join(problems)
+
+
+def test_keeper_table_catches_mirror_in_dropped_block(spark, tmp_path):
+    """sf0.1 holds a byte-identical pair (932, 4556) whose every LSH band
+    block is over MAX_LSH_BLOCK, so the banded candidates alone never pair
+    it. The keeper table's exact-content star edges must still make 932
+    the keeper of 4556, on both engines."""
+    import os
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    for t in TABLES:
+        src = SF_DIR if t != "documents" else sf
+        os.symlink(f"{src}/{t}.parquet", tmp_path / f"{t}.parquet")
+    fn, sql = REGISTRY["dedup_keeper_table"]
+    got = fn(spark, str(tmp_path))
+    keeper = {r.doc_id: r.keeper for r in got.filter("doc_id IN (932, 4556)").collect()}
+    assert keeper == {932: 932, 4556: 932}
+    problems = compare(got, duck_run(str(tmp_path), sql))
+    assert not problems, "; ".join(problems)

@@ -61,7 +61,7 @@ def test_drop_near_dups_removes_duplicate_page(spark):
     of one url share a single keeper row) — VERDICT r4 #3 / ADVICE r5."""
     from pyspark.sql import functions as F
 
-    from glre_spark.operators.kgops import near_dup_keepers
+    from glre_spark.linking import near_dup_keepers
     from glre_spark.pipeline import eligible_pages, latest_per_url
 
     pages = pages_df(spark, 40, partitions=2)
