@@ -235,17 +235,12 @@ def run_level(
 
     conf = {"spark.ui.enabled": "true"} if stage_dump else {}
     if job == "flagship":
-        # The flagship's dominant stage is the Arrow inference — cost is
-        # CPU per DOC, not bytes. AQE's byte-based coalescing shrinks its
-        # input exchange to ≈cores giant tasks (measured r6: 19 tasks on
-        # 16 cores → two waves, the second 3 tasks wide → 21 s where
-        # perfect packing gives ~14 s; at 4 cores it coalesced to exactly
-        # 4 tasks, so only the WIDE level paid — a structural scaling
-        # penalty, not noise). Keep the static 64 fine-grained partitions
-        # (4-16× cores at both levels): waves stay balanced and the
-        # byte-tiny downstream aggs cost only ms-scale task overhead. On
-        # a real cluster the same rule applies to any Python-heavy stage:
-        # target tasks-per-core ≥ 2, never bytes.
+        # Not the inference width (session.url_exchange_width sets that,
+        # and AQE never coalesces it): this only keeps the DOWNSTREAM
+        # exchanges at the static 64 partitions. Added when AQE shrank
+        # the inference exchange to ≈cores giant tasks (r6: 19 tasks on
+        # 16 cores → two waves, 21 s where perfect packing gives ~14 s);
+        # kept until a 4↔16-core rerun shows whether downstream matters.
         conf["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
     spark = get_spark(
         f"glre_scaling_{cores}", cores=cores, shuffle_partitions=SHUFFLE_PARTITIONS,

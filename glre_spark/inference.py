@@ -6,8 +6,10 @@ once per Python worker (init-once pattern, SURVEY.md §4.3) — never
 per-batch, never per-row.
 
 Scale notes: documents are independent → embarrassingly parallel; the
-stage preserves the upstream url-hash partitioning (no shuffle); Arrow
-batch size is capped in session.py so fat rows stay allocation-bounded.
+stage preserves the upstream url-hash partitioning (no shuffle), so its
+task count is the width of pipeline.latest_per_url's url exchange
+(session.stage_width); Arrow batch size is capped in session.py so fat
+rows stay allocation-bounded.
 """
 
 from __future__ import annotations

@@ -9,7 +9,8 @@ exact resume. Mechanism (works on plain parquet; Iceberg-ready layout):
 - ONE job per (re)start processes every pending bucket-group: the pages
   source is scanned exactly once, triples are written with dynamic
   partition overwrite on ``bucket_group=`` (idempotent per group), and
-  per-group input counts come from ``df.observe()`` on the same pass — no
+  per-group page counts (routed, and admitted by the pipeline's
+  eligibility rule) come from ``df.observe()`` on the same pass — no
   per-group filter/count re-scans;
 - the manifest is appended AFTER the data lands — manifest-last commit
   order means a crash can only lose uncommitted work (whose partitions the
@@ -32,12 +33,15 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-# batch_wall_ms is the wall clock of the WHOLE (re)start batch that
-# committed the row (all groups share one job/pass), not a per-group time.
-MANIFEST_SCHEMA = (
+# input_rows counts every page routed to the group, eligible_rows the
+# ones the pipeline admits (pipeline.is_eligible). batch_wall_ms is the
+# wall clock of the WHOLE (re)start batch that committed the row (all
+# groups share one job/pass), not a per-group time.
+_ROW_SCHEMA = (
     "run_id string, bucket_group int, status string, input_rows long, "
-    "triples long, batch_wall_ms long, committed_at timestamp"
+    "eligible_rows long, triples long, batch_wall_ms long"
 )
+MANIFEST_SCHEMA = f"{_ROW_SCHEMA}, committed_at timestamp"
 
 
 def manifest_path(base: str) -> str:
@@ -68,13 +72,11 @@ def read_manifest(spark: SparkSession, base: str) -> DataFrame:
 def append_manifest_rows(
     spark: SparkSession,
     base: str,
-    rows: list[tuple[str, int, str, int, int, int]],
+    rows: list[tuple[str, int, str, int, int, int, int]],
 ) -> None:
-    df = spark.createDataFrame(
-        rows,
-        "run_id string, bucket_group int, status string, input_rows long, "
-        "triples long, batch_wall_ms long",
-    ).withColumn("committed_at", F.current_timestamp())
+    df = spark.createDataFrame(rows, _ROW_SCHEMA).withColumn(
+        "committed_at", F.current_timestamp()
+    )
     df.coalesce(1).write.mode("append").parquet(manifest_path(base))
 
 
@@ -94,20 +96,23 @@ def _process_groups(
 ) -> None:
     """One Spark job over all ``groups``: filter → build_triples (group-
     scoped dedup, bucket_group carried through the Arrow stage) → dynamic-
-    partition-overwrite write → manifest append. Per-group input counts
-    ride an Observation on the same pass (no extra scan)."""
-    from glre_spark.pipeline import build_triples
+    partition-overwrite write → manifest append. Per-group routed and
+    admitted page counts ride one Observation on the same pass (no extra
+    scan)."""
+    from glre_spark.pipeline import build_triples, is_eligible
 
     if not groups:
         return
     t0 = time.time()
     part = pages_g.filter(F.col("bucket_group").isin([int(g) for g in groups]))
     obs = Observation(f"lineage_{run_id}")
+    in_group = {g: F.col("bucket_group") == g for g in groups}
     part = part.observe(
         obs,
+        *[F.count(F.when(c, True)).alias(f"g{g}") for g, c in in_group.items()],
         *[
-            F.count(F.when(F.col("bucket_group") == g, True)).alias(f"g{g}")
-            for g in groups
+            F.count(F.when(c & is_eligible(), True)).alias(f"e{g}")
+            for g, c in in_group.items()
         ],
     )
     triples = build_triples(spark, part, group_col="bucket_group")
@@ -121,12 +126,12 @@ def _process_groups(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # No try/except here: Spark 4.1 delivers the observation even when the
-    # input is all-empty (probed: a collapsed/empty plan still yields
-    # {'g..': 0} — see tests/test_resume.py::test_obs_failure_propagates).
-    # Swallowing errors would silently commit input_rows=0 to the manifest
-    # on a genuine Py4J/runtime failure — the same silent-miscount shape
-    # read_manifest guards against.
+    # No try/except here: the observation is delivered even when no page
+    # reaches the url exchange (pipeline.latest_per_url keeps that stage in
+    # the final plan; tests/test_resume.py covers the empty and the
+    # all-filtered input). Swallowing errors would silently commit
+    # input_rows=0 to the manifest on a genuine Py4J/runtime failure —
+    # the same silent-miscount shape read_manifest guards against.
     in_rows = obs.get  # populated by the write action above
     # per-group output counts from the (small) written triples, one scan;
     # an all-filtered/empty corpus writes no partition dirs at all, so the
@@ -154,6 +159,7 @@ def _process_groups(
                 int(g),
                 "done",
                 int(in_rows.get(f"g{g}", 0)),
+                int(in_rows.get(f"e{g}", 0)),
                 int(out_counts.get(g, 0)),
                 batch_wall_ms,
             )

@@ -1,9 +1,9 @@
 """The flagship KG-construction pipeline (SURVEY.md §3.2).
 
-scan_pages → filter_lang → as-of dedup (latest crawl per url) →
-repartition on url-hash → extract_text (byte-identical invariant) →
-mapInPandas GLRE inference → entity linking (broadcast/salted alias join)
-→ triple assembly → exact dedup.
+scan_pages → filter_lang → as-of dedup (latest crawl per url, over one
+core-sized url-hash exchange) → extract_text (byte-identical invariant)
+→ mapInPandas GLRE inference → entity linking (broadcast/salted alias
+join) → triple assembly → exact dedup.
 
 Everything before/after the single Arrow UDF stage is declarative
 DataFrame code: Catalyst prunes the html column whenever extraction is
@@ -13,7 +13,9 @@ post-link shuffles (SURVEY.md §4.2-4.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import uuid
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from glre_spark.inference import broadcast_weights
@@ -25,6 +27,7 @@ from glre_spark.linking import (
     link_aliases,
     near_dup_keepers,
 )
+from glre_spark.session import url_exchange_width
 
 MAX_DOC_CHARS = 100_000
 URL_BUCKETS = 1024  # deterministic lineage buckets, decoupled from task count
@@ -38,54 +41,63 @@ def url_bucket(col=None):
 def latest_per_url(pages: DataFrame) -> DataFrame:
     """join_asof flavor: keep the newest warc_ts crawl per url.
 
-    Hash-aggregate (max_by over the row struct), NOT a sort-window: the
-    rows are fat (html binary), and an agg gets map-side partial combine —
-    recrawl duplicates collapse BEFORE the exchange and nothing is sorted —
-    where row_number() must exchange every row, sort each partition, then
-    discard the losers (r02 flagship-scaling suspect #1). Ties on warc_ts
-    cannot occur: datagen guarantees a recrawl's warc_ts is strictly
-    later (datagen.py), and CC-style WARC timestamps are per-fetch.
+    The url exchange is an explicit ``repartition(n, "url")`` under the
+    ``groupBy("url")``: it satisfies the aggregate, and its partitions are
+    the fused inference stage's tasks. ``n`` is session.url_exchange_width;
+    AQE would coalesce the aggregate's own exchange by bytes (at 400
+    pages, 0.27 MB, into ONE task) but never a REPARTITION_BY_NUM one.
+
+    Hash-aggregate (max_by over the row struct), NOT a sort-window, which
+    must sort each partition, then discard the losers (r02 flagship-
+    scaling suspect #1). The partial combine runs after the exchange, so
+    recrawls cross it (0.268 → 0.283 MB on the 400-page bench corpus).
+    Ties on warc_ts cannot occur: datagen guarantees a recrawl's warc_ts
+    is strictly later (datagen.py), and CC-style WARC timestamps are
+    per-fetch.
     NULL warc_ts is coalesced to the epoch so a url whose crawls ALL lack
     a timestamp still keeps one real row (max_by skips NULL ordering
     keys, which would otherwise emit an all-NULL payload)."""
     payload = [c for c in pages.columns if c != "url"]
     ts = F.coalesce(F.col("warc_ts"), F.to_timestamp(F.lit("1970-01-01")))
+    # The observation keeps the exchange's stage in the final AQE plan.
+    # Over an EMPTY stage AQE swaps the aggregate for an empty relation
+    # and drops the stage, with any observation on build_triples' input
+    # (lineage's per-group counts: Observation.get then fails). Emptiness
+    # does not propagate through a CollectMetrics.
+    parted = pages.repartition(url_exchange_width(pages), "url").observe(
+        f"url_exchange_{uuid.uuid4().hex}", F.count(F.lit(1)).alias("rows")
+    )
     return (
-        pages.groupBy("url")
+        parted.groupBy("url")
         .agg(F.max_by(F.struct(*payload), ts).alias("_row"))
         .select("url", *[F.col(f"_row.{c}").alias(c) for c in payload])
     )
 
 
+def is_eligible(lang: str = "en") -> Column:
+    """The pipeline's admission rule (filter_lang + filter_len) as a
+    predicate, for counting admitted pages without filtering them."""
+    return (F.col("lang") == lang) & F.length("text").between(1, MAX_DOC_CHARS)
+
+
 def eligible_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
-    """The pipeline's admission filter (filter_lang + filter_len), factored
-    out so the streaming crawl registry applies EXACTLY the same rule: a
-    crawl excluded here must not count as a url's latest version."""
-    return pages.filter(F.col("lang") == lang).filter(
-        F.length("text").between(1, MAX_DOC_CHARS)
-    )
+    """The pipeline's admission filter, factored out so the streaming
+    crawl registry applies EXACTLY the same rule: a crawl excluded here
+    must not count as a url's latest version."""
+    return pages.filter(is_eligible(lang))
 
 
 def prepare_pages(pages: DataFrame, lang: str = "en", use_extractor: bool = True,
-                  partitions: int | None = None,
                   carry_cols: list[str] | None = None) -> DataFrame:
-    """Filter, dedup recrawls, repartition on url-hash. Text extraction is
+    """Filter, dedup recrawls over one url-hash exchange. Text extraction is
     NOT done here — it is fused into the inference Arrow stage
     (inference.infer_stage_agg(extract_html=True)) so the pipeline has exactly
     one Python stage. With ``use_extractor`` the html column is carried
     through; otherwise the trusted text column is (and html is pruned from
     the scan by Catalyst)."""
-    df = latest_per_url(eligible_pages(pages, lang))
-    # latest_per_url's aggregation already exchanged rows by hash(url) —
-    # that IS the explicit url-hash partitioning the north rule asks for. A second
-    # repartition("bucket") here would re-shuffle the fat html rows for
-    # nothing; `bucket` stays as the deterministic lineage-key COLUMN
-    # (resume filtering), decoupled from physical task count. Pass
-    # ``partitions`` only to force a different fan-out (e.g. tiny corpus on
-    # a big cluster).
-    df = df.withColumn("bucket", url_bucket())
-    if partitions:
-        df = df.repartition(partitions, "bucket")
+    # `bucket` is the deterministic lineage-key COLUMN (resume
+    # filtering), decoupled from the physical task count.
+    df = latest_per_url(eligible_pages(pages, lang)).withColumn("bucket", url_bucket())
     payload = "html" if use_extractor else "text"
     return df.select("url", "warc_ts", payload, "lang", "bucket", *(carry_cols or []))
 
@@ -125,7 +137,7 @@ def predictions_to_triples(
 
 
 def build_triples(spark: SparkSession, pages: DataFrame,
-                  use_extractor: bool = True, partitions: int | None = None,
+                  use_extractor: bool = True,
                   cluster_entities: bool = False,
                   group_col: str | None = None,
                   group_type: str = "int",
@@ -162,7 +174,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     from glre_spark.inference import infer_stage_agg
 
     docs = prepare_pages(
-        pages, use_extractor=use_extractor, partitions=partitions,
+        pages, use_extractor=use_extractor,
         carry_cols=[group_col] if group_col else [],
     )
     if drop_near_dups:

@@ -44,6 +44,31 @@ def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
     return df.repartition(factor * sc.defaultParallelism)
 
 
+def stage_width(est_bytes: int, cores: int, max_width: int, advisory_bytes: int) -> int:
+    """Partition count for the exchange feeding a CPU-bound Python stage,
+    whose per-row CPU cost AQE's byte sizing does not see: one task per
+    core, more only when core-wide partitions would exceed the advisory
+    size, capped at the shuffle width. One wave beats two (400 pages,
+    local[4]: width 1 / 4 / 8 = 1.62 / 0.94 / 1.15 s)."""
+    return max(cores, min(max_width, -(-est_bytes // advisory_bytes)))
+
+
+def url_exchange_width(df: DataFrame) -> int:
+    """``stage_width`` for ``df`` from Catalyst's plan-time size estimate
+    (no job runs) and its session's settings."""
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    advisory = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return stage_width(
+        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
+        sc.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        advisory,
+    )
+
+
 def get_spark(
     app_name: str = "glre_spark",
     cores: int | None = None,

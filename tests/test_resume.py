@@ -102,6 +102,45 @@ def test_empty_corpus_commits_zero_triple_groups(spark, tmp_path):
     assert all(r.triples == 0 and r.input_rows == 0 for r in m)
 
 
+def test_manifest_counts_routed_and_admitted_pages(spark, tmp_path):
+    """Funnel identities on the manifest: Σ input_rows = pages routed,
+    Σ eligible_rows = pages the pipeline admits (eligible_pages), both
+    observed on the one pass; a rerun over a complete manifest recomputes
+    and commits nothing."""
+    from glre_spark.pipeline import eligible_pages
+
+    base = str(tmp_path / "funnel")
+    pages = pages_df(spark, N_DOCS, partitions=4)
+    n_pages, n_eligible = pages.count(), eligible_pages(pages).count()
+    assert n_eligible < n_pages  # the generator emits non-en pages
+
+    run_with_checkpoints(spark, pages, base, n_groups=GROUPS)
+    m = read_manifest(spark, base).filter("status='done'").collect()
+    assert len(m) == GROUPS
+    assert sum(r.input_rows for r in m) == n_pages
+    assert sum(r.eligible_rows for r in m) == n_eligible
+
+    assert pending_groups(spark, base, GROUPS) == []
+    run_with_checkpoints(spark, pages, base, n_groups=GROUPS)  # resume
+    assert read_manifest(spark, base).count() == GROUPS
+
+
+def test_all_filtered_input_still_observed(spark, tmp_path):
+    """Pages that all fail the admission filter at RUN time (not a
+    plan-time empty relation) reach the url exchange as zero rows; the
+    per-group observation below that exchange must still be delivered,
+    so every group commits its routed pages with 0 admitted."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "all_de")
+    pages = pages_df(spark, 12, partitions=4).withColumn("lang", F.lit("de"))
+    run_with_checkpoints(spark, pages, base, n_groups=2)
+    m = read_manifest(spark, base).filter("status='done'").collect()
+    assert len(m) == 2
+    assert sum(r.input_rows for r in m) == 12
+    assert all(r.eligible_rows == 0 and r.triples == 0 for r in m)
+
+
 def test_torn_staging_dirs_healed_on_resume(spark, tmp_path):
     """A crash mid-write can leave committer staging dirs (_temporary /
     .spark-staging-*) under triples/ and _manifest/. Readers already

@@ -267,6 +267,41 @@ def test_streaming_kg_build_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def test_all_filtered_microbatch_yields_observation(spark, tmp_path):
+    """A foreachBatch micro-batch whose pages all fail the admission
+    filter: an observation on build_triples' input must still be
+    delivered after the batch's write (AQE drops an empty exchange stage
+    from the final plan; the pipeline keeps its url exchange's stage)."""
+    from pyspark.sql import Observation
+
+    from glre_spark.datagen import pages_df
+    from glre_spark.pipeline import build_triples
+    from glre_spark.streaming import read_pages_stream
+
+    src = str(tmp_path / "pages_src")
+    pages_df(spark, 16, partitions=4).withColumn("lang", F.lit("de")).write.parquet(src)
+    seen = []
+
+    def process(batch_df, batch_id):
+        obs = Observation(f"batch_{batch_id}")
+        triples = build_triples(
+            batch_df.sparkSession,
+            batch_df.observe(obs, F.count(F.lit(1)).alias("rows")),
+        )
+        triples.write.format("noop").mode("overwrite").save()
+        seen.append(obs.get["rows"])
+
+    q = (
+        read_pages_stream(spark, src).writeStream.foreachBatch(process)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    assert sum(seen) == 16 and len(seen) >= 1
+
+
 def _write_page_file(spark, doc_ids, src_dir, name, mtime):
     """One parquet FILE of generated pages with a controlled mtime."""
     from glre_spark.datagen import PAGES_SCHEMA, gen_page_row
