@@ -62,12 +62,12 @@ def main() -> None:
     from glre_spark.session import get_spark
 
     _ensure_loaded()
-    # AQE byte-based coalescing OFF, as in the scaling bench (rev 3): at
-    # bench scale the inference exchange is ~1.4 MB of compressed html —
-    # under the 1 MB min partition size — so AQE collapsed the flagship's
-    # entire Python stage to ONE task on a 32-core box (measured sf0.1:
-    # 5.6 s serialized of an 8.5 s warm wall; ~3.3 s with 32 tasks).
-    # Bytes mis-model CPU-per-doc stages; keep the static partition count.
+    # AQE byte-based coalescing OFF, as in the scaling bench (rev 3). The
+    # flagship's Python stage no longer depends on it: its url exchange is
+    # a REPARTITION_BY_NUM sized by session.stage_width, which AQE never
+    # coalesces. What the override still does is keep every other op's
+    # shuffle exchanges at the static shuffle_partitions width instead of
+    # letting AQE merge them by bytes; the headline timings were taken so.
     spark = get_spark(
         "glre_bench", cores=cores, shuffle_partitions=max(cores, 16),
         extra_conf={"spark.sql.adaptive.coalescePartitions.enabled": "false"},

@@ -6,12 +6,14 @@ exact resume. Mechanism (works on plain parquet; Iceberg-ready layout):
 - work is keyed by deterministic url-hash *buckets* (pipeline.url_bucket),
   decoupled from task parallelism — bucket ids are stable across cluster
   sizes, so a run at N executors can be resumed at 4N;
-- ONE job per (re)start processes every pending bucket-group: the pages
-  source is scanned exactly once, triples are written with dynamic
-  partition overwrite on ``bucket_group=`` (idempotent per group), and
-  per-group page counts (routed, and admitted by the pipeline's
-  eligibility rule) come from ``df.observe()`` on the same pass — no
-  per-group filter/count re-scans;
+- ONE pass over the pages source per (re)start processes every pending
+  bucket-group (about 8 Spark jobs: the manifest read, the shuffle
+  stages AQE runs one by one, the write and the manifest append).
+  Triples are written with dynamic partition overwrite on
+  ``bucket_group=`` (idempotent per group). Per-group page counts
+  (routed, and admitted by the pipeline's eligibility rule) and
+  per-group triple counts come from ``df.observe()`` on that write — no
+  per-group re-scans, no read-back;
 - the manifest is appended AFTER the data lands — manifest-last commit
   order means a crash can only lose uncommitted work (whose partitions the
   resume overwrites idempotently), never record phantom work;
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 # input_rows counts every page routed to the group, eligible_rows the
 # ones the pipeline admits (pipeline.is_eligible). batch_wall_ms is the
 # wall clock of the WHOLE (re)start batch that committed the row (all
-# groups share one job/pass), not a per-group time.
+# groups share one pass), not a per-group time.
 _ROW_SCHEMA = (
     "run_id string, bucket_group int, status string, input_rows long, "
     "eligible_rows long, triples long, batch_wall_ms long"
@@ -74,7 +76,13 @@ def append_manifest_rows(
     base: str,
     rows: list[tuple[str, int, str, int, int, int, int]],
 ) -> None:
-    df = spark.createDataFrame(rows, _ROW_SCHEMA).withColumn(
+    # From pandas, the rows cross as one Arrow batch; a list of tuples
+    # would become a pickled RDD whose partitions coalesce(1) drains
+    # through Python workers one after another.
+    import pandas as pd
+
+    cols = [f.split()[0] for f in _ROW_SCHEMA.split(", ")]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=cols), _ROW_SCHEMA).withColumn(
         "committed_at", F.current_timestamp()
     )
     df.coalesce(1).write.mode("append").parquet(manifest_path(base))
@@ -94,61 +102,47 @@ def _process_groups(
     run_id: str,
     groups: list[int],
 ) -> None:
-    """One Spark job over all ``groups``: filter → build_triples (group-
-    scoped dedup, bucket_group carried through the Arrow stage) → dynamic-
-    partition-overwrite write → manifest append. Per-group routed and
-    admitted page counts ride one Observation on the same pass (no extra
-    scan)."""
+    """One pass over the pages source for all ``groups``: filter →
+    build_triples (group-scoped dedup, bucket_group carried through the
+    Arrow stage) → dynamic-partition-overwrite write → manifest append.
+    Two Observations ride that write: per-group routed and admitted page
+    counts on its input, per-group triple counts on the deduped triples
+    it writes. Nothing is re-read."""
     from glre_spark.pipeline import build_triples, is_eligible
 
     if not groups:
         return
     t0 = time.time()
     part = pages_g.filter(F.col("bucket_group").isin([int(g) for g in groups]))
-    obs = Observation(f"lineage_{run_id}")
     in_group = {g: F.col("bucket_group") == g for g in groups}
+    obs_in = Observation(f"lineage_in_{run_id}")
     part = part.observe(
-        obs,
+        obs_in,
         *[F.count(F.when(c, True)).alias(f"g{g}") for g, c in in_group.items()],
         *[
             F.count(F.when(c & is_eligible(), True)).alias(f"e{g}")
             for g, c in in_group.items()
         ],
     )
-    triples = build_triples(spark, part, group_col="bucket_group")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            triples.write.mode("overwrite")
-            .partitionBy("bucket_group")
-            .parquet(os.path.join(base, "triples"))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # No try/except here: the observation is delivered even when no page
-    # reaches the url exchange (pipeline.latest_per_url keeps that stage in
-    # the final plan; tests/test_resume.py covers the empty and the
-    # all-filtered input). Swallowing errors would silently commit
-    # input_rows=0 to the manifest on a genuine Py4J/runtime failure —
-    # the same silent-miscount shape read_manifest guards against.
-    in_rows = obs.get  # populated by the write action above
-    # per-group output counts from the (small) written triples, one scan;
-    # an all-filtered/empty corpus writes no partition dirs at all, so the
-    # read-back may find an unreadable (schema-less) target → 0-triple groups
-    from pyspark.errors import AnalysisException
-
-    try:
-        out_counts = {
-            r.bucket_group: r.n
-            for r in spark.read.parquet(os.path.join(base, "triples"))
-            .filter(F.col("bucket_group").isin([int(g) for g in groups]))
-            .groupBy("bucket_group")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-    except AnalysisException:
-        out_counts = {}
+    obs_out = Observation(f"lineage_out_{run_id}")
+    triples = build_triples(spark, part, group_col="bucket_group").observe(
+        obs_out, *[F.count(F.when(c, True)).alias(f"t{g}") for g, c in in_group.items()]
+    )
+    # A writer option outranks the session conf: the overwrite mode is
+    # scoped to this write, never changed on the shared session.
+    (
+        triples.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket_group")
+        .parquet(os.path.join(base, "triples"))
+    )
+    # No try/except around either obs.get: both are delivered even when no
+    # page reaches the url exchange (pipeline.latest_per_url keeps that
+    # stage in the final plan; tests/test_resume.py covers the empty and
+    # the all-filtered input). Swallowing errors would silently commit
+    # zero counts to the manifest on a genuine Py4J/runtime failure — the
+    # same silent-miscount shape read_manifest guards against.
+    in_rows, out_rows = obs_in.get, obs_out.get  # populated by the write
     batch_wall_ms = int((time.time() - t0) * 1000)
     append_manifest_rows(
         spark,
@@ -160,7 +154,7 @@ def _process_groups(
                 "done",
                 int(in_rows.get(f"g{g}", 0)),
                 int(in_rows.get(f"e{g}", 0)),
-                int(out_counts.get(g, 0)),
+                int(out_rows.get(f"t{g}", 0)),
                 batch_wall_ms,
             )
             for g in groups

@@ -177,3 +177,69 @@ def test_torn_staging_dirs_healed_on_resume(spark, tmp_path):
     got = {tuple(r) for r in read_triples(spark, base).collect()}
     want = {tuple(r) for r in read_triples(spark, straight).collect()}
     assert got == want and len(got) > 0
+
+
+def test_pass_reads_nothing_under_triples(spark, tmp_path, monkeypatch):
+    """Per-group triple counts are observed on the write itself: a crash
+    pass and its resume read the manifest but never the triples they
+    just wrote."""
+    import os
+
+    from pyspark.sql import DataFrameReader
+
+    read_paths = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        read_paths.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    base = str(tmp_path / "noreadback")
+    pages = pages_df(spark, 20, partitions=2)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_checkpoints(spark, pages, base, n_groups=2, fail_after=1)
+    run_with_checkpoints(spark, pages, base, n_groups=2)  # resume
+
+    triples_dir = os.path.join(base, "triples")
+    assert read_paths, "the manifest read should go through the recorder"
+    assert not [p for p in read_paths if str(p).startswith(triples_dir)]
+
+
+def test_manifest_triples_match_disk_per_group(spark, tmp_path):
+    """After a crash and a resume, each group's manifest ``triples`` is
+    that group's deduped row count on disk, and 0 for a group whose
+    pages are all filtered out (no partition dir is written for it).
+    Every page also appears under a second url, so the same triple is
+    predicted by several tasks of one group: a count taken on the
+    inference stage's per-task output would exceed the rows written."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from glre_spark.pipeline import url_bucket
+
+    base = str(tmp_path / "per_group")
+    empty_group = GROUPS - 1
+    group = F.pmod(url_bucket(F.col("url")), F.lit(GROUPS))
+    pages = pages_df(spark, N_DOCS, partitions=4)
+    pages = pages.unionByName(pages.withColumn("url", F.concat("url", F.lit("?mirror"))))
+    pages = pages.withColumn(
+        "lang", F.when(group == empty_group, F.lit("de")).otherwise(F.col("lang"))
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_checkpoints(spark, pages, base, n_groups=GROUPS, fail_after=1)
+    run_with_checkpoints(spark, pages, base, n_groups=GROUPS)  # resume
+
+    on_disk = {
+        r.bucket_group: r["count"]
+        for r in read_triples(spark, base, dedup=False).groupBy("bucket_group").count().collect()
+    }
+    manifest = {
+        r.bucket_group: r.triples
+        for r in read_manifest(spark, base).filter("status='done'").collect()
+    }
+    assert not os.path.exists(os.path.join(base, "triples", f"bucket_group={empty_group}"))
+    assert manifest[empty_group] == 0 and empty_group not in on_disk
+    assert manifest == {g: on_disk.get(g, 0) for g in range(GROUPS)}
+    assert all(on_disk.get(g, 0) > 0 for g in range(GROUPS) if g != empty_group)
