@@ -69,8 +69,9 @@ def infer_stage_agg(
     partition. At ~150 predictions/doc the raw stream is ~3× larger than
     the partition-distinct surface; collapsing before the Arrow boundary
     cuts python→JVM transfer and the downstream shuffle by the same
-    factor. The JVM's map-side combine then merges partitions
-    (pipeline.predictions_to_triples).
+    factor. After per-row linking, the one map-side-combining
+    (subj, pred, obj) aggregation merges partitions
+    (linking.dedup_triples).
 
     ``group_col`` (e.g. lineage bucket_group, or the streaming crawl_key)
     joins the agg key and rides through — the checkpointed single-pass run

@@ -453,7 +453,7 @@ def apply_name_clusters(triples: DataFrame, mapping: DataFrame) -> DataFrame:
             F.coalesce("_obj_c", "obj").alias("obj"),
             F.col("score"),
             F.col("url"),
-            F.col("n_sources").alias("n_pred_rows"),
+            F.col("n_sources"),
         )
     )
     return dedup_triples(out)
@@ -478,16 +478,12 @@ def canonicalize(named: DataFrame, cluster_col: str = "component", name_col: str
 
 def dedup_triples(triples: DataFrame, extra_keys: list[str] | None = None) -> DataFrame:
     """Exact (subj, pred, obj) dedup keeping max score + a witness url.
-    n_sources = number of contributing prediction rows (pre-aggregated
-    upstream counts — n_pred_rows or already-deduped n_sources — are
-    summed when present, so re-deduping a partially-deduped table is
-    exact). ``extra_keys`` scopes the dedup (e.g. lineage bucket_group)."""
-    if "n_pred_rows" in triples.columns:
-        n_sources = F.sum("n_pred_rows")
-    elif "n_sources" in triples.columns:
-        n_sources = F.sum("n_sources")
-    else:
-        n_sources = F.count("*")
+    n_sources = number of contributing prediction rows: an upstream
+    n_sources (pipeline.predictions_to_triples' linked stage rows, or an
+    already-deduped table) is summed when present, so re-deduping a
+    partially-deduped table is exact; without one each row counts once.
+    ``extra_keys`` scopes the dedup (e.g. lineage bucket_group)."""
+    n_sources = F.sum("n_sources") if "n_sources" in triples.columns else F.count("*")
     return triples.groupBy("subj", "pred", "obj", *(extra_keys or [])).agg(
         F.max("score").alias("score"),
         F.min("url").alias("url"),

@@ -2,8 +2,10 @@
 
 scan_pages → filter_lang → as-of dedup (latest crawl per url, over one
 core-sized url-hash exchange) → extract_text (byte-identical invariant)
-→ mapInPandas GLRE inference → entity linking (broadcast/salted alias
-join) → triple assembly → exact dedup.
+→ mapInPandas GLRE inference (per-partition aggregation) → per-row
+entity linking (two broadcast alias joins) → exact dedup, the one
+aggregation and the one hash exchange between the inference stage and
+the sink.
 
 Everything before/after the single Arrow UDF stage is declarative
 DataFrame code: Catalyst prunes the html column whenever extraction is
@@ -102,38 +104,26 @@ def prepare_pages(pages: DataFrame, lang: str = "en", use_extractor: bool = True
     return df.select("url", "warc_ts", payload, "lang", "bucket", *(carry_cols or []))
 
 
-def predictions_to_triples(
-    preds: DataFrame, alias_df: DataFrame, group_col: str | None = None
-) -> DataFrame:
-    """Link head/tail names through the alias dictionary and assemble
-    (subj, pred, obj) rows.
+def predictions_to_triples(preds: DataFrame, alias_df: DataFrame) -> DataFrame:
+    """Link head/tail names of the inference stage's rows through the
+    alias dictionary: (h_name, r, t_name, n_pred_rows, …) → (subj, pred,
+    obj, …, n_sources), row for row. Every other column (score, url, a
+    group column) rides through unchanged.
 
-    Aggregate-early design: predictions are first collapsed to distinct
-    (h_name, r, t_name) with map-side partial aggregation — at web scale
-    the prediction stream is orders of magnitude larger than the distinct
-    surface-triple space, so the two broadcast joins (and their per-row
-    normalization regexes) run on the collapsed table, not the stream."""
-    keys = ["h_name", "r", "t_name"] + ([group_col] if group_col else [])
-    agg = preds.groupBy(*keys).agg(
-        F.max("score").alias("score"),
-        F.min("url").alias("url"),
-        F.sum("n_pred_rows").alias("n_pred_rows"),
+    No aggregation here: both alias joins are broadcast (map-side), and
+    linking.dedup_triples' max / min / sum are associative, so its one
+    (subj, pred, obj[, group]) exchange merges what a (h_name, r, t_name)
+    pre-aggregation would have. The trade: the normalization regexes run
+    once per stage-output row (already collapsed per partition inside the
+    stage), not once per globally distinct (h_name, r, t_name)."""
+    rest = [c for c in preds.columns if c not in ("h_name", "r", "t_name", "n_pred_rows")]
+    linked_h = link_aliases(preds, alias_df, name_col="h_name").select(
+        F.col("canonical_name").alias("subj"), "r", "t_name", "n_pred_rows", *rest,
     )
-    carry = [F.col(group_col)] if group_col else []
-    linked_h = link_aliases(
-        agg.withColumnRenamed("h_name", "name"), alias_df
-    ).select(
-        F.col("url"), F.col("t_name"), F.col("r"), F.col("score"),
-        F.col("n_pred_rows"), F.col("canonical_name").alias("subj"), *carry,
+    return link_aliases(linked_h, alias_df, name_col="t_name").select(
+        "subj", F.col("r").alias("pred"), F.col("canonical_name").alias("obj"),
+        *rest, F.col("n_pred_rows").alias("n_sources"),
     )
-    linked = link_aliases(
-        linked_h.withColumnRenamed("t_name", "name"), alias_df
-    ).select(
-        F.col("url"), F.col("subj"), F.col("r").alias("pred"),
-        F.col("canonical_name").alias("obj"), F.col("score"),
-        F.col("n_pred_rows"), *carry,
-    )
-    return linked
 
 
 def build_triples(spark: SparkSession, pages: DataFrame,
@@ -148,6 +138,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     (MinHash-LSH blocking + connected components over near-duplicate
     names, linking.cluster_names) after the alias join — off by default in
     benches because the dictionary already canonicalizes this corpus.
+    The clusters are corpus-global, so it refuses a ``group_col``.
 
     ``group_col`` names a column on ``pages`` (lineage bucket_group int,
     or the streaming crawl_key string — ``group_type`` gives its Spark
@@ -173,6 +164,11 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     instead."""
     from glre_spark.inference import infer_stage_agg
 
+    if cluster_entities and group_col:
+        raise ValueError(
+            "cluster_entities=True is corpus-global: a group-scoped build "
+            f"(group_col={group_col!r}) cannot compute its name clusters exactly"
+        )
     docs = prepare_pages(
         pages, use_extractor=use_extractor,
         carry_cols=[group_col] if group_col else [],
@@ -204,7 +200,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         docs, weights_bc=broadcast_weights(spark), extract_html=use_extractor,
         group_col=group_col, group_type=group_type,
     )
-    triples = predictions_to_triples(preds, alias_dict_df(spark), group_col=group_col)
+    triples = predictions_to_triples(preds, alias_dict_df(spark))
     deduped = dedup_triples(triples, extra_keys=[group_col] if group_col else [])
     if cluster_entities:
         names = deduped.select(F.col("subj").alias("name"), F.col("n_sources")).unionByName(

@@ -29,6 +29,63 @@ def test_triples_invariant_to_input_partitioning(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_one_aggregation_matches_two_aggregation_reference(spark):
+    """build_triples aggregates the inference stage's rows once, by
+    (subj, pred, obj[, group]). Its full rows (score, url, n_sources and
+    the group) must equal the two-aggregation composition: the stage's
+    rows grouped by (h_name, r, t_name[, group]) first, then linked, then
+    deduped. Plain and bucket_group-scoped builds over a corpus with
+    seeded recrawls."""
+    from pyspark.sql import functions as F
+
+    from glre_spark.inference import broadcast_weights, infer_stage_agg
+    from glre_spark.linking import alias_dict_df, dedup_triples, link_aliases
+    from glre_spark.pipeline import url_bucket
+
+    pages = pages_df(spark, 120, partitions=4).withColumn(
+        "bucket_group", F.pmod(url_bucket(), F.lit(3))
+    )
+    assert pages.select("url").distinct().count() < pages.count()  # recrawls
+    alias_df = alias_dict_df(spark)
+
+    # the reference links through link_aliases itself, not through the
+    # predictions_to_triples under test
+    def link(df, name, out):
+        rest = [c for c in df.columns if c != name]
+        return link_aliases(df, alias_df, name_col=name).select(
+            *rest, F.col("canonical_name").alias(out)
+        )
+
+    for g in ([], ["bucket_group"]):
+        group_col = g[0] if g else None
+        preds = infer_stage_agg(
+            prepare_pages(pages, carry_cols=g), weights_bc=broadcast_weights(spark),
+            extract_html=True, group_col=group_col,
+        )
+        surface = preds.groupBy("h_name", "r", "t_name", *g).agg(
+            F.max("score").alias("score"),
+            F.min("url").alias("url"),
+            F.sum("n_pred_rows").alias("n_sources"),
+        )
+        linked = link(link(surface, "h_name", "subj"), "t_name", "obj")
+        want = dedup_triples(linked.withColumnRenamed("r", "pred"), extra_keys=g)
+        got = build_triples(spark, pages, group_col=group_col)
+        cols = ["subj", "pred", "obj", "score", "url", "n_sources", *g]
+        rows = sorted(map(tuple, got.select(*cols).collect()))
+        assert rows and rows == sorted(map(tuple, want.select(*cols).collect()))
+
+
+def test_cluster_entities_refuses_group_col(spark):
+    """Name clusters are corpus-global: a group-scoped build cannot
+    compute them exactly, and must not silently drop the group column."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    pages = pages_df(spark, 20, partitions=2).withColumn("bucket_group", F.lit(0))
+    with pytest.raises(ValueError, match="cluster_entities"):
+        build_triples(spark, pages, cluster_entities=True, group_col="bucket_group")
+
+
 def test_extractor_matches_text_column_in_spark(spark):
     """Byte-identical invariant enforced distributed, not just in-process."""
     from pyspark.sql import functions as F

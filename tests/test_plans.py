@@ -86,32 +86,41 @@ def test_cluster_names_has_no_global_window(spark):
             )
 
 
-def test_aggregate_early_before_linking(spark):
-    """predictions_to_triples must aggregate before its joins: the plan
-    should show HashAggregate below the first BroadcastHashJoin."""
-    from glre_spark.datagen import pages_df
-    from glre_spark.pipeline import build_triples
+def test_one_exchange_between_inference_and_sink(spark):
+    """build_triples aggregates ONCE after the fused inference stage: its
+    rows are linked by broadcast (map-side) joins straight into
+    linking.dedup_triples, so exactly one hash exchange sits between the
+    inference MapInPandas and the root, keyed (subj, pred, obj) plus the
+    group column of a group-scoped build."""
+    import re
 
-    df = build_triples(spark, pages_df(spark, 50, partitions=2))
-    plan = plan_of(df)
-    tree = plan.splitlines()
-    join_line = next(i for i, l in enumerate(tree) if "BroadcastHashJoin" in l)
-    # an Aggregate must appear BELOW the join in the tree (= its child):
-    # the prediction stream is collapsed before linking
-    assert any(
-        "Aggregate" in l for l in tree[join_line:]
-    ), "no aggregate below the linking join"
-    # partial + final agg pair around an Exchange (map-side combine), plus
-    # the final dedup aggregate → ≥3 Aggregate operators in total
-    assert sum(("HashAggregate" in l) or ("SortAggregate" in l) for l in tree) >= 3
-    # exactly two Python stages: corpus gen + the fused inference stage
-    assert sum("MapInPandas" in l for l in tree if "(" in l) >= 2
-    # as-of dedup is a max_by aggregation, not a sort-window. Its partial
-    # combine is still planned, but runs AFTER the explicit url exchange
-    # (test_inference_stage_fed_by_one_core_sized_exchange), so recrawls
-    # cross it: 0.268 → 0.283 MB exchanged on the 400-page bench corpus
-    assert "partial_max_by" in plan
-    assert "Window" not in plan  # no window operator anywhere in the flagship
+    from glre_spark.datagen import pages_df
+    from glre_spark.pipeline import build_triples, url_bucket
+
+    pages = pages_df(spark, 50, partitions=2)
+    grouped = pages.withColumn("bucket_group", F.pmod(url_bucket(), F.lit(4)))
+    key = ["subj", "pred", "obj"]
+    for df, want in (
+        (build_triples(spark, pages), key),
+        (build_triples(spark, grouped, group_col="bucket_group"), key + ["bucket_group"]),
+    ):
+        tree = _simple_plan(df).splitlines()
+        # tree print order is parent first: the topmost MapInPandas is the
+        # inference stage (the corpus-gen one sits below it)
+        mip = next(i for i, l in enumerate(tree) if "MapInPandas" in l)
+        exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", "\n".join(tree[:mip]))
+        assert len(exchanges) == 1, exchanges
+        assert re.findall(r"(\w+)#\d+", exchanges[0]) == want, exchanges[0]
+        plan = plan_of(df)
+        # exactly two Python stages: corpus gen + the fused inference stage
+        assert sum("MapInPandas" in l for l in plan.splitlines() if "(" in l) >= 2
+        # as-of dedup is a max_by aggregation, not a sort-window. Its
+        # partial combine is still planned, but runs AFTER the explicit url
+        # exchange (test_inference_stage_fed_by_one_core_sized_exchange),
+        # so recrawls cross it: 0.268 → 0.283 MB exchanged on the 400-page
+        # bench corpus
+        assert "partial_max_by" in plan
+        assert "Window" not in plan  # no window operator anywhere in the flagship
 
 
 def test_inference_stage_fed_by_one_core_sized_exchange(spark, tmp_path):
