@@ -11,5 +11,5 @@ schema) follows the paper's computation shapes. Weights are frozen
 in-sandbox reference predictions (BASELINE.md).
 """
 
-from glre_spark.model.net import GLREModel, infer_doc  # noqa: F401
+from glre_spark.model.net import GLREModel  # noqa: F401
 from glre_spark.model.weights import MODEL_SEED, build_weights  # noqa: F401

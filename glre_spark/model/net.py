@@ -13,7 +13,7 @@ import numpy as np
 
 from glre_spark.datagen import rel_schema_rows
 from glre_spark.model.weights import D, HEADS, L_RGCN, N_DIST, R_EDGE, VHASH
-from glre_spark.nlp import Doc, analyze
+from glre_spark.nlp import Doc
 
 # Relation vocabulary: index 0 = NA, 1..96 = schema rows (frozen order).
 REL_IDS = ["NA"] + [r["rel_id"] for r in rel_schema_rows()]
@@ -37,6 +37,10 @@ TYPE_GATE = {
 }
 
 SCORE_THRESHOLD = 0.9  # θ — frozen with the weights; calibrated in tests
+
+# One emitted prediction: doc-local head / tail entity ids, relation index
+# into REL_IDS, sigmoid score (unrounded).
+PRED_DTYPE = np.dtype([("h", np.int64), ("t", np.int64), ("rel", np.int64), ("score", np.float64)])
 
 
 _TOK_CACHE: dict[str, int] = {}
@@ -200,9 +204,9 @@ _GATE_ANY = _GATE_MASK.any(axis=2)  # (6, 6): does this type-pair gate open?
 
 
 class GLREModel:
-    """Frozen deterministic GLRE. ``predict(doc)`` → list of
-    (h, t, rel_id, score) with score > θ, one (argmax) relation per ordered
-    entity pair, gated by entity-type compatibility.
+    """Frozen deterministic GLRE. ``predict_batch(docs)`` → one PRED_DTYPE
+    record array per doc: (h, t, rel, score) with score > θ, one (argmax)
+    relation per ordered entity pair, gated by entity-type compatibility.
 
     The graph + attention stages are vectorized PER DOCUMENT: full
     cross-document TENSOR batching (the (pairs, M, H, dh) attention
@@ -230,9 +234,6 @@ class GLREModel:
     def __init__(self, weights: dict[str, np.ndarray], threshold: float = SCORE_THRESHOLD):
         self.w = weights
         self.threshold = threshold
-
-    def predict(self, doc: Doc) -> list[tuple[int, int, str, float]]:
-        return self.predict_batch([doc])[0]
 
     def _pair_stage(self, doc: Doc):
         """Per-document stage: graph forward + per-pair local (attention)
@@ -325,7 +326,7 @@ class GLREModel:
         gidx = type_idx[hh] * len(_TYPES) + type_idx[tt]
         return hh, tt, l_h, l_t, dist, gidx, ent_g, ctx
 
-    def predict_batch(self, docs: list[Doc]) -> list[list[tuple[int, int, str, float]]]:
+    def predict_batch(self, docs: list[Doc]) -> list[np.ndarray]:
         """Per-doc graph stage (see class docstring), then ONE ff1 + gated
         head over the concatenation of every doc's gated pairs. The r5 FF
         restructure comments apply unchanged — feat @ ff1_w decomposes
@@ -345,9 +346,8 @@ class GLREModel:
             ent_blocks.append(st[6])
             ctx_rows.append(st[7])
             doc_idx.append(di)
-        out: list[list[tuple[int, int, str, float]]] = [[] for _ in docs]
         if not per:
-            return out
+            return [np.empty(0, dtype=PRED_DTYPE) for _ in docs]
 
         ne_sizes = np.array([b.shape[0] for b in ent_blocks])
         ent_off = np.concatenate([[0], np.cumsum(ne_sizes)])[:-1]
@@ -380,32 +380,11 @@ class GLREModel:
             best[sel] = cols[bi]
             score[sel] = _sigmoid(lg[np.arange(lg.shape[0]), bi])
         emit = score > self.threshold
-        hh_l = np.concatenate([p[0] for p in per])   # doc-local entity ids
-        tt_l = np.concatenate([p[1] for p in per])
-        for j in np.nonzero(emit)[0]:
-            out[doc_idx[pair_doc[j]]].append(
-                (int(hh_l[j]), int(tt_l[j]), REL_IDS[int(best[j])], float(score[j]))
-            )
-        return out
-
-
-def infer_doc(model: GLREModel, url: str, text: str) -> list[dict]:
-    """Full i2-i12 path for one document: analyze text → predict → rows
-    (url, h, t, h_name, t_name, h_type, t_type, r, score)."""
-    doc = analyze(url, text)
-    rows = []
-    for h, t, rel, score in model.predict(doc):
-        rows.append(
-            {
-                "url": url,
-                "h": h,
-                "t": t,
-                "h_name": doc.entity_names[h],
-                "t_name": doc.entity_names[t],
-                "h_type": doc.entity_types[h],
-                "t_type": doc.entity_types[t],
-                "r": rel,
-                "score": round(score, 6),
-            }
-        )
-    return rows
+        rec = np.empty(int(emit.sum()), dtype=PRED_DTYPE)
+        rec["h"] = np.concatenate([p[0] for p in per])[emit]   # doc-local ids
+        rec["t"] = np.concatenate([p[1] for p in per])[emit]
+        rec["rel"] = best[emit]
+        rec["score"] = score[emit]
+        # emitted rows are in doc order: one split at the per-doc counts
+        n_emit = np.bincount(np.asarray(doc_idx)[pair_doc[emit]], minlength=len(docs))
+        return np.split(rec, np.cumsum(n_emit)[:-1])

@@ -101,14 +101,14 @@ def _materialize_docred(path: str = _DOCRED_PATH) -> str:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     from glre_spark.datagen import gen_pages
     from glre_spark.model import GLREModel, build_weights
-    from glre_spark.model.net import infer_doc
+    from glre_spark.model.net import REL_IDS
     from glre_spark.nlp import analyze
 
-    model = GLREModel(build_weights())
+    pages = gen_pages(40)
+    analyzed = [analyze(p["url"], p["text"]) for p in pages]
+    preds = GLREModel(build_weights()).predict_batch(analyzed)
     docs = []
-    for p in gen_pages(40):
-        doc = analyze(p["url"], p["text"])
-        preds = infer_doc(model, p["url"], p["text"])
+    for p, doc, rec in zip(pages, analyzed, preds):
         docs.append(
             {
                 "title": p["url"],
@@ -126,8 +126,8 @@ def _materialize_docred(path: str = _DOCRED_PATH) -> str:
                     for cluster in doc.entities
                 ],
                 "labels": [
-                    {"h": r["h"], "t": r["t"], "r": r["r"], "evidence": []}
-                    for r in preds
+                    {"h": h, "t": t, "r": REL_IDS[r], "evidence": []}
+                    for h, t, r, _ in rec.tolist()
                 ],
             }
         )

@@ -130,7 +130,6 @@ def build_triples(spark: SparkSession, pages: DataFrame,
                   use_extractor: bool = True,
                   cluster_entities: bool = False,
                   group_col: str | None = None,
-                  group_type: str = "int",
                   drop_near_dups: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → deduped triples.
 
@@ -141,10 +140,10 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     The clusters are corpus-global, so it refuses a ``group_col``.
 
     ``group_col`` names a column on ``pages`` (lineage bucket_group int,
-    or the streaming crawl_key string — ``group_type`` gives its Spark
-    type): dedup becomes group-scoped and the column rides to the output
-    so the checkpointed run can partition its sink by it in ONE pass and
-    the streaming log can keep crawl granularity.
+    or the streaming crawl_key string): dedup becomes group-scoped and
+    the column rides to the output so the checkpointed run can partition
+    its sink by it in ONE pass and the streaming log can keep crawl
+    granularity.
 
     ``drop_near_dups=True`` composes the dedup DECISION
     (linking.near_dup_keepers: MinHash/LSH → Jaccard-verified → connected
@@ -198,7 +197,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         docs = ided.join(keep_ids, "url", "left_semi")
     preds = infer_stage_agg(
         docs, weights_bc=broadcast_weights(spark), extract_html=use_extractor,
-        group_col=group_col, group_type=group_type,
+        group_col=group_col,
     )
     triples = predictions_to_triples(preds, alias_dict_df(spark))
     deduped = dedup_triples(triples, extra_keys=[group_col] if group_col else [])

@@ -396,7 +396,7 @@ def stream_build_triples(
                     "refusing to merge ambiguous page versions"
                 )
         triples = build_triples(
-            spark, keyed, group_col="crawl_key", group_type="string",
+            spark, keyed, group_col="crawl_key",
             drop_near_dups=(drop_near_dups == "batch_local"),
         )
         (

@@ -75,6 +75,88 @@ def test_one_aggregation_matches_two_aggregation_reference(spark):
         assert rows and rows == sorted(map(tuple, want.select(*cols).collect()))
 
 
+def _reference_stage(docs, schema, group_col):
+    """The stage's former per-prediction dict loop over predict_batch
+    records, per partition: (group, h_name, r, t_name) → [max
+    round(score, 6), min url, count]."""
+    import pandas as pd
+
+    from glre_spark.extract import extract_text
+    from glre_spark.inference import _get_model
+    from glre_spark.model.net import REL_IDS
+    from glre_spark.nlp import analyze
+
+    def fn(batches):
+        model = _get_model()
+        acc = {}
+        for pdf in batches:
+            urls = pdf["url"].tolist()
+            groups = pdf[group_col].tolist() if group_col else [None] * len(urls)
+            docs = [analyze(u, extract_text(h)) for u, h in zip(urls, pdf["html"])]
+            for url, grp, doc, rec in zip(urls, groups, docs, model.predict_batch(docs)):
+                names = doc.entity_names
+                for h, t, rel, score in rec.tolist():
+                    key = (grp, names[h], REL_IDS[rel], names[t])
+                    score = round(score, 6)
+                    cur = acc.get(key)
+                    if cur is None:
+                        acc[key] = [score, url, 1]
+                    else:
+                        cur[0] = max(cur[0], score)
+                        cur[1] = min(cur[1], url)
+                        cur[2] += 1
+        rows = [(h, r, t, s, u, n, g) for (g, h, r, t), (s, u, n) in acc.items()]
+        frame = pd.DataFrame(rows, columns=[*schema.fieldNames()[:6], "_g"])
+        yield frame.rename(columns={"_g": group_col}) if group_col else frame.drop(columns="_g")
+
+    cols = ["url", "html", *([group_col] if group_col else [])]
+    return docs.select(*cols).mapInPandas(fn, schema)
+
+
+def test_stage_matches_per_prediction_reference(spark):
+    """infer_stage_agg's columnar aggregation (prediction records → one
+    frame per Arrow batch → one groupby per partition) must give exactly
+    the rows of the per-prediction dict loop, score bits included: with
+    no group, an int group and a string group, over partitions that span
+    several Arrow batches."""
+    from pyspark.sql import functions as F
+
+    from glre_spark.inference import broadcast_weights, infer_stage_agg
+    from glre_spark.pipeline import url_bucket
+
+    pages = (
+        pages_df(spark, 120, partitions=4)
+        .withColumn("bucket_group", F.pmod(url_bucket(), F.lit(3)))
+        .withColumn("shard", F.substring(F.md5("url"), 1, 1))
+    )
+    docs = prepare_pages(pages, carry_cols=["bucket_group", "shard"])
+    batch = "4"
+    per_part = docs.groupBy(F.spark_partition_id()).count().collect()
+    assert max(r["count"] for r in per_part) > 2 * int(batch)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, batch)
+    try:
+        for group_col, spark_type in ((None, None), ("bucket_group", "int"), ("shard", "string")):
+            stage = infer_stage_agg(
+                docs, weights_bc=broadcast_weights(spark), extract_html=True,
+                group_col=group_col,
+            )
+            if group_col:
+                assert stage.schema[group_col].dataType.simpleString() == spark_type
+            want = _reference_stage(docs, stage.schema, group_col)
+
+            def rows(df):
+                return sorted(
+                    (*r[:3], r.score.hex(), *r[4:]) for r in df.collect()
+                )
+
+            got = rows(stage)
+            assert got and got == rows(want)
+    finally:
+        spark.conf.set(conf, before)
+
+
 def test_cluster_entities_refuses_group_col(spark):
     """Name clusters are corpus-global: a group-scoped build cannot
     compute them exactly, and must not silently drop the group column."""
