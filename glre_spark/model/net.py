@@ -156,22 +156,6 @@ def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     return e / e.sum(axis=axis, keepdims=True)
 
 
-def local_repr(w: dict, pair_q: np.ndarray, mention_reps: np.ndarray) -> np.ndarray:
-    """i9: local entity representation — multi-head attention over one
-    entity's mention (global) reps, query conditioned on the entity pair.
-    Encapsulated so the exact query construction (the one under-specified
-    GLRE detail, SURVEY.md §2.11 i9) can be swapped without touching the
-    pipeline."""
-    dh = D // HEADS
-    q = (pair_q @ w["mha_q"]).reshape(HEADS, dh)                    # (H, dh)
-    k = (mention_reps @ w["mha_k"]).reshape(-1, HEADS, dh)          # (M, H, dh)
-    v = (mention_reps @ w["mha_v"]).reshape(-1, HEADS, dh)
-    scores = np.einsum("hd,mhd->hm", q, k) / np.sqrt(dh)            # (H, M)
-    att = _softmax(scores, axis=1)
-    ctx = np.einsum("hm,mhd->hd", att, v).reshape(D)
-    return ctx @ w["mha_o"]
-
-
 def context_pool(w: dict, sent_reps: np.ndarray) -> np.ndarray:
     """i10: self-attended pooling over the document's sentence reps."""
     query = sent_reps.mean(axis=0) @ w["ctx_q"]

@@ -6,6 +6,12 @@ The MinHash/LSH and near-dup keeper ops wrap linking's one near-duplicate
 chain; its hash family (one md5-derived 28-bit base hash per shingle +
 integer permutations, SURVEY.md §2.12) is exact in both engines, so the
 oracles compute bit-identical signatures.
+
+The embedding ops (brute-force / LSH / IVF top-k, LSH bucketing,
+embedding-cosine near-dup) share one small engine: one dot product, one
+rounded cosine, one ±1 sign-bucket table and one query re-rank tail, with
+near-dup candidates from linking's capped block join; their DuckDB twins
+are assembled from the matching SQL fragments.
 """
 
 from __future__ import annotations
@@ -159,15 +165,13 @@ def doc_bands(spark, sf_dir):
     return lsh_band(spark, sf_dir).localCheckpoint(eager=True)
 
 
-_CAND_CTES = (
-    _SIG_CTE
-    + """,
-bands AS MATERIALIZED ("""
-    + _BAND_SELECTS
-    + f"""),
-sized AS MATERIALIZED (
+def _capped_pairs_sql(max_block: int) -> str:
+    """linking.candidates' twin: ``sized`` + ``cand`` CTEs over a
+    ``bands(doc_id, band_id, band_hash)`` CTE, blocks over ``max_block``
+    dropped."""
+    return f"""sized AS MATERIALIZED (
   SELECT band_id, band_hash FROM bands
-  GROUP BY band_id, band_hash HAVING COUNT(*) <= {MAX_LSH_BLOCK}
+  GROUP BY band_id, band_hash HAVING COUNT(*) <= {max_block}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -176,6 +180,14 @@ cand AS (
   JOIN bands b ON a.band_hash = b.band_hash AND a.band_id = b.band_id
   WHERE a.doc_id < b.doc_id
 )"""
+
+
+_CAND_CTES = (
+    _SIG_CTE
+    + ",\nbands AS MATERIALIZED ("
+    + _BAND_SELECTS
+    + "),\n"
+    + _capped_pairs_sql(MAX_LSH_BLOCK)
 )
 
 
@@ -468,7 +480,47 @@ def dedup_keeper_sketch(spark, sf_dir):
     return near_dup_keepers(load(spark, sf_dir, "documents"), sketch_k=_SKETCH_K)
 
 
-_ANN_CTES = """q AS (
+# --- embedding similarity ----------------------------------------------------
+# One engine behind the five embedding ops: Spark composes _dot / _cosine,
+# the sign-bucket table (_sign_buckets) and the query re-rank tail
+# (_rerank_top10); near-dup pairs come from linking.candidates' capped
+# block join. Their DuckDB twins are assembled from _SIGN_BUCKETS_CTE,
+# _rerank_sql and _capped_pairs_sql.
+
+
+def _dot(a, b):
+    # zip_with + aggregate: a left fold, not a 64-term inline chain (that
+    # made whole-stage codegen compile a megamethod, measured 19 s of pure
+    # compile at 500 rows). Against a ±1 plane, x*(-1.0)+acc ≡ acc-x exactly
+    # in IEEE, so the doubles (and sign bits) stay bit-identical to the SQL
+    # twin's add/subtract chain.
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _cosine(a, b):
+    return fround(_dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 4)
+
+
+def _rerank_top10(cands, emb):
+    """Exact cosine of each candidate row (vec_id, embedding) against the
+    query vec 0; deterministic top-10 (ties → smaller vec_id)."""
+    q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
+    return (
+        cands.crossJoin(F.broadcast(q))
+        .select("vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(10)
+    )
+
+
+def _rerank_sql(where: str) -> str:
+    """The twins' re-rank tail: q / d / pr CTEs and the top-10 select, over
+    the embeddings rows matching ``where`` (which must exclude vec 0)."""
+    return f"""q AS (
   SELECT UNNEST(range(1, len(embedding) + 1)) AS idx,
          CAST(UNNEST(embedding) AS DOUBLE) AS v
   FROM embeddings WHERE vec_id = 0
@@ -476,48 +528,23 @@ _ANN_CTES = """q AS (
 d AS (
   SELECT vec_id, UNNEST(range(1, len(embedding) + 1)) AS idx,
          CAST(UNNEST(embedding) AS DOUBLE) AS v
-  FROM embeddings
+  FROM embeddings WHERE {where}
 ),
 pr AS (
   SELECT d.vec_id, SUM(d.v * q.v) AS dot,
          sqrt(SUM(d.v * d.v)) AS nd, sqrt(SUM(q.v * q.v)) AS nq
   FROM d JOIN q USING (idx) GROUP BY d.vec_id
-)"""
-
-
-@op(
-    "ann_cosine_topk",
-    "WITH "
-    + _ANN_CTES
-    + """
-SELECT vec_id, ROUND(dot / (nd * nq) + 1e-9, 4) + 0 AS cos_sim
-FROM pr WHERE vec_id <> 0
-ORDER BY cos_sim DESC, vec_id LIMIT 10""",
 )
+SELECT vec_id, ROUND(dot / (nd * nq) + 1e-9, 4) + 0 AS cos_sim
+FROM pr ORDER BY cos_sim DESC, vec_id LIMIT 10"""
+
+
+@op("ann_cosine_topk", "WITH " + _rerank_sql("vec_id <> 0"))
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k vs vec 0 — the ANN baseline. Dot/norms via
     zip_with + aggregate (JVM-side higher-order fns, no UDF)."""
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
-    joined = fan_out(emb.filter("vec_id <> 0")).crossJoin(F.broadcast(q))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = fround(
-        dot(F.col("embedding"), F.col("qe"))
-        / (F.sqrt(dot(F.col("embedding"), F.col("embedding"))) * F.sqrt(dot(F.col("qe"), F.col("qe")))),
-        4,
-    )
-    return (
-        joined.select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return _rerank_top10(fan_out(emb.filter("vec_id <> 0")), emb)
 
 
 # --- random-hyperplane LSH for ANN ------------------------------------------
@@ -551,20 +578,6 @@ def _plane_sql(coefs: list[int]) -> str:
     return "(0.0 " + "".join(terms) + ")"
 
 
-def _plane_col(coefs: list[int]):
-    # zip_with + aggregate instead of a 64-term inline chain: the inline
-    # form made whole-stage codegen compile a megamethod (measured 19 s of
-    # pure compile at 500 rows). Fold order is left-to-right in both forms
-    # and x*(-1.0)+acc ≡ acc-x exactly in IEEE, so the doubles (and sign
-    # bits) stay bit-identical to the SQL twin's add/subtract chain.
-    arr = F.array(*[F.lit(float(c)) for c in coefs])
-    return F.aggregate(
-        F.zip_with(F.col("embedding"), arr, lambda x, c: x.cast("double") * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _bucket_sql(planes: list[list[int]]) -> str:
     return "concat(" + ", ".join(
         f"CASE WHEN {_plane_sql(p)} > 0 THEN '1' ELSE '0' END" for p in planes
@@ -573,7 +586,12 @@ def _bucket_sql(planes: list[list[int]]) -> str:
 
 def _bucket_col(planes: list[list[int]]):
     return F.concat(
-        *[F.when(_plane_col(p) > 0, "1").otherwise("0") for p in planes]
+        *[
+            F.when(
+                _dot(F.col("embedding"), F.array(*[F.lit(float(c)) for c in p])) > 0, "1"
+            ).otherwise("0")
+            for p in planes
+        ]
     )
 
 
@@ -597,37 +615,37 @@ def _topk_table_planes(tbl: int) -> list[list[int]]:
     return _TOPK_PLANES[tbl * _LSH_BITS : (tbl + 1) * _LSH_BITS]
 
 
+def _sign_buckets(emb):
+    """(vec_id, tbl, bkt): each vector's bucket in each of the L tables."""
+    return emb.select(
+        "vec_id",
+        F.posexplode(
+            F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
+        ).alias("tbl", "bkt"),
+    )
+
+
+# The SQL sign-bucket table, in linking's band-table shape (doc_id,
+# band_id, band_hash) so _capped_pairs_sql reads it as is.
+_SIGN_BUCKETS_CTE = "bands AS MATERIALIZED (" + " UNION ALL ".join(
+    f"SELECT vec_id AS doc_id, {t} AS band_id, "
+    f"{_bucket_sql(_topk_table_planes(t))} AS band_hash FROM embeddings"
+    for t in range(_LSH_L)
+) + ")"
+
+
 @op(
     "ann_lsh_topk",
-    "WITH b AS (SELECT vec_id, "
-    + ", ".join(
-        f"{_bucket_sql(_topk_table_planes(t))} AS b{t}" for t in range(_LSH_L)
-    )
-    + """ FROM embeddings),
-qb AS (SELECT * FROM b WHERE vec_id = 0),
+    "WITH "
+    + _SIGN_BUCKETS_CTE
+    + """,
 cand AS (
-  SELECT DISTINCT b.vec_id FROM b, qb
-  WHERE b.vec_id <> 0 AND ("""
-    + " OR ".join(f"b.b{t} = qb.b{t}" for t in range(_LSH_L))
-    + """)
+  SELECT DISTINCT b.doc_id AS vec_id
+  FROM bands b JOIN bands qb ON b.band_id = qb.band_id AND b.band_hash = qb.band_hash
+  WHERE qb.doc_id = 0 AND b.doc_id <> 0
 ),
-q AS (
-  SELECT UNNEST(range(1, len(embedding) + 1)) AS idx,
-         CAST(UNNEST(embedding) AS DOUBLE) AS v
-  FROM embeddings WHERE vec_id = 0
-),
-d AS (
-  SELECT vec_id, UNNEST(range(1, len(embedding) + 1)) AS idx,
-         CAST(UNNEST(embedding) AS DOUBLE) AS v
-  FROM embeddings WHERE vec_id IN (SELECT vec_id FROM cand)
-),
-pr AS (
-  SELECT d.vec_id, SUM(d.v * q.v) AS dot,
-         sqrt(SUM(d.v * d.v)) AS nd, sqrt(SUM(q.v * q.v)) AS nq
-  FROM d JOIN q USING (idx) GROUP BY d.vec_id
-)
-SELECT vec_id, ROUND(dot / (nd * nq) + 1e-9, 4) + 0 AS cos_sim
-FROM pr ORDER BY cos_sim DESC, vec_id LIMIT 10""",
+"""
+    + _rerank_sql("vec_id IN (SELECT vec_id FROM cand)"),
 )
 def ann_lsh_topk(spark, sf_dir):
     """End-to-end scalable ANN query: candidates = vectors sharing ANY of
@@ -636,47 +654,15 @@ def ann_lsh_topk(spark, sf_dir):
     Recall vs the ann_cosine_topk brute force is asserted ≥ 0.8 in
     tests/test_ann.py."""
     emb = load(spark, sf_dir, "embeddings")
-    buckets = fan_out(emb).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
-        ).alias("tbl", "bkt"),
-    )
-    qb = buckets.filter(F.col("vec_id") == 0).select(
-        F.col("tbl").alias("qtbl"), F.col("bkt").alias("qbkt")
-    )
+    buckets = _sign_buckets(fan_out(emb))
+    qb = buckets.filter(F.col("vec_id") == 0).select("tbl", "bkt")
     cand = (
         buckets.filter(F.col("vec_id") != 0)
-        .join(
-            F.broadcast(qb),
-            (F.col("tbl") == F.col("qtbl")) & (F.col("bkt") == F.col("qbkt")),
-        )
+        .join(F.broadcast(qb), ["tbl", "bkt"])
         .select("vec_id")
         .distinct()
     )
-    q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
-    joined = emb.join(cand, "vec_id").crossJoin(F.broadcast(q))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = fround(
-        dot(F.col("embedding"), F.col("qe"))
-        / (
-            F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-            * F.sqrt(dot(F.col("qe"), F.col("qe")))
-        ),
-        4,
-    )
-    return (
-        joined.select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return _rerank_top10(emb.join(cand, "vec_id"), emb)
 
 
 # --- embedding-cosine near-dup (the 5th dedup family of the brief) ----------
@@ -687,26 +673,13 @@ _EDUP_CAP = 128      # per-(table, bucket) size cap — same cartesian-bomb
                      # _LSH_BITS so expected bucket size stays constant
 
 
-def _edup_bucket_selects() -> str:
-    return " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, {_bucket_sql(_topk_table_planes(t))} AS bkt "
-        "FROM embeddings"
-        for t in range(_LSH_L)
-    )
-
-
-def _edup_sql() -> str:
-    return f"""WITH b AS ({_edup_bucket_selects()}),
-sized AS (
-  SELECT tbl, bkt FROM b GROUP BY tbl, bkt HAVING COUNT(*) <= {_EDUP_CAP}
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-  FROM b a
-  JOIN sized s ON a.tbl = s.tbl AND a.bkt = s.bkt
-  JOIN b c ON a.tbl = c.tbl AND a.bkt = c.bkt
-  WHERE a.vec_id < c.vec_id
-),
+@op(
+    "dedup_embedding_cosine",
+    "WITH "
+    + _SIGN_BUCKETS_CTE
+    + ",\n"
+    + _capped_pairs_sql(_EDUP_CAP)
+    + f""",
 da AS (
   SELECT vec_id, UNNEST(range(1, len(embedding) + 1)) AS idx,
          CAST(UNNEST(embedding) AS DOUBLE) AS v
@@ -721,61 +694,27 @@ pr AS (
   GROUP BY c.id_a, c.id_b
 )
 SELECT id_a, id_b, ROUND(dot / (na * nb) + 1e-9, 4) + 0 AS cos_sim
-FROM pr WHERE ROUND(dot / (na * nb) + 1e-9, 4) + 0 >= {_EDUP_THRESH}"""
-
-
-@op("dedup_embedding_cosine", _edup_sql())
+FROM pr WHERE ROUND(dot / (na * nb) + 1e-9, 4) + 0 >= {_EDUP_THRESH}""",
+)
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (brief's 5th dedup family
     beside exact / MinHash-LSH / SimHash / n-gram-Jaccard): candidates =
-    vectors sharing ANY of the L sign-LSH table buckets (never all-pairs;
-    per-bucket size capped), then exact cosine on candidates only,
-    keeping pairs ≥ _EDUP_THRESH (0.4). The threshold test runs on the
-    ROUNDED value in both engines so the keep/drop decision is
-    bit-identical. Per-table match probability at cos 0.4 is
+    linking.candidates over the L sign-LSH tables as bands (never
+    all-pairs; blocks over _EDUP_CAP dropped), then exact cosine on
+    candidates only, keeping pairs ≥ _EDUP_THRESH (0.4). The threshold
+    test runs on the ROUNDED value in both engines so the keep/drop
+    decision is bit-identical. Per-table match probability at cos 0.4 is
     (1 − θ/π)³ ≈ 0.25 → ≈0.9 recall over the 8 tables (same plane family
     as ann_lsh_topk)."""
     emb = load(spark, sf_dir, "embeddings")
-    buckets = fan_out(emb).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
-        ).alias("tbl", "bkt"),
-    )
-    sized = (
-        buckets.groupBy("tbl", "bkt")
-        .agg(F.count("*").alias("bn"))
-        .filter(F.col("bn") <= _EDUP_CAP)
-        .select("tbl", "bkt")
-    )
-    capped = buckets.join(F.broadcast(sized), ["tbl", "bkt"])
-    a = capped.select(F.col("vec_id").alias("id_a"), "tbl", "bkt")
-    c = capped.select(F.col("vec_id").alias("id_b"), "tbl", "bkt")
-    cand = (
-        a.join(c, ["tbl", "bkt"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    ea = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    eb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    cos = fround(
-        dot(F.col("va"), F.col("vb"))
-        / (F.sqrt(dot(F.col("va"), F.col("va"))) * F.sqrt(dot(F.col("vb"), F.col("vb")))),
-        4,
-    )
+    bands = _sign_buckets(fan_out(emb)).toDF("doc_id", "band_id", "band_hash")
+    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select("id_a", "id_b", cos.alias("cos_sim"))
+        candidates(bands, _EDUP_CAP)
+        .join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", _cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
         .filter(F.col("cos_sim") >= _EDUP_THRESH)
     )
 
@@ -813,26 +752,9 @@ probe AS (
     SELECT cid, row_number() OVER (ORDER BY dot DESC, cid) AS rn
     FROM dots WHERE vec_id = 0) WHERE rn <= {_IVF_PROBE}
 ),
-q AS (
-  SELECT UNNEST(range(1, len(embedding) + 1)) AS idx,
-         CAST(UNNEST(embedding) AS DOUBLE) AS v
-  FROM embeddings WHERE vec_id = 0
-),
-d AS (
-  SELECT e.vec_id, UNNEST(range(1, len(e.embedding) + 1)) AS idx,
-         CAST(UNNEST(e.embedding) AS DOUBLE) AS v
-  FROM embeddings e
-  JOIN asg ON asg.vec_id = e.vec_id
-  JOIN probe ON asg.cluster = probe.cluster
-  WHERE e.vec_id <> 0
-),
-pr AS (
-  SELECT d.vec_id, SUM(d.v * q.v) AS dot,
-         sqrt(SUM(d.v * d.v)) AS nd, sqrt(SUM(q.v * q.v)) AS nq
-  FROM d JOIN q USING (idx) GROUP BY d.vec_id
+""" + _rerank_sql(
+    "vec_id <> 0 AND vec_id IN (SELECT vec_id FROM asg JOIN probe USING (cluster))"
 )
-SELECT vec_id, ROUND(dot / (nd * nq) + 1e-9, 4) + 0 AS cos_sim
-FROM pr ORDER BY cos_sim DESC, vec_id LIMIT {{limit}}""".format(limit=10)
 
 
 @op("ann_ivf_topk", _IVF_SQL)
@@ -892,30 +814,8 @@ def ann_ivf_topk(spark, sf_dir):
         reverse=True,
     )
     probe = [-nc for _, nc in qdots[:_IVF_PROBE]]
-
-    cand = assigned.filter(F.col("cluster").isin(probe) & (F.col("vec_id") != 0))
-    q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
-    joined = cand.crossJoin(F.broadcast(q))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = fround(
-        dot(F.col("embedding"), F.col("qe"))
-        / (
-            F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-            * F.sqrt(dot(F.col("qe"), F.col("qe")))
-        ),
-        4,
-    )
-    return (
-        joined.select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
+    return _rerank_top10(
+        assigned.filter(F.col("cluster").isin(probe) & (F.col("vec_id") != 0)), emb
     )
 
 

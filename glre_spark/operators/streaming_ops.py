@@ -48,9 +48,7 @@ def stateful_user_totals_op(spark, sf_dir):
         load(spark, sf_dir, "events").repartition(12).write.mode("overwrite").parquet(
             src_dir
         )
-        updates = stateful_user_totals(
-            read_events_stream(spark, src_dir), exact_cents=True
-        )
+        updates = stateful_user_totals(read_events_stream(spark, src_dir))
         run_stream_to_memory(updates, name, mode="update")
         return (
             spark.table(name)

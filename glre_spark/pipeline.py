@@ -32,6 +32,7 @@ from glre_spark.linking import (
 from glre_spark.session import url_exchange_width
 
 MAX_DOC_CHARS = 100_000
+LANG = "en"  # the one language the model and alias dictionary cover
 URL_BUCKETS = 1024  # deterministic lineage buckets, decoupled from task count
 
 
@@ -76,20 +77,20 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
     )
 
 
-def is_eligible(lang: str = "en") -> Column:
+def is_eligible() -> Column:
     """The pipeline's admission rule (filter_lang + filter_len) as a
     predicate, for counting admitted pages without filtering them."""
-    return (F.col("lang") == lang) & F.length("text").between(1, MAX_DOC_CHARS)
+    return (F.col("lang") == LANG) & F.length("text").between(1, MAX_DOC_CHARS)
 
 
-def eligible_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
+def eligible_pages(pages: DataFrame) -> DataFrame:
     """The pipeline's admission filter, factored out so the streaming
     crawl registry applies EXACTLY the same rule: a crawl excluded here
     must not count as a url's latest version."""
-    return pages.filter(is_eligible(lang))
+    return pages.filter(is_eligible())
 
 
-def prepare_pages(pages: DataFrame, lang: str = "en", use_extractor: bool = True,
+def prepare_pages(pages: DataFrame, use_extractor: bool = True,
                   carry_cols: list[str] | None = None) -> DataFrame:
     """Filter, dedup recrawls over one url-hash exchange. Text extraction is
     NOT done here — it is fused into the inference Arrow stage
@@ -99,7 +100,7 @@ def prepare_pages(pages: DataFrame, lang: str = "en", use_extractor: bool = True
     the scan by Catalyst)."""
     # `bucket` is the deterministic lineage-key COLUMN (resume
     # filtering), decoupled from the physical task count.
-    df = latest_per_url(eligible_pages(pages, lang)).withColumn("bucket", url_bucket())
+    df = latest_per_url(eligible_pages(pages)).withColumn("bucket", url_bucket())
     payload = "html" if use_extractor else "text"
     return df.select("url", "warc_ts", payload, "lang", "bucket", *(carry_cols or []))
 

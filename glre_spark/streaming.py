@@ -49,17 +49,6 @@ def sliding_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFram
     )
 
 
-def session_aggregate(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Per-user session windows (30-min gap) — streaming twin of
-    win_session."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
-
-
 def dedup_events_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Streaming exact dedup (the §2.13 dedup_exact shape as a stream):
     ``dropDuplicatesWithinWatermark`` keeps the first occurrence of each
@@ -73,7 +62,7 @@ def dedup_events_stream(events: DataFrame, watermark: str = "30 minutes") -> Dat
     )
 
 
-def stateful_user_totals(events: DataFrame, exact_cents: bool = False) -> DataFrame:
+def stateful_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState (SURVEY.md
     §2.10 / brief: "applyInPandasWithState for custom stateful
     operators"): running per-user totals carried in explicit group state
@@ -81,57 +70,41 @@ def stateful_user_totals(events: DataFrame, exact_cents: bool = False) -> DataFr
     can't express (e.g. a streaming resume manifest or per-url crawl
     state). Emits the updated running total once per (user, micro-batch).
 
-    ``exact_cents=True`` accumulates integer cents (HALF_UP on the exact
-    half, matching F.round and DuckDB ROUND) and emits ``sum_cents`` —
-    the order-independent encoding the oracle-checked operator needs.
-    The default float ``sum_value`` keeps the simpler demo shape."""
+    The total accumulates integer cents (HALF_UP on the exact half,
+    matching F.round and DuckDB ROUND) as ``sum_cents`` — an
+    order-independent encoding, so the result does not depend on how the
+    stream was split into micro-batches."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):
         (user_id,) = key
-        if exact_cents:
-            total, acc = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                total += len(pdf)
-                v = pdf["value"].to_numpy() * 100
-                # HALF_UP (away from zero), NOT pandas .round() half-even:
-                # value*100 can be binary-exact .5 and must round like the
-                # DuckDB twin's ROUND() / Spark's F.round
-                acc += int((np.sign(v) * np.floor(np.abs(v) + 0.5)).sum())
-            state.update((total, acc))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [total], "sum_cents": [acc]}
-            )
-        else:
-            total, acc = state.get if state.exists else (0, 0.0)
-            for pdf in pdfs:
-                total += len(pdf)
-                acc += float(pdf["value"].sum())
-            state.update((total, acc))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [total], "sum_value": [acc]}
-            )
+        total, acc = state.get if state.exists else (0, 0)
+        for pdf in pdfs:
+            total += len(pdf)
+            v = pdf["value"].to_numpy() * 100
+            # HALF_UP (away from zero), NOT pandas .round() half-even:
+            # value*100 can be binary-exact .5 and must round like the
+            # DuckDB twin's ROUND() / Spark's F.round
+            acc += int((np.sign(v) * np.floor(np.abs(v) + 0.5)).sum())
+        state.update((total, acc))
+        yield pd.DataFrame(
+            {"user_id": [user_id], "n_events": [total], "sum_cents": [acc]}
+        )
 
-    out_type = (
-        "user_id long, n_events long, sum_cents long"
-        if exact_cents
-        else "user_id long, n_events long, sum_value double"
-    )
-    state_type = "n long, c long" if exact_cents else "n long, v double"
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType=out_type,
-        stateStructType=state_type,
+        outputStructType="user_id long, n_events long, sum_cents long",
+        stateStructType="n long, c long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same running per-user totals as ``stateful_user_totals(
-    exact_cents=True)``, expressed in Spark 4's transformWithState API
+    """The same running per-user totals as ``stateful_user_totals``,
+    expressed in Spark 4's transformWithState API
     (StatefulProcessor + typed ValueState) — the successor surface to
     applyInPandasWithState, with explicit state handles, TTL support and
     timers. Output parity with the batch groupBy is asserted in

@@ -21,21 +21,12 @@ def test_ann_lsh_candidates_are_a_strict_subset(spark):
     """The LSH path must actually prune: candidate count < corpus size."""
     import pyspark.sql.functions as F
 
-    from glre_spark.operators.kgops import (
-        _LSH_L,
-        _bucket_col,
-        _topk_table_planes,
-    )
+    from glre_spark.operators.kgops import _sign_buckets
     from glre_spark.operators import load
 
     emb = load(spark, SF_DIR, "embeddings")
     n = emb.count()
-    buckets = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
-        ).alias("tbl", "bkt"),
-    )
+    buckets = _sign_buckets(emb)
     qb = buckets.filter("vec_id = 0").select(
         F.col("tbl").alias("qtbl"), F.col("bkt").alias("qbkt")
     )
@@ -80,3 +71,42 @@ def test_embedding_neardup_recall(spark):
     assert got <= truth, f"false positives: {sorted(got - truth)[:5]}"
     recall = len(got & truth) / len(truth)
     assert recall >= 0.8, f"near-dup recall {recall:.2f} < 0.8 ({len(got)}/{len(truth)})"
+
+
+def test_embedding_neardup_drops_oversized_blocks(spark, tmp_path):
+    """_EDUP_CAP + 1 identical vectors share every table bucket, so each of
+    their blocks is over the cap: dedup_embedding_cosine must pair none of
+    them (uncapped, they would add C(129, 2) cos-1.0 pairs), still pair the
+    rest of the corpus, and match its DuckDB twin on the fixture."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from glre_spark.operators.kgops import _EDUP_CAP, dedup_embedding_cosine
+    from tests.oracle_util import TABLES, compare, duck_run
+
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    base = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    hot_vec = np.random.default_rng(7).standard_normal(64).astype(np.float32).tolist()
+    hot_ids = list(range(1_000_000, 1_000_000 + _EDUP_CAP + 1))
+    hot = pa.table(
+        {
+            "vec_id": hot_ids,
+            "embedding": [hot_vec] * len(hot_ids),
+            "label": [0] * len(hot_ids),
+        },
+        schema=base.schema,
+    )
+    pq.write_table(pa.concat_tables([base, hot]), tmp_path / "embeddings.parquet")
+
+    got = dedup_embedding_cosine(spark, str(tmp_path))
+    pairs = {(r.id_a, r.id_b) for r in got.collect()}
+    hot_set = set(hot_ids)
+    assert pairs, "the cap must drop only the oversized blocks"
+    assert not {p for p in pairs if hot_set & set(p)}, "a pair from an over-cap block"
+    problems = compare(got, duck_run(str(tmp_path), REGISTRY["dedup_embedding_cosine"][1]))
+    assert not problems, "; ".join(problems)

@@ -59,7 +59,9 @@ def test_streaming_tumbling_matches_batch(spark, tmp_path):
 def test_stateful_operator_accumulates_across_microbatches(spark, tmp_path):
     """applyInPandasWithState: state must carry across micro-batches (the
     source is split into many files, maxFilesPerTrigger=4 → several
-    triggers), and the final running totals must equal the batch agg."""
+    triggers), and the final running totals must equal the batch agg
+    (integer cents, HALF_UP per event, on both sides)."""
+    from glre_spark.operators import cents
     from glre_spark.streaming import stateful_user_totals
 
     src_dir = str(tmp_path / "events_many")
@@ -71,19 +73,22 @@ def test_stateful_operator_accumulates_across_microbatches(spark, tmp_path):
     updates = spark.sql("SELECT * FROM stateful_mem")
     # several updates per user (state crossed batches), final = max
     final = {
-        r.user_id: (r.n_events, round(r.sum_value, 6))
+        r.user_id: (r.n_events, r.sum_cents)
         for r in updates.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
-            F.max("sum_value").alias("sum_value"),
+            F.max_by("sum_cents", "n_events").alias("sum_cents"),
         )
         .collect()
     }
     assert updates.count() > len(final), "state never crossed a micro-batch"
     want = {
-        r.user_id: (r.n, round(r.s, 6))
+        r.user_id: (r.n, r.c)
         for r in batch_src.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(cents(F.col("value"))).alias("c"),
+        )
         .collect()
     }
     assert final == want
