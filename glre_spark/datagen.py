@@ -284,10 +284,10 @@ def pages_df(
 
 
 def pages_from_docs(
-    docs, id_col: str = "doc_id", partitions: int | None = None,
+    docs, partitions: int | None = None,
     seed: int = 42, sent_range: tuple[int, int] = (2, 8),
 ):
-    """Synthesize the north-rule pages table 1:1 from a doc-id DataFrame
+    """Synthesize the north-rule pages table 1:1 from a DataFrame's doc_id column
     (shared by the driver entry, the glre_* ops, and the UDF-surface ops —
     one generator, identical corpus everywhere).
 
@@ -302,12 +302,12 @@ def pages_from_docs(
 
     def gen(batches):
         for pdf in batches:
-            rows = [gen_page_row(int(i), seed, sent_range) for i in pdf[id_col]]
+            rows = [gen_page_row(int(i), seed, sent_range) for i in pdf["doc_id"]]
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
 
     if partitions is None:
         partitions = max(16, docs.sparkSession.sparkContext.defaultParallelism)
-    return docs.select(id_col).repartition(partitions).mapInPandas(gen, PAGES_SCHEMA)
+    return docs.select("doc_id").repartition(partitions).mapInPandas(gen, PAGES_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -22,27 +22,10 @@ from pyspark.sql import DataFrame
 
 from glre_spark.model import GLREModel, build_weights
 from glre_spark.model.net import REL_IDS
-from glre_spark.model.weights import MODEL_SEED
-
-_MODEL_CACHE: dict[bytes, GLREModel] = {}
 
 
-def _weights_key(weights) -> bytes:
-    """Cheap content fingerprint: one small tensor's bytes. Keying the
-    warm-worker cache on the DEFAULT seed would silently ignore non-default
-    broadcast weights; ff2_b-independent draws make ff1_w seed-unique."""
-    return weights["ff1_w"].tobytes()[:256]
-
-
-def _get_model(weights=None, seed: int = MODEL_SEED) -> GLREModel:
-    if weights is None:
-        weights = build_weights(seed)
-    key = _weights_key(weights)
-    model = _MODEL_CACHE.get(key)
-    if model is None:
-        model = GLREModel(weights)
-        _MODEL_CACHE[key] = model
-    return model
+def _get_model(weights=None) -> GLREModel:
+    return GLREModel(build_weights() if weights is None else weights)
 
 
 LEAN_SCHEMA = (
@@ -133,7 +116,7 @@ def infer_stage_agg(
     return df.select(*cols).mapInPandas(fn, schema)
 
 
-def broadcast_weights(spark, seed: int = MODEL_SEED):
+def broadcast_weights(spark):
     """Ship the frozen weight dict to executors once (broadcast_sidecar,
     SURVEY.md §2.1)."""
-    return spark.sparkContext.broadcast(build_weights(seed))
+    return spark.sparkContext.broadcast(build_weights())

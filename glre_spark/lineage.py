@@ -198,7 +198,6 @@ def run_with_checkpoints(
     pages: DataFrame,
     base: str,
     n_groups: int = 8,
-    run_id: str | None = None,
     fail_after: int | None = None,
 ) -> str:
     """Process every pending bucket group in ONE pass over the pages source
@@ -207,7 +206,7 @@ def run_with_checkpoints(
     Re-invoking with the same ``base`` resumes the missing groups."""
     from glre_spark.pipeline import url_bucket
 
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     _heal_torn_writes(base)
     pages_g = pages.withColumn(
         "bucket_group", F.pmod(url_bucket(F.col("url")), F.lit(n_groups)).cast("int")

@@ -1,6 +1,6 @@
 """Entity linking & canonicalization (SURVEY.md §2.12).
 
-Relational stages downstream of inference: name normalization, (salted)
+Relational stages downstream of inference: name normalization, the
 broadcast alias-dictionary join, the one near-duplicate chain (shingle
 hashes → MinHash → LSH bands → capped candidate self-join → verify →
 connected components) behind both the near-dup document keepers and the
@@ -38,7 +38,7 @@ def alias_dict_df(spark) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Alias joins (link_alias_broadcast / join_salted_skew)
+# Alias join (link_alias_broadcast)
 # ---------------------------------------------------------------------------
 
 
@@ -48,26 +48,6 @@ def link_aliases(mentions: DataFrame, alias_df: DataFrame, name_col: str = "name
     mention stays in the graph."""
     m = mentions.withColumn("alias_norm", norm_name(F.col(name_col)))
     joined = m.join(F.broadcast(alias_df), "alias_norm", "left")
-    return joined.withColumn(
-        "entity_key",
-        F.coalesce(F.col("entity_key"), F.concat(F.lit("S"), F.md5("alias_norm"))),
-    ).withColumn("canonical_name", F.coalesce(F.col("canonical_name"), F.col(name_col)))
-
-
-def link_aliases_salted(
-    mentions: DataFrame, alias_df: DataFrame, name_col: str = "name", salt_buckets: int = 16
-) -> DataFrame:
-    """Salted variant for hot keys (head entities, BASELINE.json north_star):
-    fact side gets a url-hash salt; the dictionary is replicated ×N via
-    explode(sequence(...)). Result ≡ the plain join (property-tested)."""
-    m = mentions.withColumn("alias_norm", norm_name(F.col(name_col))).withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col("url"), F.col(name_col)), F.lit(salt_buckets)).cast("int"),
-    )
-    dict_rep = alias_df.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    joined = m.join(F.broadcast(dict_rep), ["alias_norm", "_salt"], "left").drop("_salt")
     return joined.withColumn(
         "entity_key",
         F.coalesce(F.col("entity_key"), F.concat(F.lit("S"), F.md5("alias_norm"))),
@@ -101,6 +81,8 @@ MAX_LSH_BLOCK = 64  # block-size cap: one hot band block would otherwise go
                     # quadratic in the self-join (cartesian bomb at web
                     # scale); oversized blocks are dropped (SURVEY M4)
 KEEPER_TAU = 0.8  # classic near-dup Jaccard threshold
+CC_MAX_ITER = 20  # connected-components round cap (pointer jumping
+                  # converges in O(log diameter) rounds)
 
 
 def shingle_set(c, k: int = SHINGLE_K):
@@ -208,13 +190,13 @@ def jaccard(a: str = "sh_a", b: str = "sh_b"):
 # ---------------------------------------------------------------------------
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(id_a, id_b) → (id, component) with component = min id reachable.
 
     Min-label propagation PLUS a pointer-jumping step per round (component
     ← label(component)), so convergence is O(log diameter) — chains across
     overlapping LSH blocks converge in a handful of rounds even when far
-    longer than max_iter. Driver-side fixpoint loop; localCheckpoint
+    longer than CC_MAX_ITER. Driver-side fixpoint loop; localCheckpoint
     truncates lineage per iteration (SURVEY.md §4.3).
 
     Convergence probe: min-propagation is monotone per node, so a
@@ -236,7 +218,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     labels = nodes.withColumn("component", F.col("id")).localCheckpoint(eager=True)
     prev_sum = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # candidate label for dst = min over neighbors' labels (+ own)
         prop = (
             sym.join(labels, sym.src == labels.id)
@@ -264,8 +246,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         prev_sum = s
     if not converged:
         warnings.warn(
-            f"connected_components: no fixpoint after max_iter={max_iter}; "
-            "components may be split — raise max_iter",
+            f"connected_components: no fixpoint after {CC_MAX_ITER} rounds; "
+            "components may be split — raise CC_MAX_ITER",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -279,11 +261,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
 
 def near_dup_keepers(
-    docs: DataFrame, tau: float = KEEPER_TAU, max_block: int = MAX_LSH_BLOCK,
-    sketch_k: int | None = None, check_ids: bool = True,
+    docs: DataFrame, sketch_k: int | None = None, check_ids: bool = True,
 ) -> DataFrame:
     """The dedup DECISION over an ARBITRARY (doc_id, text) DataFrame:
-    MinHash → capped LSH blocks → Jaccard ≥ τ verify → connected
+    MinHash → capped LSH blocks → Jaccard ≥ KEEPER_TAU verify → connected
     components → (doc_id, keeper, is_dup), min-id keeper per near-dup
     cluster. Zero Python stages; every join is bounded by the block cap,
     never all-pairs. This is the table a training-data pipeline joins
@@ -301,8 +282,9 @@ def near_dup_keepers(
     star find all of them). NOT keyed on the minhash signature: equal
     signatures do NOT imply near-duplicate on shingle-skewed corpora
     (measured: 24k template docs collapsed into 1.8k full-signature
-    buckets at J far below τ), and star-to-min inside a mixed bucket
-    would pair mirrors with a non-duplicate min and lose them at verify.
+    buckets at J far below KEEPER_TAU), and star-to-min inside a mixed
+    bucket would pair mirrors with a non-duplicate min and lose them at
+    verify.
 
     The default verify is exact Jaccard over ``exact_shingles``.
     ``sketch_k`` trades it for scale: the verify joins a bottom-k sketch
@@ -355,7 +337,7 @@ def near_dup_keepers(
         .select("id_a", F.col("doc_id").alias("id_b"))
     )
     cand = (
-        candidates(band_rows(minhash(hs), DOC_BANDS), max_block)
+        candidates(band_rows(minhash(hs), DOC_BANDS))
         .unionByName(star)
         .distinct()
     )
@@ -370,7 +352,7 @@ def near_dup_keepers(
     else:
         sets = docs.select("doc_id", exact_shingles(F.col("text")).alias("sh"))
         jac = jaccard()
-    ver = with_sets(cand, sets).filter(jac >= tau).select("id_a", "id_b")
+    ver = with_sets(cand, sets).filter(jac >= KEEPER_TAU).select("id_a", "id_b")
     comps = connected_components(ver)
     ids = docs.select("doc_id")
     keeper = F.coalesce(F.col("component"), F.col("doc_id"))
@@ -389,50 +371,39 @@ def near_dup_keepers(
 
 def cluster_names(
     names: DataFrame,
-    name_col: str = "name",
     weight_col: str | None = None,
     jaccard_threshold: float = 0.85,
-    max_block: int = MAX_LSH_BLOCK,
 ) -> DataFrame:
     """(name [, weight]) → (name, cluster_name) mapping for near-duplicate
     names. Pure DataFrame ops: the near-duplicate chain with NAME_BANDS
     bands → Jaccard verify on the normalized names' shingle strings →
-    connected components (by hashed name id) → canonical pick (max weight,
-    tie → lexicographic).
+    connected components (by hashed name id) → ``canonicalize`` (max
+    summed weight, tie → lexicographic).
 
     Node ids are xxhash64(name): fully parallel (a dense_rank over a
     global no-partition window would funnel every distinct name through
     one task) and collision-safe at 64 bits for name-clustering scale."""
     w = (
-        names.groupBy(name_col).agg(F.sum(weight_col).alias("_w"))
+        names.groupBy("name").agg(F.sum(weight_col).alias("_w"))
         if weight_col
-        else names.select(name_col).distinct().withColumn("_w", F.lit(1))
+        else names.select("name").distinct().withColumn("_w", F.lit(1))
     )
-    ided = w.withColumn("doc_id", F.xxhash64(F.col(name_col))).withColumn(
-        "_norm", norm_name(F.col(name_col))
+    ided = w.withColumn("doc_id", F.xxhash64(F.col("name"))).withColumn(
+        "_norm", norm_name(F.col("name"))
     )
     sig = minhash(ided.select("doc_id", shingle_hashes(F.col("_norm")).alias("hs")))
     sets = ided.select("doc_id", shingle_set(F.col("_norm")).alias("sh"))
     pairs = (
-        with_sets(candidates(band_rows(sig, NAME_BANDS), max_block), sets)
+        with_sets(candidates(band_rows(sig, NAME_BANDS)), sets)
         .filter(jaccard() >= jaccard_threshold)
         .select("id_a", "id_b")
     )
     comps = connected_components(pairs)  # only ids that appear in edges
     labeled = ided.join(comps, ided.doc_id == comps.id, "left").select(
-        F.col(name_col),
-        F.col("_w"),
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("_comp"),
+        "name", "_w", F.coalesce(F.col("component"), F.col("doc_id")).alias("_comp"),
     )
-    wrep = Window.partitionBy("_comp").orderBy(F.desc("_w"), F.asc(name_col))
-    reps = (
-        labeled.withColumn("_rk", F.row_number().over(wrep))
-        .filter("_rk = 1")
-        .select("_comp", F.col(name_col).alias("cluster_name"))
-    )
-    return labeled.join(reps, "_comp").select(
-        F.col(name_col).alias("name"), F.col("cluster_name")
-    )
+    reps = canonicalize(labeled, "_comp", "name", "_w")
+    return labeled.join(reps, "_comp").select("name", "cluster_name")
 
 
 def apply_name_clusters(triples: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -464,14 +435,16 @@ def apply_name_clusters(triples: DataFrame, mapping: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def canonicalize(named: DataFrame, cluster_col: str = "component", name_col: str = "canonical_name") -> DataFrame:
-    """Pick the canonical name per cluster: most frequent, tie → lexicographic
-    smallest (max_by over (count, reversed-name ordering) via window)."""
-    counts = named.groupBy(cluster_col, name_col).agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy(cluster_col).orderBy(F.desc("cnt"), F.asc(name_col))
+def canonicalize(named: DataFrame, cluster_col: str, name_col: str, weight_col: str) -> DataFrame:
+    """The one canonical pick: per cluster, the name with the largest
+    summed ``weight_col``, tie → lexicographically smallest name
+    (cluster_names passes its name weights; a literal-1 column makes it
+    the most frequent name). → (cluster_col, cluster_name)."""
+    sums = named.groupBy(cluster_col, name_col).agg(F.sum(weight_col).alias("_sw"))
+    w = Window.partitionBy(cluster_col).orderBy(F.desc("_sw"), F.asc(name_col))
     return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
+        sums.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
         .select(F.col(cluster_col), F.col(name_col).alias("cluster_name"))
     )
 

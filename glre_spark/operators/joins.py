@@ -2,18 +2,19 @@
 
 Scale notes: small dims (region/nation/supplier/part) are broadcast —
 `F.broadcast` hints where Catalyst's stats can't see it; the salted join
-demonstrates explicit hot-key handling (north_rule) and is property-tested
-equal to the plain join; the theta/range join keeps its small side tiny so
-the broadcast-nested-loop stays bounded.
+demonstrates explicit hot-key handling (north_rule) and its oracle is the
+plain join; the theta/range join keeps its small side tiny so the
+broadcast-nested-loop stays bounded. join_asof is the flagship's own
+as-of dedup, pipeline.latest_per_url.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from glre_spark.operators import cents, fround, load, op, staging_dir
 from glre_spark.operators.scans import PAGES_CTE, pages_view
+from glre_spark.pipeline import latest_per_url
 
 
 @op(
@@ -159,15 +160,11 @@ def join_theta_range(spark, sf_dir):
            FROM pages) WHERE rn = 1""",
 )
 def join_asof(spark, sf_dir):
-    """Latest crawl per url — Spark's as-of idiom (no native ASOF join):
-    window + row_number (SURVEY.md §2.3)."""
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"), F.desc("doc_id"))
-    return (
-        pages_view(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("url", "warc_ts", "doc_id")
-    )
+    """Latest crawl per url (SURVEY.md §2.3; Spark has no native ASOF
+    join): pipeline.latest_per_url, the flagship's max_by hash-aggregate
+    over its url exchange. The twin's doc_id tie-break never fires: a url
+    and warc_ts repeat only for doc_ids 28,000 apart."""
+    return latest_per_url(pages_view(spark, sf_dir).select("url", "warc_ts", "doc_id"))
 
 
 @op(

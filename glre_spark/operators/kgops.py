@@ -2,6 +2,12 @@
 large-scale training-data ops (dedup families, ANN similarity) — each with
 a DuckDB twin where SQL-expressible, rows-only otherwise.
 
+The KG-step ops call the library functions the pipeline runs:
+link_alias_broadcast → linking.link_aliases, cc_label_prop →
+linking.connected_components, canonicalize → linking.canonicalize,
+dedup_triples → linking.dedup_triples (over lineitem stand-in triples,
+which the sink ops write too).
+
 The MinHash/LSH and near-dup keeper ops wrap linking's one near-duplicate
 chain; its hash family (one md5-derived 28-bit base hash per shingle +
 integer permutations, SURVEY.md §2.12) is exact in both engines, so the
@@ -16,7 +22,6 @@ are assembled from the matching SQL fragments.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from glre_spark.linking import (
@@ -27,17 +32,22 @@ from glre_spark.linking import (
     MINHASH_B,
     MINHASH_K,
     MINHASH_P,
+    alias_dict_df,
     band_rows,
     candidates,
+    canonicalize,
     connected_components,
+    dedup_triples,
     exact_shingles,
     jaccard,
+    link_aliases,
     minhash,
     near_dup_keepers,
     shingle_hashes,
     with_sets,
 )
 from glre_spark.operators import fround, load, op
+from glre_spark.operators.textops import NORM_SQL
 from glre_spark.session import fan_out
 
 # ---------------------------------------------------------------------------
@@ -60,38 +70,22 @@ def _alias_values_sql() -> str:
     return f"alias_dict(alias_norm, entity_key, canonical_name, typ) AS (VALUES\n    {rows})"
 
 
-_NORM_SQL = (
-    "trim(regexp_replace(regexp_replace(lower({c}), '[^a-z0-9]+', ' ', 'g'),"
-    " ' +', ' ', 'g'))"
-)
-
-
-def _norm_col(c):
-    x = F.lower(c)
-    x = F.regexp_replace(x, "[^a-z0-9]+", " ")
-    return F.trim(F.regexp_replace(x, " +", " "))
-
-
 @op(
     "link_alias_broadcast",
     f"""WITH {_alias_values_sql()},
-       m AS (SELECT n_nationkey, {_NORM_SQL.format(c='n_name')} AS alias_norm FROM nation)
-       SELECT m.n_nationkey, m.alias_norm, a.entity_key, a.canonical_name
+       m AS (SELECT n_nationkey, n_name, {NORM_SQL.format(c='n_name')} AS alias_norm
+             FROM nation)
+       SELECT m.n_nationkey, m.alias_norm,
+              coalesce(a.entity_key, 'S' || md5(m.alias_norm)) AS entity_key,
+              coalesce(a.canonical_name, m.n_name) AS canonical_name
        FROM m LEFT JOIN alias_dict a USING (alias_norm)""",
 )
 def link_alias_broadcast(spark, sf_dir):
-    """Mention names (TPC-H nation names double as LOC mentions) broadcast-
-    joined onto the alias dictionary."""
-    from glre_spark.datagen import alias_rows
-
-    alias_df = spark.createDataFrame(
-        alias_rows(),
-        "alias_norm string, entity_key string, canonical_name string, typ string",
-    ).drop("typ")
-    m = load(spark, sf_dir, "nation").select(
-        "n_nationkey", _norm_col(F.col("n_name")).alias("alias_norm")
-    )
-    return m.join(F.broadcast(alias_df), "alias_norm", "left").select(
+    """linking.link_aliases over mention names (TPC-H nation names double
+    as LOC mentions): broadcast join onto the alias dictionary, unlinked
+    names fall back to a surrogate key and their own name."""
+    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return link_aliases(nation, alias_dict_df(spark), name_col="n_name").select(
         "n_nationkey", "alias_norm", "entity_key", "canonical_name"
     )
 
@@ -238,42 +232,43 @@ def cc_label_prop(spark, sf_dir):
                                    ORDER BY COUNT(*) DESC, c_mktsegment) AS rk
          FROM customer GROUP BY c_nationkey, c_mktsegment) WHERE rk = 1""",
 )
-def canonicalize(spark, sf_dir):
-    """Canonical pick per cluster: most frequent value, tie → lexicographic."""
-    counts = (
-        load(spark, sf_dir, "customer")
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(F.count("*").alias("cnt"))
-    )
-    w = Window.partitionBy("c_nationkey").orderBy(F.desc("cnt"), F.asc("c_mktsegment"))
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter("rk = 1")
-        .select("c_nationkey", F.col("c_mktsegment").alias("canonical"))
+def canonicalize_op(spark, sf_dir):
+    """linking.canonicalize with a literal-1 weight: per cluster the most
+    frequent value, tie → lexicographic."""
+    customer = load(spark, sf_dir, "customer").withColumn("_one", F.lit(1))
+    return canonicalize(customer, "c_nationkey", "c_mktsegment", "_one").select(
+        "c_nationkey", F.col("cluster_name").alias("canonical")
     )
 
 
-@op(
-    "dedup_triples",
-    """SELECT l_partkey AS subj, l_returnflag AS pred, l_suppkey AS obj,
-              ROUND(MAX(l_extendedprice), 2) AS score, CAST(COUNT(*) AS BIGINT) AS n_sources
-       FROM lineitem GROUP BY 1, 2, 3""",
-)
-def dedup_triples_op(spark, sf_dir):
-    """Exact (subj, pred, obj) dedup keeping max score — the triple-sink
-    pre-pass shape (pipeline.dedup_triples) over relational stand-ins."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .groupBy(
-            F.col("l_partkey").alias("subj"),
-            F.col("l_returnflag").alias("pred"),
-            F.col("l_suppkey").alias("obj"),
-        )
-        .agg(
-            F.round(F.max("l_extendedprice"), 2).alias("score"),
-            F.count("*").cast("bigint").alias("n_sources"),
-        )
+# Raw stand-in triples, one per lineitem (the KG sink's input shape), and
+# their exact dedup: linking.dedup_triples keeps the max score, the
+# lexicographically smallest witness url and the row count.
+LINEITEM_TRIPLES_SQL = """
+  SELECT subj, pred, obj, MAX(score) AS score, MIN(url) AS url,
+         CAST(COUNT(*) AS BIGINT) AS n_sources
+  FROM (SELECT CAST(l_partkey AS VARCHAR) AS subj, l_returnflag AS pred,
+               CAST(l_suppkey AS VARCHAR) AS obj,
+               ROUND(l_extendedprice, 2) AS score,
+               'order:' || CAST(l_orderkey AS VARCHAR) AS url
+        FROM lineitem)
+  GROUP BY subj, pred, obj
+"""
+
+
+@op("dedup_triples", LINEITEM_TRIPLES_SQL)
+def lineitem_triples(spark, sf_dir):
+    """linking.dedup_triples over lineitem stand-in triples: (partkey,
+    returnflag, suppkey) as (subj, pred, obj), the price rounded to 2 dp
+    as the score, 'order:' || orderkey as the witness url."""
+    raw = load(spark, sf_dir, "lineitem").select(
+        F.col("l_partkey").cast("string").alias("subj"),
+        F.col("l_returnflag").alias("pred"),
+        F.col("l_suppkey").cast("string").alias("obj"),
+        F.round("l_extendedprice", 2).alias("score"),
+        F.concat(F.lit("order:"), F.col("l_orderkey")).alias("url"),
     )
+    return dedup_triples(raw)
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,11 @@ write-then-rescan verification SURVEY §2.1 prescribes. The summaries are
 SQL-expressible wherever the written content is (sink_triples,
 sink_entities, sink_metrics → full oracle rows; ckpt_manifest runs the
 inference pipeline → rows-only).
+
+sink_triples and sink_entities write kgops.lineitem_triples
+(linking.dedup_triples over lineitem stand-in triples); the entity
+dimension is io.entity_table, the checkpointed run
+lineage.run_with_checkpoints.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from glre_spark.operators import load, op
+from glre_spark.operators.kgops import LINEITEM_TRIPLES_SQL, lineitem_triples
 
 
 def _scratch(prefix: str) -> str:
@@ -23,35 +29,9 @@ def _scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
-def _lineitem_triples(spark, sf_dir):
-    """Relational stand-in triples (same shape the KG sink takes)."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .groupBy(
-            F.col("l_partkey").cast("string").alias("subj"),
-            F.col("l_returnflag").alias("pred"),
-            F.col("l_suppkey").cast("string").alias("obj"),
-        )
-        .agg(
-            F.round(F.max("l_extendedprice"), 2).alias("score"),
-            F.concat(F.lit("order:"), F.min("l_orderkey")).alias("url"),
-            F.count("*").cast("bigint").alias("n_sources"),
-        )
-    )
-
-_LINEITEM_TRIPLES_SQL = """
-  SELECT CAST(l_partkey AS VARCHAR) AS subj, l_returnflag AS pred,
-         CAST(l_suppkey AS VARCHAR) AS obj,
-         ROUND(MAX(l_extendedprice), 2) AS score,
-         concat('order:', MIN(l_orderkey)) AS url,
-         CAST(COUNT(*) AS BIGINT) AS n_sources
-  FROM lineitem GROUP BY 1, 2, 3
-"""
-
-
 @op(
     "sink_triples",
-    f"""WITH t AS ({_LINEITEM_TRIPLES_SQL})
+    f"""WITH t AS ({LINEITEM_TRIPLES_SQL})
        SELECT pred, CAST(COUNT(*) AS BIGINT) AS n_rows,
               CAST(SUM(n_sources) AS BIGINT) AS n_sources
        FROM t GROUP BY pred""",
@@ -65,7 +45,7 @@ def sink_triples_op(spark, sf_dir):
 
     target = _scratch("sink_triples_")
     try:
-        triples = _lineitem_triples(spark, sf_dir)
+        triples = lineitem_triples(spark, sf_dir)
         sink_triples(spark, triples, target)
         sink_triples(spark, triples, target)  # idempotent overwrite
         return (
@@ -83,7 +63,7 @@ def sink_triples_op(spark, sf_dir):
 
 @op(
     "sink_entities",
-    f"""WITH t AS ({_LINEITEM_TRIPLES_SQL}),
+    f"""WITH t AS ({LINEITEM_TRIPLES_SQL}),
        e AS (SELECT subj AS entity, url FROM t
              UNION ALL SELECT obj AS entity, url FROM t)
        SELECT CAST(COUNT(*) AS BIGINT) AS n_entities,
@@ -97,7 +77,7 @@ def sink_entities_op(spark, sf_dir):
 
     target = _scratch("sink_entities_")
     try:
-        sink_entities(spark, entity_table(_lineitem_triples(spark, sf_dir)), target)
+        sink_entities(spark, entity_table(lineitem_triples(spark, sf_dir)), target)
         return (
             spark.read.parquet(target)
             .agg(

@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from glre_spark.operators import fround, load, op
-from glre_spark.operators.textops import _URL_SQL
+from glre_spark.operators.textops import DOMAIN_STATS_SQL, _domain_col, with_avg_chars
 
 _MEM_SEQ = itertools.count()
 
@@ -124,32 +124,13 @@ def dedup_events_stream_op(spark, sf_dir):
         shutil.rmtree(src_dir, ignore_errors=True)
 
 
-@op(
-    "domain_stats_stream",
-    # Same twin as batch domain_stats (URL synthesis shared via
-    # _URL_SQL, no drift): the stream's final complete-mode state must
-    # equal the one-shot batch aggregation exactly (integer sums are
-    # order/batching-independent).
-    f"""WITH u AS (
-  SELECT doc_id, text,
-         regexp_replace(lower(regexp_extract(
-             regexp_replace({_URL_SQL}, '^[A-Za-z]+://', ''), '^[^/?]+')),
-             '^www\\.', '') AS domain
-  FROM documents)
-SELECT domain,
-       COUNT(*) AS n_docs,
-       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-       CAST(SUM(length(text)) AS BIGINT) AS n_chars,
-       CAST(SUM(length(text)) // COUNT(*) AS BIGINT) AS avg_chars
-FROM u GROUP BY domain""",
-)
+@op("domain_stats_stream", DOMAIN_STATS_SQL)  # batch domain_stats' twin
 def domain_stats_stream_op(spark, sf_dir):
     """The incremental form of domain_stats: stage documents as a
     12-file stream (maxFilesPerTrigger=4 -> >=3 micro-batches), run the
     running per-domain aggregation in complete mode, and return the
     final state plus the floor-div average — which must equal the batch
     domain_stats/DuckDB answer exactly."""
-    from glre_spark.operators.textops import _domain_col
     from glre_spark.streaming import (
         domain_running_stats,
         read_documents_stream,
@@ -166,17 +147,8 @@ def domain_stats_stream_op(spark, sf_dir):
             read_documents_stream(spark, src_dir), _domain_col()
         )
         run_stream_to_memory(agg, name, mode="complete")
-        return (
-            spark.table(name)
-            .select(
-                "domain",
-                "n_docs",
-                "n_tokens",
-                "n_chars",
-                F.expr("n_chars div n_docs").cast("bigint").alias("avg_chars"),
-            )
-            .localCheckpoint(eager=True)  # detach from scratch files + memory sink
-        )
+        # detach from scratch files + memory sink
+        return with_avg_chars(spark.table(name)).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
 

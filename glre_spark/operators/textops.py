@@ -3,7 +3,10 @@
 quality scoring, token counting, fingerprinting) over the documents table.
 
 Everything here is pure built-in pyspark.sql.functions (JVM-side,
-whole-stage-codegen) — no UDFs.
+whole-stage-codegen) — no UDFs. str_normalize is linking.norm_name (the
+pipeline's alias normalization), and domain_stats runs
+streaming.domain_running_stats (the stream's per-domain accounting) over
+the batch documents.
 """
 
 from __future__ import annotations
@@ -11,23 +14,25 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from glre_spark.linking import shingle_set
+from glre_spark.linking import norm_name, shingle_set
 from glre_spark.operators import fround, load, op
 from glre_spark.session import fan_out
 
 
-@op(
-    "str_normalize",
-    """SELECT doc_id,
-              trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),
-                   ' +', ' ', 'g')) AS norm_text
-       FROM documents""",
+# linking.norm_name's twin, step for step: lower → runs of non-letter,
+# non-digit chars to one space → collapse whitespace → trim.
+NORM_SQL = (
+    r"trim(regexp_replace(regexp_replace(lower({c}), '[^\p{{L}}\p{{N}}]+', ' ', 'g'),"
+    r" '\s+', ' ', 'g'))"
 )
+
+
+@op("str_normalize", f"SELECT doc_id, {NORM_SQL.format(c='text')} AS norm_text FROM documents")
 def str_normalize(spark, sf_dir):
-    c = F.lower(F.col("text"))
-    c = F.regexp_replace(c, "[^a-z0-9]+", " ")
-    c = F.trim(F.regexp_replace(c, " +", " "))
-    return load(spark, sf_dir, "documents").select("doc_id", c.alias("norm_text"))
+    """linking.norm_name over the documents' text."""
+    return load(spark, sf_dir, "documents").select(
+        "doc_id", norm_name(F.col("text")).alias("norm_text")
+    )
 
 
 @op(
@@ -210,11 +215,31 @@ def json_fns(spark, sf_dir):
 # Training-data text analysis (documents table)
 # ---------------------------------------------------------------------------
 
-# ONE Python source of truth for the stopword set: rendered into every
-# DuckDB twin via _STOPWORDS and splatted into every Spark isin() —
-# desynchronizing the two sides is impossible by construction.
+# ONE Python source of truth for the stopword set, and one stopword
+# count, stopword ratio (over the text's space-split tokens) and quality
+# formula (half length credit up to 500 chars, half stopword ratio), each
+# as a Spark expression and its DuckDB twin fragment.
 STOPWORD_LIST = ("the", "a", "of", "and", "to", "in", "is")
 _STOPWORDS = "(" + ", ".join(f"'{w}'" for w in STOPWORD_LIST) + ")"
+_STOP_COUNT_SQL = "len(list_filter({toks}, t -> t IN " + _STOPWORDS + "))"
+_WS_TOKS_SQL = "string_split(text, ' ')"
+_STOP_RATIO_SQL = (
+    f"CAST({_STOP_COUNT_SQL.format(toks=_WS_TOKS_SQL)} AS DOUBLE) / len({_WS_TOKS_SQL})"
+)
+_QUALITY_SQL = f"LEAST(length(text) / 500.0, 1.0) * 0.5 + {_STOP_RATIO_SQL} * 0.5"
+
+
+def _stop_count(toks):
+    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORD_LIST)))
+
+
+def _stop_ratio():
+    toks = F.split(F.col("text"), " ")
+    return _stop_count(toks).cast("double") / F.size(toks)
+
+
+def _quality():
+    return F.least(F.length("text") / 500.0, F.lit(1.0)) * 0.5 + _stop_ratio() * 0.5
 
 
 @op(
@@ -238,45 +263,29 @@ def text_token_count(spark, sf_dir):
     "text_quality_score",
     f"""SELECT doc_id,
                CAST(length(text) AS BIGINT) AS n_chars_actual,
-               ROUND(CAST(len(list_filter(string_split(text, ' '), t -> t IN {_STOPWORDS}))
-                          AS DOUBLE) / len(string_split(text, ' ')) + 1e-9, 4) + 0 AS stopword_ratio,
-               ROUND(LEAST(length(text) / 500.0, 1.0) * 0.5
-                     + CAST(len(list_filter(string_split(text, ' '), t -> t IN {_STOPWORDS}))
-                            AS DOUBLE) / len(string_split(text, ' ')) * 0.5 + 1e-9, 4) + 0 AS quality
+               ROUND({_STOP_RATIO_SQL} + 1e-9, 4) + 0 AS stopword_ratio,
+               ROUND({_QUALITY_SQL} + 1e-9, 4) + 0 AS quality
         FROM documents""",
 )
 def text_quality_score(spark, sf_dir):
-    toks = F.split(F.col("text"), " ")
-    stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORD_LIST)))
-    ratio = fround(stop.cast("double") / F.size(toks), 4)
-    quality = fround(
-        F.least(F.length("text") / 500.0, F.lit(1.0)) * 0.5
-        + stop.cast("double") / F.size(toks) * 0.5,
-        4,
-    )
     return load(spark, sf_dir, "documents").select(
         "doc_id",
         F.length("text").cast("bigint").alias("n_chars_actual"),
-        ratio.alias("stopword_ratio"),
-        quality.alias("quality"),
+        fround(_stop_ratio(), 4).alias("stopword_ratio"),
+        fround(_quality(), 4).alias("quality"),
     )
 
 
 @op(
     "text_langid",
     f"""SELECT doc_id, lang AS lang_declared,
-               CASE WHEN CAST(len(list_filter(string_split(text, ' '),
-                                              t -> t IN {_STOPWORDS})) AS DOUBLE)
-                         / len(string_split(text, ' ')) > 0.02
-                    THEN 'en' ELSE 'other' END AS lang_pred
+               CASE WHEN {_STOP_RATIO_SQL} > 0.02 THEN 'en' ELSE 'other' END AS lang_pred
         FROM documents""",
 )
 def text_langid(spark, sf_dir):
     """Stopword-density language-ID heuristic (the real corpus carries a
     lang column; this is the detector for when it doesn't)."""
-    toks = F.split(F.col("text"), " ")
-    stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORD_LIST)))
-    pred = F.when(stop.cast("double") / F.size(toks) > 0.02, "en").otherwise("other")
+    pred = F.when(_stop_ratio() > 0.02, "en").otherwise("other")
     return load(spark, sf_dir, "documents").select(
         "doc_id", F.col("lang").alias("lang_declared"), pred.alias("lang_pred")
     )
@@ -827,12 +836,7 @@ def text_unigram_logprob(spark, sf_dir):
     # bucket), then a per-bucket deterministic hash-threshold keep:
     # head 100%, mid 50%, tail 10%. w_x100 = inverse sampling rate ×100
     # (integer importance weight for downstream loss reweighting).
-    f"""WITH q AS (
-  SELECT doc_id,
-         LEAST(length(text) / 500.0, 1.0) * 0.5
-           + CAST(len(list_filter(string_split(text, ' '), t -> t IN {_STOPWORDS}))
-                  AS DOUBLE) / len(string_split(text, ' ')) * 0.5 AS quality
-  FROM documents),
+    f"""WITH q AS (SELECT doc_id, {_QUALITY_SQL} AS quality FROM documents),
 b AS (
   SELECT doc_id,
          CASE WHEN quality >= 0.55 THEN 'head'
@@ -854,14 +858,7 @@ def sample_stratified(spark, sf_dir):
     (split_holdout's idiom: stable under reruns, engines, repartitioning,
     corpus growth). ZERO shuffles at any scale; `sample_frac`'s engine
     RNG can give none of those guarantees."""
-    toks = F.split(F.col("text"), " ")
-    stop = F.size(
-        F.filter(toks, lambda t: t.isin(*STOPWORD_LIST))
-    )
-    quality = (
-        F.least(F.length("text") / 500.0, F.lit(1.0)) * 0.5
-        + stop.cast("double") / F.size(toks) * 0.5
-    )
+    quality = _quality()
     bucket = (
         F.when(quality >= 0.55, "head").when(quality >= 0.40, "mid").otherwise("tail")
     )
@@ -902,12 +899,21 @@ def _domain_col():
     )
 
 
-@op(
-    "domain_stats",
-    # per-domain corpus accounting: CCNet/crawl pipelines budget and
-    # filter per REGISTERED DOMAIN, not per page. Host from the same
-    # deterministic url synthesis as url_normalize_dedup.
-    f"""WITH u AS (
+def with_avg_chars(stats):
+    """streaming.domain_running_stats' per-domain sums plus the average
+    chars per doc as integer floor division (exact, no float-sum hazard)."""
+    return stats.select(
+        "domain", "n_docs", "n_tokens", "n_chars",
+        F.expr("n_chars div n_docs").cast("bigint").alias("avg_chars"),
+    )
+
+
+# per-domain corpus accounting: CCNet/crawl pipelines budget and filter
+# per REGISTERED DOMAIN, not per page. Host from the same deterministic
+# url synthesis as url_normalize_dedup. The twin of domain_stats and of
+# its streaming form (the final complete-mode state equals the one-shot
+# aggregation exactly: integer sums are order/batching-independent).
+DOMAIN_STATS_SQL = f"""WITH u AS (
   SELECT doc_id, text,
          regexp_replace(lower(regexp_extract(
              regexp_replace({_URL_SQL}, '^[A-Za-z]+://', ''), '^[^/?]+')),
@@ -918,32 +924,23 @@ SELECT domain,
        CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
        CAST(SUM(length(text)) AS BIGINT) AS n_chars,
        CAST(SUM(length(text)) // COUNT(*) AS BIGINT) AS avg_chars
-FROM u GROUP BY domain""",
-)
+FROM u GROUP BY domain"""
+
+
+@op("domain_stats", DOMAIN_STATS_SQL)
 def domain_stats(spark, sf_dir):
     """Per-domain corpus accounting (doc/token/char budget per registered
     domain) — what a crawl pipeline ranks and caps BEFORE fetching more
-    of a domain. ONE narrow groupBy on the domain key with map-side
-    combine; avg as integer floor division (exact, no float-sum hazard).
-    At 10^12 docs the domain key is skewed (a few giant hosts) — the agg
-    is partial-combine so the skew collapses map-side; a head-domain
-    salt (join_salted_skew's pattern) is the escalation if a single
-    domain still dominates a reducer."""
-    return (
-        load(spark, sf_dir, "documents")
-        .select(
-            _domain_col().alias("domain"),
-            F.size(F.split("text", " ")).alias("nt"),
-            F.length("text").alias("nc"),
-        )
-        .groupBy("domain")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("nt").cast("bigint").alias("n_tokens"),
-            F.sum("nc").cast("bigint").alias("n_chars"),
-            F.expr("sum(nc) div count(*)").cast("bigint").alias("avg_chars"),
-        )
-    )
+    of a domain: streaming.domain_running_stats over the batch documents,
+    ONE narrow groupBy on the domain key with map-side combine, plus
+    ``with_avg_chars``. At 10^12 docs the domain key is skewed (a few
+    giant hosts) — the agg is partial-combine so the skew collapses
+    map-side; a head-domain salt (join_salted_skew's pattern) is the
+    escalation if a single domain still dominates a reducer."""
+    from glre_spark.streaming import domain_running_stats
+
+    docs = load(spark, sf_dir, "documents")
+    return with_avg_chars(domain_running_stats(docs, _domain_col()))
 
 
 @op(
@@ -960,7 +957,7 @@ m AS (
          CAST(list_sum(list_transform(w, t -> length(t))) AS BIGINT) AS sum_len,
          CAST(len(list_filter(w, t -> regexp_matches(t, '[A-Za-z]')))
               AS BIGINT) AS n_alpha,
-         CAST(len(list_filter(w, t -> t IN {_STOPWORDS})) AS BIGINT) AS n_stop
+         CAST({_STOP_COUNT_SQL.format(toks='w')} AS BIGINT) AS n_stop
   FROM w)
 SELECT doc_id, n_tokens,
        CAST(100 * sum_len // n_tokens AS BIGINT) AS mean_wl_x100,
@@ -993,9 +990,7 @@ def filter_gopher_rules(spark, sf_dir):
         lambda acc, x: acc + x,
     )
     n_alpha = F.size(F.filter("w", lambda t: t.rlike("[A-Za-z]"))).cast("long")
-    n_stop = F.size(
-        F.filter("w", lambda t: t.isin(*STOPWORD_LIST))
-    ).cast("long")
+    n_stop = _stop_count(F.col("w")).cast("long")
     m = d.select(
         "doc_id",
         n.alias("n_tokens"),

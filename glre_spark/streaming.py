@@ -27,29 +27,39 @@ def read_events_stream(
     )
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+# Event-time watermarks: how late an event may arrive and still count
+# (windowed counts), and how long a seen event_id is remembered (dedup).
+WINDOW_WATERMARK = "10 minutes"
+DEDUP_WATERMARK = "30 minutes"
+# Bounded-stream deadlines: a stream still running after them raises
+# instead of leaving a partial sink.
+MEMORY_STREAM_TIMEOUT_S = 300
+BUILD_STREAM_TIMEOUT_S = 600
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Per-5-min event counts with late-data watermark — the streaming twin
     of win_tumbling."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WINDOW_WATERMARK)
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n")
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     """10-min windows sliding every 5 — the streaming twin of
     win_sliding (each event lands in two overlapping windows)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WINDOW_WATERMARK)
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n")
     )
 
 
-def dedup_events_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup (the §2.13 dedup_exact shape as a stream):
     ``dropDuplicatesWithinWatermark`` keeps the first occurrence of each
     event_id and drops re-deliveries arriving within the watermark window
@@ -57,7 +67,7 @@ def dedup_events_stream(events: DataFrame, watermark: str = "30 minutes") -> Dat
     Unlike plain dropDuplicates (state grows forever on a stream), the
     watermark bounds state: dedup keys older than it are evicted, which is
     the only state shape that survives an unbounded crawl at web scale."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", DEDUP_WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -149,14 +159,12 @@ def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    df: DataFrame, name: str, timeout_s: int = 300, mode: str = "complete"
-):
+def run_stream_to_memory(df: DataFrame, name: str, mode: str = "complete"):
     """Drive a bounded file-source stream to completion into an in-memory
     table (test harness; production would writeStream to the lake).
     ``mode="update"`` for arbitrary-stateful queries (complete unsupported).
-    Raises if the stream does not finish within ``timeout_s`` — a partial
-    memory table would silently yield wrong results downstream."""
+    Raises if the stream does not finish within MEMORY_STREAM_TIMEOUT_S —
+    a partial memory table would silently yield wrong results downstream."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -164,10 +172,10 @@ def run_stream_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(MEMORY_STREAM_TIMEOUT_S):
         q.stop()
         raise TimeoutError(
-            f"stream {name!r} still running after {timeout_s}s; "
+            f"stream {name!r} still running after {MEMORY_STREAM_TIMEOUT_S}s; "
             "refusing to read a partial memory sink"
         )
     return q
@@ -249,7 +257,7 @@ def _crawl_key():
 
 
 def stream_build_triples(
-    pages_stream: DataFrame, target: str, timeout_s: int = 600,
+    pages_stream: DataFrame, target: str,
     validate_warc: bool = False,
     drop_near_dups: bool | str = False,
 ) -> None:
@@ -391,9 +399,11 @@ def stream_build_triples(
         .option("checkpointLocation", target + "_ckpt")
         .start()
     )
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(BUILD_STREAM_TIMEOUT_S):
         q.stop()
-        raise TimeoutError(f"streaming KG build still running after {timeout_s}s")
+        raise TimeoutError(
+            f"streaming KG build still running after {BUILD_STREAM_TIMEOUT_S}s"
+        )
 
 
 def _heal_compact_swap(path: str) -> None:

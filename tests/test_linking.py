@@ -12,7 +12,6 @@ from glre_spark.linking import (
     connected_components,
     dedup_triples,
     link_aliases,
-    link_aliases_salted,
     minhash,
     shingle_hashes,
 )
@@ -28,17 +27,6 @@ def _mentions(spark):
     return spark.createDataFrame(rows, "url string, name string")
 
 
-def test_salted_join_equals_plain_join(spark):
-    """join_salted_skew correctness: salting must never change results."""
-    m = _mentions(spark)
-    ad = alias_dict_df(spark)
-    plain = link_aliases(m, ad).select("url", "name", "entity_key", "canonical_name")
-    salted = link_aliases_salted(m, ad, salt_buckets=7).select(
-        "url", "name", "entity_key", "canonical_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_alias_variants_link_to_same_entity(spark):
     m = _mentions(spark)
     linked = link_aliases(m, alias_dict_df(spark))
@@ -50,6 +38,19 @@ def test_alias_variants_link_to_same_entity(spark):
     assert keys["Acme Corp"] == keys["ACME CORPORATION"]
     # unlinked name gets a deterministic surrogate
     assert keys["Unknown Widget Co"].startswith("S")
+
+
+def test_link_alias_broadcast_op_links_every_name(spark, sf_dir):
+    """The registry op is linking.link_aliases: names missing from the
+    dictionary (every nation name) still get the surrogate key and keep
+    their own name, never NULL."""
+    from glre_spark.operators import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    rows = REGISTRY["link_alias_broadcast"][0](spark, sf_dir).collect()
+    assert len(rows) == 25
+    assert all(r.entity_key and r.entity_key.startswith("S") for r in rows)
+    assert all(r.canonical_name for r in rows)
 
 
 def test_linking_is_idempotent(spark):

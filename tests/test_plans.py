@@ -148,6 +148,22 @@ def test_inference_stage_fed_by_one_core_sized_exchange(spark, tmp_path):
     )
 
 
+def test_join_asof_is_the_pipelines_asof(spark):
+    """join_asof runs pipeline.latest_per_url: a max_by aggregate straight
+    over the url exchange (explicit REPARTITION_BY_NUM), no sort-window."""
+    import re
+
+    fn, _ = REGISTRY["join_asof"]
+    tree = _simple_plan(fn(spark, SF_DIR)).splitlines()
+    assert not any("Window" in l for l in tree)
+    agg = next(i for i, l in enumerate(tree) if "functions=[max_by(" in l)
+    exchanges = [l for l in tree[agg:] if "Exchange" in l]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(
+        r"Exchange hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM", exchanges[0]
+    ), exchanges[0]
+
+
 def test_stage_width_rule():
     """session.stage_width: one task per core unless the byte estimate
     needs more partitions of the advisory size, capped at the shuffle

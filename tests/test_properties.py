@@ -1,5 +1,5 @@
 """Property-based tests (SURVEY.md §5.2.5) — pure-Python layers, no Spark.
-Spark-level properties (salted≡plain, resume≡single-run) live in
+Spark-level properties (linking idempotence, resume≡single-run) live in
 test_linking.py / test_resume.py."""
 
 from __future__ import annotations
