@@ -81,7 +81,7 @@ def main() -> None:
     names = sys.argv[1:] or HEADLINE
     # min of N runs per op: this sandbox VM bursts 3-10× slower under
     # hypervisor steal on identical warm runs; min is the least-contended
-    # estimate (same protocol as bench_scaling).
+    # estimate.
     # min-of-3: this host's steal storms inflate single runs 3-30×
     # (measured: the same suite 24.2 s clean vs 63.4 s mid-storm)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))

@@ -1,712 +1,99 @@
-"""Two-cluster-size scaling benchmark driver (SURVEY.md M6 / §4.4).
+"""Throughput scaling of the flagship pipeline: perfbench's kg_build
+workload at two CPU counts.
 
-Runs three jobs on identical inputs at local[N] and local[4N] in fresh
-JVMs, computes efficiency = rate_4N / (4 · rate_N) per job, and writes
-BENCH/BASELINE.md:
+    python bench_scaling.py
 
-- flagship  — the north-rule pipeline (extract + GLRE inference + linking
-              + dedup): the metric the rule names (triples/sec).
-- relational — scan/shuffle-bound TF/DF/window job (zero Python stages):
-              the engine's shuffle path.
-- sigscan   — ALU-dense MinHash-signature scan (zero Python, ~no shuffle):
-              the engine's embarrassingly-parallel path; tracks the
-              hardware's pure-CPU ceiling.
+Each run is ``perfbench/run.py --workload kg_build --seed 42 --trace 0`` in
+a child process pinned with ``os.sched_setaffinity``; perfbench sizes
+``local[n]`` from that affinity set. The wide level is this process's
+whole affinity set, the narrow level its first ``max(1, n // 4)`` CPUs.
+The levels run in ``ROUNDS`` rounds and take turns going first, so a
+drift in the host's speed hits both alike. A run that is not correct or
+has a failed iteration stops the script.
 
-Noise protocol: this sandbox VM is hypervisor-overcommitted — identical
-warm runs vary 3-10× in bursts, and the 4→16-core PURE-CPU ceiling itself
-oscillates (measured 0.67-0.88 within one hour). Mitigations: (a) each
-level takes min of 3 warm runs in a fresh JVM, (b) the N and 4N sessions
-are INTERLEAVED over --rounds rounds (N,4N,N,4N,…) and the min per level
-is taken across rounds, so minute-scale contention hits both levels alike,
-(c) a pure-python multiprocessing burn test measures the hardware's own
-N→4N ceiling in the same session and is reported alongside (the honest
-denominator for "does the ENGINE add scaling overhead").
+Writes ``BENCH/scaling.json``: every run's end-to-end metrics, the median
+of each metric per level, and
 
-Usage: python bench_scaling.py [--n-docs 25000] [--n 4] [--rounds 2]
+    efficiency = median docs_per_s(wide)
+                 / (wide_cpus / narrow_cpus × median docs_per_s(narrow))
 """
 
 from __future__ import annotations
 
-import argparse
 import json
-import multiprocessing as mp
+import os
 import pathlib
+import statistics
 import subprocess
 import sys
-import time
 
-REPO = pathlib.Path(__file__).parent
-
-PAGES_PATH = "/dev/shm/glre_bench_pages"
-# Bump when a job's MEASURED CODE changes semantics/shape, so cached bests
-# from the old code can't win the min-merge and mask (or fake) a change.
-# relational rev 2 (r5): switched to the xxhash64-slimmed TF exchange.
-# relational rev 3 (r5): dropped the vocab min(tok) re-attach (a string
-# agg that collapsed asymmetrically at 4N) and narrowed the url dict to a
-# broadcast semi-filtered lookup; token ids stay hashed in the output.
-# flagship rev 2 (r5): the GLRE pair-stage kernel rewrite (net.py — 2.7×
-# less Python CPU) changes the job's stage weighting, so pre-r5 bests
-# must not min-merge with post-r5 runs.
-# flagship rev 3 (r6): AQE byte-based coalescing disabled for the
-# flagship session (the inference exchange kept its static 64 fine-
-# grained tasks instead of ≈cores giant ones — the 4N level was paying a
-# two-wave quantization penalty, 19 tasks on 16 cores). Bests measured
-# under the old scheduling must not min-merge with the new.
-JOB_REVS = {"relational": 3, "flagship": 3}
-
-REL_PAGES_PATH = "/dev/shm/glre_bench_pages_rel"  # 8× docs: the relational
-# job is far cheaper per doc than inference (and r5's fixed-width
-# exchange made it ~35% cheaper again); a bigger corpus keeps the
-# measured window well above per-job fixed stage overheads at 4N cores —
-# at 4× docs the 16-core wall had shrunk to ~2.8 s, where ~0.5 s of
-# scheduling floor alone caps measurable efficiency near 0.6
+REPO = pathlib.Path(__file__).resolve().parent
+OUT = REPO / "BENCH" / "scaling.json"
+ROUNDS = 4
+COMMAND = ["perfbench/run.py", "--workload", "kg_build", "--seed", "42", "--trace", "0"]
 
 
-def _sub(args: list[str]) -> dict:
+def levels(cpus: set[int]) -> dict[str, list[int]]:
+    cpus = sorted(cpus)
+    return {"narrow": cpus[: max(1, len(cpus) // 4)], "wide": cpus}
+
+
+def run_pinned(cpus: list[int]) -> str:
+    """One perfbench run on ``cpus``; returns its result line (the last
+    line of its stdout)."""
     out = subprocess.run(
-        [sys.executable, "-m", "glre_spark.bench_scaling", *args],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        check=True,
+        [sys.executable, *COMMAND], cwd=REPO, check=True, text=True,
+        stdout=subprocess.PIPE, preexec_fn=lambda: os.sched_setaffinity(0, cpus),
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    return out.stdout.strip().splitlines()[-1]
 
 
-def run(cores: int, n_docs: int, job: str, stages: bool = False) -> dict:
-    pages = REL_PAGES_PATH if job == "relational" else PAGES_PATH
-    return _sub(
-        ["--cores", str(cores), "--n-docs", str(n_docs), "--pages", pages,
-         "--job", job, *(["--stages"] if stages else [])]
-    )
+def check(level: str, cpus: int, line: str) -> dict:
+    """One run's record from its perfbench result line. Raises ValueError
+    on a run that is not correct or has a failed iteration: its timing
+    does not measure working code."""
+    res = json.loads(line)
+    if not res["correct"] or res["failed"] > 0:
+        raise ValueError(f"{level} run on {cpus} CPUs failed its check: {line}")
+    metrics = {k: v["value"] for k, v in res["metrics"].items()}
+    return {"level": level, "cpus": cpus, "attempted": res["attempted"], "metrics": metrics}
 
 
-def _burn(n: int) -> int:
-    x = 0
-    for i in range(n):
-        x += i * i
-    return x
-
-
-def _npburn(n: int) -> float:
-    """Alloc-churn small-matmul burn: the Python inference stage's compute
-    profile (fresh arrays each step + float32 GEMM + reduction) — unlike
-    the pure-ALU _burn, this one rides the shared memory bus, so its N→4N
-    ratio is the fair ceiling for the flagship's Arrow/numpy stage."""
-    import numpy as np
-
-    rng = np.random.default_rng(1)
-    w = rng.standard_normal((96, 96)).astype(np.float32)
-    x = 0.0
-    for _ in range(n):
-        m = rng.standard_normal((200, 96)).astype(np.float32)
-        x += float(np.maximum(m @ w, 0).sum())
-    return x
-
-
-def hw_ceiling_numpy(n: int, reps: int = 3, work: int = 1200) -> float:
-    def rate(procs: int) -> float:
-        best = 0.0
-        for _ in range(reps):
-            t0 = time.time()
-            with mp.Pool(procs) as p:
-                p.map(_npburn, [work] * procs * 4)
-            best = max(best, procs * 4 * work / (time.time() - t0))
-        return best
-
-    return rate(n * 4) / (4 * rate(n))
-
-
-def hw_ceiling(n: int, reps: int = 3, work: int = 4_000_000) -> float:
-    """Pure-CPU multiprocessing rate ratio: the hardware's own N→4N
-    efficiency in THIS session (no Spark, no shuffle, no memory traffic)."""
-
-    def rate(procs: int) -> float:
-        best = 0.0
-        for _ in range(reps):
-            t0 = time.time()
-            with mp.Pool(procs) as p:
-                p.map(_burn, [work] * procs * 4)
-            best = max(best, procs * 4 * work / (time.time() - t0))
-        return best
-
-    return rate(n * 4) / (4 * rate(n))
-
-
-def append_numpy_ceiling(n: int, reps: int = 3) -> int:
-    """Measure the numpy-kernel (alloc-churn matmul) N→4N ratio a few
-    times and append the RANGE to BENCH/BASELINE.md. Measured values on
-    this host swing 0.26–1.58 within minutes (>1 = the 16-proc pool drew
-    a less-stolen slice than the 4-proc pool), so this is reported as
-    noise evidence, not as a denominator."""
-    vals = sorted(round(hw_ceiling_numpy(n), 3) for _ in range(reps))
-    md_path = REPO / "BENCH" / "BASELINE.md"
-    md = md_path.read_text()
-    marker = "## numpy-kernel burn (noise evidence, not a denominator)"
-    section = f"""{marker}
-
-Alloc-churn float32 matmul burn (multiprocessing, no Spark — the compute
-profile of the fused Arrow inference stage), {n}→{n * 4}-core ratio,
-{len(vals)} back-to-back measurements: **{vals}**. A ratio above 1.0 means
-the {n * 4}-proc pool happened to draw a less-stolen CPU slice than the
-{n}-proc pool moments earlier — i.e. on this hypervisor the numpy-kernel
-profile's scaling measurement is dominated by steal, not by the kernel.
-It therefore CANNOT serve as a per-stage denominator; the pure-ALU
-ceiling plus the interleaved-min protocol above remain the honest basis.
-The flagship's own 0.8+ raw efficiency (its wall dominated by exactly
-this kernel profile) is itself the strongest evidence that the Python
-stage scales: it could not reach 0.8 if the kernel plateaued at the low
-end of the burn range.
-"""
-    if marker in md:
-        # replace only THIS marker section's span (up to the next '## '
-        # heading, if any) — sections appended after it by other tooling
-        # must survive
-        start = md.index(marker)
-        nxt = md.find("\n## ", start + len(marker))
-        tail = md[nxt + 1 :] if nxt != -1 else ""
-        md = md[:start] + section + tail
-    else:
-        md += "\n" + section
-    md_path.write_text(md)
-    print(json.dumps({"hw_ceiling_numpy_range": vals}))
-    return 0
-
-
-def _headings(md: str) -> list[str]:
-    return [ln.strip() for ln in md.splitlines() if ln.startswith("## ")]
-
-
-def _preserve_extra_sections(new_md: str, old_md: str) -> str:
-    """Carry over every `## `-headed section of old_md whose heading the
-    regenerated new_md does not itself produce (the marker-owned sections
-    written by append_numpy_ceiling / memory_headroom_report /
-    dup_bench_report, and anything future tooling appends). Without this,
-    a full `main()` rewrite silently deletes them (VERDICT r5 wrong #1)."""
-    new_heads = set(_headings(new_md))
-    out = new_md if new_md.endswith("\n") else new_md + "\n"
-    carried: set[str] = set()
-    for head in _headings(old_md):
-        if head in new_heads or head in carried:
-            continue  # template-owned, or a duplicated heading: carry once
-        carried.add(head)
-        # anchor to a LINE START — a raw index() would match the heading
-        # text quoted mid-paragraph and carry a garbled slice
-        start = 0 if old_md.startswith(head) else old_md.index("\n" + head) + 1
-        nxt = old_md.find("\n## ", start + len(head))
-        section = old_md[start:] if nxt == -1 else old_md[start : nxt + 1]
-        out += "\n" + section
-    return out
-
-
-def _replace_section(marker: str, section: str) -> None:
-    """Replace (or append) a marker-headed section of BENCH/BASELINE.md,
-    preserving everything else — the append_numpy_ceiling pattern."""
-    md_path = REPO / "BENCH" / "BASELINE.md"
-    md = md_path.read_text()
-    if marker in md:
-        start = md.index(marker)
-        nxt = md.find("\n## ", start + len(marker))
-        tail = md[nxt + 1 :] if nxt != -1 else ""
-        md = md[:start] + section + tail
-    else:
-        md += "\n" + section
-    md_path.write_text(md)
-
-
-def memory_headroom_report(n_docs: int, scales: tuple[int, ...] = (1, 4, 16)) -> int:
-    """VERDICT r4 #7 (+ r5 #8): run the flagship at 1×/4×/16× docs on
-    local[16], record peak executor memory / spill / final-AQE-plan
-    operator multiset, and write the comparison into BENCH/BASELINE.md —
-    three points make a CURVE for the 100× extrapolation, not a ratio."""
-    pts = [
-        _sub(["--memory-headroom", "--cores", "16", "--n-docs", str(n_docs * s)])
-        for s in scales
-    ]
-    lo = pts[0]
-    same_shape = all(p["plan_ops"] == lo["plan_ops"] for p in pts[1:])
-    marker = "## Memory headroom at 4x/16x docs (the in-sandbox 100x proxy)"
-    rows = "\n".join(
-        f"| {p['n_docs']} | {p['wall_s']} | {p['triples']} | {p['peak_heap_mb']} "
-        f"| {p['peak_exec_mem_mb']} | {p['peak_python_mb']} "
-        f"| {p['spill_mem_mb']} / {p['spill_disk_mb']} |"
-        for p in pts
-    )
-    scale_txt = " / ".join(str(p["n_docs"]) for p in pts)
-    top = scales[-1]
-    section = f"""{marker}
-
-Flagship at local[16], {scale_txt} docs ({"×/".join(str(s) for s in scales)}×),
-fresh JVM each, measured run after warmup-by-first-action:
-
-| docs | wall_s | triples | peak JVM heap MB | peak exec mem MB | peak Python RSS MB | spill (mem/disk MB) |
-| --- | --- | --- | --- | --- | --- | --- |
-{rows}
-
-Zero spill at every scale and sub-linear peak-memory growth across the
-{top}× span mean the fat-row (html) exchange and the Arrow inference
-stage stay within executor memory as the corpus grows with the partition
-layout FIXED (64 splits / 64 shuffle partitions — per-task input grows
-{top}×). Final adaptive plan operator multiset identical across scales:
-**{same_shape}** (AQE re-plans partition counts, not plan shape). On a
-real cluster the larger corpus would instead arrive as proportionally
-more same-sized partitions, which is strictly easier per task — so this
-fixed-layout curve upper-bounds the per-task memory pressure of a 100×
-scale-up with a sane layout.
-"""
-    _replace_section(marker, section)
-    print(json.dumps({"points": pts, "plan_shape_stable": same_shape}))
-    return 0
-
-
-def dup_bench_report(n_docs: int) -> int:
-    """VERDICT r4 #3: duplicate-heavy corpus A/B of
-    build_triples(drop_near_dups=True) → section in BENCH/BASELINE.md."""
-    res = _sub(["--dup-bench", "--cores", "16", "--n-docs", str(n_docs)])
-    base, drop = res["baseline"], res["drop_near_dups"]
-    marker = "## Dedup-before-inference on a duplicate-heavy corpus"
-    per_doc_inf = base["wall_s"] / res["n_corpus_docs"] * 1000
-    keeper_cost = drop["wall_s"] - base["wall_s"]
-    section = f"""{marker}
-
-`build_triples(drop_near_dups=True)` composes the near-dup keeper
-decision (MinHash → capped-LSH → bottom-256 KMV-sketch Jaccard ≥ 0.8 →
-connected components) BELOW the inference stage as a left-semi join
-(plan-asserted in tests/test_plans.py). A/B on {res['n_corpus_docs']}
-docs ({res['n_docs']} originals + byte-identical mirrors of half of
-them) at local[16], min of 3:
-
-| variant | wall_s | triples |
-| --- | --- | --- |
-| baseline (infer everything) | {base['wall_s']} | {base['triples']} |
-| drop_near_dups=True | {drop['wall_s']} | {drop['triples']} |
-
-Triple outputs are identical — the global (subj, pred, obj) dedup already
-collapses what mirrored pages produce — so the flag is purely a compute
-trade: spend a keeper pass (~{keeper_cost:.0f} s here ≈
-{keeper_cost / res['n_corpus_docs'] * 1000:.1f} ms/doc) to shrink the
-corpus entering the Python stage. With the r5-optimized stand-in kernel
-at ~{per_doc_inf:.2f} ms/doc end-to-end, dedup does NOT pay on this
-corpus — the honest crossover: it pays when per-doc inference cost
-exceeds per-doc keeper cost ÷ dup_fraction, i.e. for any real encoder
-(BERT-class GLRE ≈ 30-100 ms/doc) at web-crawl duplication rates, and
-that is the regime the flag exists for. The keeper pass itself is the
-scale-shaped variant (single shingle-hash pass, bottom-k sketch verify —
-no full-shingle-array shuffles).
-"""
-    _replace_section(marker, section)
-    print(json.dumps(res))
-    return 0
-
-
-def domain_skew_report(n_rows: int = 100_000_000) -> int:
-    """Measured evidence for the SURVEY §2.13 domain_stats claim that
-    head-domain skew collapses in the partial aggregation: identical
-    payload aggregated by a uniform 5000-domain key vs a 90%-hot key,
-    interleaved in one 16-core JVM, min wall per mode + the map-side
-    combiner output (shuffle write records) per mode."""
-    pt = _sub(["--domain-skew", "--cores", "16", "--n-docs", str(n_rows)])
-    u, k = pt["uniform"], pt["skew"]
-    hot_rows = int(n_rows * 0.9)
-    marker = "## Head-domain skew probe (domain_stats aggregation shape)"
-    section = f"""{marker}
-
-{pt['n_rows']:,} rows aggregated by a uniform key (5000 domains) vs a
-90%-hot key (one domain owns {hot_rows:,} rows), local[16], interleaved
-U,S,U,S after warmup, min per mode:
-
-| key distribution | wall_s (min) | walls | groups | combiner rows shuffled |
-| --- | --- | --- | --- | --- |
-| uniform (5000 domains) | {u['wall_s']} | {u['walls']} | {u['groups']} | {u['shuf_write_recs']:,} |
-| 90% one domain | {k['wall_s']} | {k['walls']} | {k['groups']} | {k['shuf_write_recs']:,} |
-
-The hot domain's {hot_rows:,} rows cross the exchange as ~64 combiner
-records (one per map partition): the skewed case shuffles {u['shuf_write_recs'] // max(k['shuf_write_recs'], 1)}×
-FEWER records than the uniform case and its wall matches — the reducer
-that owns the hot domain receives 64 partial rows, not {hot_rows:,}.
-This is why domain_stats needs no salting at any skew a crawl frontier
-can produce: partial aggregation makes the hot-key volume proportional
-to map partitions, not corpus rows. (Salting remains the documented
-escalation for HIGH-CARDINALITY hot keys under joins — see
-join_salted_skew — where no combiner exists to collapse them.)
-"""
-    _replace_section(marker, section)
-    print(json.dumps(pt))
-    return 0
+def summarize(runs: list[dict]) -> dict:
+    """The scaling record: every run, the median of each metric per level
+    and the efficiency."""
+    by_level: dict[str, list[dict]] = {}
+    cpus = {}
+    for run in runs:
+        by_level.setdefault(run["level"], []).append(run["metrics"])
+        cpus[run["level"]] = run["cpus"]
+    median = {
+        level: {k: statistics.median(m[k] for m in ms) for k in ms[0]}
+        for level, ms in by_level.items()
+    }
+    ratio = cpus["wide"] / cpus["narrow"]
+    return {
+        "command": COMMAND,
+        "cpus": cpus,
+        "runs": runs,
+        "median": median,
+        "efficiency": median["wide"]["docs_per_s"] / (ratio * median["narrow"]["docs_per_s"]),
+    }
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--numpy-ceiling-only", action="store_true",
-                    help="measure the numpy-kernel ceiling and append to BENCH/BASELINE.md")
-    # 50k since r5: the kernel rewrite made the flagship ~1.8× faster, so
-    # at 25k docs the 4N wall fell to ~7.5 s where ~1.5 s of per-run fixed
-    # overhead (session/stage floor) weighs 20% and caps measured
-    # efficiency — the same Amdahl adjustment the relational corpus got.
-    ap.add_argument("--n-docs", type=int, default=50_000)
-    # N=4 default: hypervisor overcommit above ~16-20 vCPUs makes 8→32
-    # conflate host contention with job scaling; 4→16 is the honest
-    # N-vs-4N this hardware can express (see hw_ceiling).
-    ap.add_argument("--n", type=int, default=4, help="small cluster size N (large = 4N)")
-    ap.add_argument("--rounds", type=int, default=2,
-                    help="interleaved N/4N session pairs per job")
-    ap.add_argument("--jobs", default="flagship,relational,sigscan",
-                    help="comma list; other jobs keep their cached best "
-                         "(BENCH/results.json) — lets a host-steal-ruined "
-                         "job be re-run without redoing the whole protocol")
-    ap.add_argument("--memory-headroom-only", action="store_true",
-                    help="run the 1x/4x-docs peak-memory probe and update "
-                         "its BENCH/BASELINE.md section")
-    ap.add_argument("--domain-skew-only", action="store_true",
-                    help="run the domain_stats hot-key probe and update its section")
-    ap.add_argument("--skew-rows", type=int, default=100_000_000,
-                    help="row count for --domain-skew-only (its own knob — "
-                         "the --n-docs default trap dup-bench hit in r5)")
-    ap.add_argument("--dup-bench-only", action="store_true",
-                    help="run the duplicate-heavy drop_near_dups A/B and "
-                         "update its BENCH/BASELINE.md section")
-    # Own argument (ADVICE r5): the A/B used to piggyback on --n-docs with
-    # a guard keyed on the OLD 25k default, so moving the default to 50k
-    # silently doubled a default dup-bench invocation's corpus.
-    ap.add_argument("--dup-docs", type=int, default=20_000,
-                    help="original-doc count for --dup-bench-only "
-                         "(corpus = 1.5x this after mirroring)")
-    args = ap.parse_args()
-
-    if args.numpy_ceiling_only:
-        return append_numpy_ceiling(args.n)
-    if args.memory_headroom_only:
-        return memory_headroom_report(args.n_docs)
-    if args.domain_skew_only:
-        return domain_skew_report(args.skew_rows)
-    if args.dup_bench_only:
-        return dup_bench_report(args.dup_docs)
-
-    cache_path = REPO / "BENCH" / "results.json"
-    cache = json.loads(cache_path.read_text()) if cache_path.exists() else {}
-
-    n_rel = args.n_docs * 4  # 200k at the 50k default — the relational
-    # job needs the bigger corpus for the same Amdahl reason (see
-    # REL_PAGES_PATH note); ×4 of the r5 default keeps it at the size its
-    # cached per-level bests were measured at
-    jobs = {"flagship": args.n_docs, "relational": n_rel, "sigscan": args.n_docs}
-    todo = [j.strip() for j in args.jobs.split(",") if j.strip()]
-    # only materialize the corpora the re-run jobs will actually read
-    if {"flagship", "sigscan"} & set(todo):
-        _sub(["--materialize", PAGES_PATH, "--n-docs", str(args.n_docs)])
-    if "relational" in todo:
-        _sub(["--materialize", REL_PAGES_PATH, "--n-docs", str(n_rel)])
-
-    hw = hw_ceiling(args.n)
-
-    results: dict[str, dict] = {}
-    for job, nd in jobs.items():
-        # min across THIS session's interleaved rounds AND any cached prior
-        # session (both levels draw from the same session set — fair).
-        # A cached entry only participates if it measured the SAME workload
-        # at the SAME cluster sizes — otherwise a stale 5k-doc or different-N
-        # best would win the min and mask regressions.
-        prior = cache.get(job)
-        if prior and not (
-            prior["lo"].get("n_docs") == nd
-            and prior["hi"].get("n_docs") == nd
-            and prior["lo"].get("cores") == args.n
-            and prior["hi"].get("cores") == args.n * 4
-            and prior["lo"].get("job") == job
-            and prior["hi"].get("job") == job
-            and prior.get("rev", 1) == JOB_REVS.get(job, 1)
-        ):
-            print(f"# discarding incompatible cached {job} result", file=sys.stderr)
-            prior = None
-        lo_best = prior["lo"] if prior else None
-        hi_best = prior["hi"] if prior else None
-        # latest instrumented dumps survive independently of the min-merge
-        lo_stages = prior.get("lo_stages") if prior else None
-        hi_stages = prior.get("hi_stages") if prior else None
-        for _ in range(args.rounds if job in todo else 0):
-            lo = run(args.n, nd, job, stages=(job in ("flagship", "relational")))
-            hi = run(args.n * 4, nd, job, stages=(job in ("flagship", "relational")))
-            lo_stages = lo.get("stages") or lo_stages
-            hi_stages = hi.get("stages") or hi_stages
-            if lo_best is None or lo["wall_s"] < lo_best["wall_s"]:
-                lo_best = lo
-            if hi_best is None or hi["wall_s"] < hi_best["wall_s"]:
-                hi_best = hi
-        if lo_best is None:
-            raise SystemExit(f"no cached or fresh result for job {job}")
-        eff = hi_best["triples_per_sec"] / (4 * lo_best["triples_per_sec"])
-        results[job] = {
-            "lo": lo_best,
-            "hi": hi_best,
-            "eff": round(eff, 3),
-            "rev": JOB_REVS.get(job, 1),
-            **({"lo_stages": lo_stages} if lo_stages else {}),
-            **({"hi_stages": hi_stages} if hi_stages else {}),
-        }
-
-    cache_path.parent.mkdir(exist_ok=True)
-    cache_path.write_text(json.dumps(results, indent=1))
-
-    f, r, s = results["flagship"], results["relational"], results["sigscan"]
-
-    def stage_rows(d: dict, side: str) -> str:
-        # prefer the job's LATEST instrumented dump (persisted separately —
-        # the min-wall best may be a cached run from a session without
-        # instrumentation, or carry a steal-polluted one-off dump)
-        stages = d.get(f"{side}_stages") or d[side].get("stages") or []
-        rows = [x for x in stages if "stage_id" in x]
-        cores = d[side]["cores"]
-        if not rows:
-            return (
-                f"`local[{cores}]` — no instrumented run available "
-                "(cached from a pre-instrumentation session); re-run with "
-                "--jobs <job> to regenerate."
-            )
-        dump_wall = next(
-            (x["wall_s"] for x in stages if x.get("name") == "TOTAL_dump_run"),
-            None,
-        )
-        out = [
-            f"`local[{cores}]` — latest instrumented extra run, wall {dump_wall}s "
-            "(task-time in ms, summed over tasks):",
-            "",
-            "| stage | tasks | run_ms | cpu_ms | blocked_ms | gc_ms | shufR MB | shufW MB | shufW recs | spill MB |",
-            "| --- | --- | --- | --- | --- | --- | --- | --- | --- | --- |",
-        ]
-        for x in rows:
-            out.append(
-                f"| {x['stage_id']} | {x['tasks']} | {x['run_ms']} | {x['cpu_ms']} |"
-                f" {x['run_ms'] - x['cpu_ms']} | {x.get('gc_ms', '–')} |"
-                f" {x['shuf_read_mb']} | {x['shuf_write_mb']} |"
-                f" {x.get('shuf_write_recs', '–')} |"
-                f" {x.get('spill_mem_mb', '–')} |"
-            )
-        return "\n".join(out)
-
-    def row(tag: str, d: dict) -> str:
-        lo, hi = d["lo"], d["hi"]
-        return (
-            f"| {tag} N | {lo['cores']} | {lo['wall_s']} | {lo['walls_all']} |"
-            f" {lo['docs_per_sec']} | {lo['triples_per_sec']} |\n"
-            f"| {tag} 4N | {hi['cores']} | {hi['wall_s']} | {hi['walls_all']} |"
-            f" {hi['docs_per_sec']} | {hi['triples_per_sec']} |"
-        )
-
-    md = f"""# BENCH — scaling efficiency (N vs 4N)
-
-Protocol (BASELINE.md): identical job on identical input at local[{args.n}]
-vs local[{args.n * 4}], fresh JVM per level, same-shape warmup excluded, min
-of 3 warm runs per session, N/4N sessions INTERLEAVED over {args.rounds}
-rounds (min across rounds) so minute-scale host contention hits both levels
-alike; per-job bests additionally persist in BENCH/results.json and
-`--jobs` re-runs merge by min-wall per level (both levels always draw
-from the same session set). {args.n_docs} webpage-length docs (12-28 sentences) for flagship +
-sigscan, {n_rel} for the relational job; 64 input splits and 64 shuffle
-partitions at BOTH levels, so the logical plan and exchange structure are
-cluster-size independent (the real-cluster requirement). For the
-relational/sigscan jobs AQE still coalesces each exchange to ≈cores
-post-shuffle tasks at runtime — appropriate for byte-cost stages — which
-is why their post-shuffle task counts (and map-side partial-agg collapse
-ratios) legitimately differ between levels in the stage tables below.
-The FLAGSHIP session (rev 3, r6) disables byte-based coalescing: its
-dominant stage is the Arrow inference whose cost is CPU per doc, and
-coalescing to ≈cores giant tasks put a two-wave quantization penalty on
-the wide level only (19 tasks / 16 cores measured — 21 s where balanced
-64-task packing gives ~16 s) while the narrow level coalesced to exactly
-4 tasks and paid nothing — a structural anti-scaling artifact, not
-contention. With the static 64 fine-grained partitions both levels pack
-waves evenly (the general rule: Python-heavy stages want tasks-per-core
-≥ 2, never bytes-targeted sizing). Shuffle dirs on tmpfs; 1 BLAS thread
-per Python worker (session.py).
-
-**Hardware ceiling measured in this session: pure-CPU (multiprocessing,
-no Spark) {args.n}→{args.n * 4}-core efficiency = {hw:.3f}.** This VM is
-hypervisor-overcommitted; identical warm runs burst 3-10× slower, and the
-ceiling itself oscillates (0.67-0.88 observed within one hour). No job can
-scale better than this number on this box — efficiencies below are
-reported raw AND normalized by it.
-
-| job / level | cores | wall_s (min) | all runs (last session) | docs/sec | out rows/sec |
-| --- | --- | --- | --- | --- | --- |
-{row("flagship", f)}
-{row("relational", r)}
-{row("sigscan", s)}
-
-| job | what it isolates | raw eff | eff / hw ceiling |
-| --- | --- | --- | --- |
-| flagship | north-rule pipeline (triples/sec) | **{f['eff']:.3f}** | {f['eff'] / hw:.3f} |
-| relational | shuffle path (TF/DF/window, zero Python) | **{r['eff']:.3f}** | {r['eff'] / hw:.3f} |
-| sigscan | embarrassingly-parallel scan (MinHash sigs) | **{s['eff']:.3f}** | {s['eff'] / hw:.3f} |
-
-Target: ≥ 0.8 (north rule). Output rows match between levels per job:
-flagship {f['lo']['triples']}/{f['hi']['triples']}, relational
-{r['lo']['triples']}/{r['hi']['triples']}, sigscan
-{s['lo']['triples']}/{s['hi']['triples']}.
-
-Interpretation: on a real cluster N→4N adds machines (CPUs, memory
-channels, disks all ×4); on this single overcommitted VM it only adds
-threads sharing one memory bus and a stolen CPU budget — the burn-test
-ceiling is the fair bar for "does the ENGINE add scaling overhead".
-Shuffle-heavy stages additionally contend on the shared bus (tmpfs shuffle
-+ hash aggregation are memory-bound), which a real cluster's per-node
-buses would not.
-
-History: r2 flagship raw eff was 0.396 with a fat-row `row_number()`
-sort-window as the as-of dedup; replacing it with a
-`groupBy(url).agg(max_by(...))` hash aggregation (map-side combine before
-the url exchange) took r3 to 0.811 raw (1.00× that session's pure-CPU
-ceiling). r4 added the relational per-stage breakdown below and resolved
-the r3 stage-(4) cpu anomaly (steal artifact, see flagship section).
-r4 protocol note: BOTH flagship level bests improved this round on the
-same code (N 43.6 → 40.27 s, 4N 13.44 → 12.52 s — less-stolen sessions),
-and the raw ratio passed through 0.749 mid-session while only the N side
-had improved. Min-merging keeps this honest in both directions: a faster
-N lowers the ratio exactly as a faster 4N raises it; the final 0.8+ raw
-stands on best-ever walls at both levels.
-r5 bumped the protocol (rev 2 kernel + 50k docs), discarding r4's cached
-bests; the only rev-2 session of that round was heavily contended and
-recorded 0.463 raw — a measurement debt, not an engine change (VERDICT
-r5). r6 found the structural half of that number: AQE's byte-based
-coalescing gave the inference stage ≈cores giant tasks, a two-wave
-quantization penalty ONLY at 4N (19 tasks / 16 cores). Flagship rev 3
-pins the static 64 fine-grained partitions for that session (see
-protocol note above); the first rev-3 session — itself contended
-(ceiling 0.749, all N runs uniformly ~25% over rev-2's) — still took
-the 4N best 21.0 → 16.5 s and landed 0.801 raw. Two further sessions
-(ceilings 0.902 / 0.853) settled the min-merge at N 46.84 / 4N 13.95 =
-0.839 raw, with each individual session's own ratio at 0.80 / 0.80 /
-0.84. Honest cost accounting: the rev-3 N floor (~46.8 s over three
-sessions) sits ~12% above rev-2's 41.66 s — fine-grained tasks charge
-the 4-core level ~16 extra task waves of overhead while buying the
-16-core level 35% (21.0 → 13.95 s best-vs-best) — the right trade in
-the scale direction (a real cluster IS the wide level), reported here
-rather than hidden in the ratio. A sixth rev-3 session (within-session
-ratio 0.94) lowered the flagship 4N best 13.95 → 12.47 s; four spread
-relational sessions took its bests to 0.810; and a final ALL-JOBS
-session — the round's quietest (ceiling 0.959) — moved bests in BOTH
-min-merge directions (flagship N 46.84 → 45.11 s, lowering that ratio
-0.939 → 0.904; relational 4N 3.61 → 3.28 s and sigscan both levels,
-raising theirs). An eighth (final) all-jobs session — quieter
-still — improved BOTH levels of every job at once. Settled books:
-flagship **0.939** (N 44.11 / 4N 11.74 s), relational **0.903**
-(N 11.53 / 4N 3.19 s), sigscan **0.953** (N 41.87 / 4N 10.98 s) raw —
-every job clears the 0.8 target on raw numbers, no ceiling
-normalization needed, and every eff/ceiling sits at 0.92-0.97 of the
-same-session ceiling. An eff/ceiling column
-exceeding 1.0 is the min-merge combining best-ever walls from different
-sessions than the one whose ceiling is quoted — read the raw numbers
-against the 0.67-0.88 ceiling band, not the point estimate.
-
-## Flagship per-stage breakdown (VERDICT r02 next-round #2)
-
-Canonical stage shape (ids shift with AQE, order is stable): (1) a tiny
-AQE probe, (2) pages scan + partial as-of max_by, writing the url-hash
-exchange, (3) final as-of agg + fused extract/NER/GLRE-inference
-MapInPandas + partial triple agg, (4) final triple agg + broadcast alias
-linking, (5) final dedup agg, (6) result. Stage (3) is the Python stage:
-its `cpu_ms` is JVM-side only — `blocked_ms` (= run−cpu) is task wall
-spent feeding/awaiting the Arrow workers, i.e. the Python compute itself.
-A `blocked_ms` that grows super-linearly from N to 4N while shuffle
-volumes stay flat means the Python workers slow each other down
-(shared memory bus / hypervisor steal), not that the engine added
-coordination overhead — compare with the relational job, which has no
-Python stage.
-
-Two cross-level patterns in these tables are expected, not engine
-regressions (VERDICT r03 what's-wrong #3, resolved):
-
-- **Stage (3)'s shuffle WRITE records grew ~(4N/N)× under rev ≤ 2**
-  while stage (2)'s write volume stayed flat: AQE coalesced the url
-  exchange to ≈cores partitions, so the in-stage partial triple
-  aggregation saw 4× fewer docs per partition and collapsed less —
-  textbook map-side combine, absorbed by the final agg with near-flat
-  cpu_ms (measured 2026-08-17: 306 → 409 cpu_ms for 96k → 315k input
-  records, sublinear). Under rev 3 (coalescing off for this job) both
-  levels run the same 64 partitions, so stage (3)'s write volume is now
-  IDENTICAL across levels (28.9 MB both, r6 tables) — one fewer
-  cross-level difference to reason about.
-- **r3's one-off stage-(4) reading of 14,851 cpu_ms at 4N** (vs 296 at N)
-  did not reproduce under re-measurement with gc_ms instrumented (GC = 0
-  on that stage at both levels; cpu flat per the numbers above). The
-  stage dump is a SINGLE extra run by design, so it carries no min-of-N
-  steal protection — that reading was hypervisor steal accounted as
-  on-CPU time, not a per-task re-initialization in the linking stage.
-
-{stage_rows(f, "lo")}
-
-{stage_rows(f, "hi")}
-
-## Relational per-stage breakdown (VERDICT r03 #1 / r04 top_next)
-
-**r5 redesign — the TF exchange is now fixed-width.** The r4 job
-exchanged ~97%-distinct (url, token) STRING pairs, so the partial agg was
-a no-op and 149 MB of variable-length rows rode the TF shuffle; r4's
-verdict (correctly) held that at scale this is a bandwidth-bound exchange
-the engine itself could slim. r5 does so in two steps. Rev 2: the
-TF/DF/window path runs entirely on (xxhash64(url), xxhash64(tok)) longs —
-measured at 20k docs, same session, same 64-way layout: TF-path shuffle
-write 31.3 → 20.8 MB (fixed-width rows; the remaining bytes are
-poorly-compressible random longs vs compressible text), job wall
-2.08 → 1.46 s, and at the then-4×-docs protocol scale both level bests
-improved ~35% (N 8.90 → 6.54 s, 4N 3.64 → 2.76 s). Rev 3: the rev-2
-string re-attach still aggregated a token dictionary with min(tok) over
-a token RE-EXPLODE — a string-heavy agg pass measuring ~4 s cpu at N
-but ~24 s cpu + 9 s GC at 4N (200k docs): exactly the
-concurrency-asymmetric collapse shape that string hash-aggs exhibit on
-this box. Token ids therefore stay hashed in the output (a consumer
-keeps the dictionary), and only the url strings are re-attached, via a
-dictionary FILTERED by broadcast semi-join to exactly the urls the
-vocab×3-row result references — removing it took the 4N best from
-13.1 s to 5.2 s while N barely moved. No corpus-wide string
-aggregation remains anywhere in the job. For attribution, note what the
-stage tables below show is FLAT across levels: the DF/window/join merge
-stage (~32 s summed cpu at both N and 4N — it parallelizes cleanly),
-shuffle volumes and record counts; what inflates at 4N is the
-explode+hash TF stage's on-CPU time for byte-identical work (~7× with
-<11% GC) — the shared-bus/steal signature, now isolated to the one
-stage that streams 15 M short strings. The relational corpus is also
-8× docs since r5 (the job got fast enough that at 4× the 4N wall was
-~2.8 s, where the ~0.5 s scheduling floor alone caps measurable
-efficiency near 0.6).
-
-Stage shape: (1) tiny AQE probe, (2) token explode + partial hashed-pair
-agg writing the TF exchange (plus the cheap vocab/url dict stages), (3)
-TF read + DF/window aggs + joins, (4) result collects. What the tables
-show across levels: shuffle volumes and record counts are IDENTICAL at N
-and 4N (no engine overhead added by parallelism), gc_ms is <4% of
-cpu_ms, there is no spill, yet the TF stage's summed cpu_ms for
-byte-identical work still inflates ~4× at 4N — the shared-memory-bus +
-hypervisor-steal signature (hash aggregation is memory-bandwidth-bound;
-16 threads share one overcommitted socket where a real cluster's 4N
-executors bring 4× memory channels). With the exchange now fixed-width,
-the residual below-ceiling raw efficiency of this job is attributed to
-the host, matching the evidence standard the flagship met in r3.
-
-{stage_rows(r, "lo")}
-
-{stage_rows(r, "hi")}
-"""
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    md_path = bench_dir / "BASELINE.md"
-    if md_path.exists():
-        md = _preserve_extra_sections(md, md_path.read_text())
-    md_path.write_text(md)
-    print(json.dumps({
-        "hw_ceiling": round(hw, 3),
-        "efficiency": f["eff"],
-        "relational_efficiency": r["eff"],
-        "sigscan_efficiency": s["eff"],
-        "flagship": {"lo": f["lo"], "hi": f["hi"]},
-    }))
-    mismatches = [j for j, d in results.items()
-                  if d["lo"]["triples"] != d["hi"]["triples"]]
-    if mismatches:
-        print(f"FAIL: result counts differ between levels: {mismatches}", file=sys.stderr)
-        return 2
-    if max(f["eff"], r["eff"], s["eff"]) < 0.8:
-        print("FAIL: no job reached 0.8 scaling efficiency", file=sys.stderr)
-        return 1
+    pinned = levels(os.sched_getaffinity(0))
+    runs = []
+    for r in range(ROUNDS):
+        order = ["narrow", "wide"] if r % 2 == 0 else ["wide", "narrow"]
+        for level in order:
+            cpus = pinned[level]
+            line = run_pinned(cpus)
+            print(f"round {r} {level} ({len(cpus)} CPUs): {line}", file=sys.stderr)
+            runs.append(check(level, len(cpus), line))
+    record = summarize(runs)
+    OUT.write_text(json.dumps(record, indent=1) + "\n")
+    print(json.dumps({"median": record["median"], "efficiency": record["efficiency"]}))
     return 0
 
 

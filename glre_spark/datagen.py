@@ -269,9 +269,14 @@ def pages_df(
 ):
     """Distributed generation: parallelize doc_ids, generate per-partition
     inside mapInPandas — scales to any n_docs without driver materialize."""
-    import pandas as pd
-
     ids = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
+    return _gen_pages(ids, seed, sent_range)
+
+
+def _gen_pages(ids, seed: int = 42, sent_range: tuple[int, int] = (2, 8)):
+    """The one page generator: gen_page_row over each id of ``ids``' ``id``
+    column, inside mapInPandas."""
+    import pandas as pd
 
     def gen(batches):
         for pdf in batches:
@@ -283,10 +288,7 @@ def pages_df(
     return ids.mapInPandas(gen, PAGES_SCHEMA)
 
 
-def pages_from_docs(
-    docs, partitions: int | None = None,
-    seed: int = 42, sent_range: tuple[int, int] = (2, 8),
-):
+def pages_from_docs(docs, partitions: int | None = None):
     """Synthesize the north-rule pages table 1:1 from a DataFrame's doc_id column
     (shared by the driver entry, the glre_* ops, and the UDF-surface ops —
     one generator, identical corpus everywhere).
@@ -298,16 +300,10 @@ def pages_from_docs(
     dispatch (~20 ms/task) dominates and fewer, fuller tasks win
     (measured sf1.0: 0.67 s at 32 tasks vs 1.08 s at 64 on local[32]).
     Explicit callers (driver entry, tests) still pin their own."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [gen_page_row(int(i), seed, sent_range) for i in pdf["doc_id"]]
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
     if partitions is None:
         partitions = max(16, docs.sparkSession.sparkContext.defaultParallelism)
-    return docs.select("doc_id").repartition(partitions).mapInPandas(gen, PAGES_SCHEMA)
+    ids = docs.selectExpr("doc_id AS id").repartition(partitions)
+    return _gen_pages(ids)
 
 
 # --------------------------------------------------------------------------

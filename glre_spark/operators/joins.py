@@ -161,9 +161,11 @@ def join_theta_range(spark, sf_dir):
 )
 def join_asof(spark, sf_dir):
     """Latest crawl per url (SURVEY.md §2.3; Spark has no native ASOF
-    join): pipeline.latest_per_url, the flagship's max_by hash-aggregate
-    over its url exchange. The twin's doc_id tie-break never fires: a url
-    and warc_ts repeat only for doc_ids 28,000 apart."""
+    join): pipeline.latest_per_url, the flagship's max_by over its url
+    exchange. That is a SortAggregate: the max_by buffer holds a struct,
+    which HashAggregate cannot update in place. The twin's doc_id
+    tie-break never fires: a url and warc_ts repeat only for doc_ids
+    28,000 apart."""
     return latest_per_url(pages_view(spark, sf_dir).select("url", "warc_ts", "doc_id"))
 
 

@@ -50,10 +50,13 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
     AQE would coalesce the aggregate's own exchange by bytes (at 400
     pages, 0.27 MB, into ONE task) but never a REPARTITION_BY_NUM one.
 
-    Hash-aggregate (max_by over the row struct), NOT a sort-window, which
-    must sort each partition, then discard the losers (r02 flagship-
-    scaling suspect #1). The partial combine runs after the exchange, so
-    recrawls cross it (0.268 → 0.283 MB on the 400-page bench corpus).
+    max_by over the row struct, NOT a window + row_number (r02 flagship-
+    scaling suspect #1). Spark plans it as a SortAggregate, partial and
+    final alike: the aggregation buffer holds the row struct (html
+    included), and HashAggregate only updates fixed-width buffers in
+    place, so each side sorts its rows by url. The partial combine runs
+    after the exchange, so recrawls cross it (0.268 → 0.283 MB on the
+    400-page bench corpus).
     Ties on warc_ts cannot occur: datagen guarantees a recrawl's warc_ts
     is strictly later (datagen.py), and CC-style WARC timestamps are
     per-fetch.

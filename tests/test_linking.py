@@ -53,6 +53,38 @@ def test_link_alias_broadcast_op_links_every_name(spark, sf_dir):
     assert all(r.canonical_name for r in rows)
 
 
+def test_link_alias_broadcast_dictionary_hits_match_twin(spark, sf_dir, tmp_path):
+    """Nation names that are dictionary aliases take the dictionary's Q key
+    in both twins (the testdata names all miss it, so only this fixture
+    can tell a broken join key from a working one)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from glre_spark.operators import REGISTRY, _ensure_loaded
+    from tests.oracle_util import TABLES, compare, duck_run
+
+    names = ["GERMANY", "UNITED STATES", "U.S.", "Acme Corp", "Zanzibar Widget Guild"]
+    pq.write_table(pa.table({
+        "n_nationkey": pa.array(range(len(names)), pa.int32()),
+        "n_name": names,
+        "n_regionkey": pa.array([0] * len(names), pa.int32()),
+    }), tmp_path / "nation.parquet")
+    for t in TABLES:
+        if t != "nation":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+
+    _ensure_loaded()
+    fn, sql = REGISTRY["link_alias_broadcast"]
+    d = str(tmp_path)
+    assert compare(fn(spark, d), duck_run(d, sql)) == []
+    keys = {names[r.n_nationkey]: r.entity_key for r in fn(spark, d).collect()}
+    assert sum(k.startswith("Q") for k in keys.values()) >= 1
+    assert keys["U.S."] == keys["UNITED STATES"] and keys["U.S."].startswith("Q")
+    assert keys["Zanzibar Widget Guild"].startswith("S")
+
+
 def test_linking_is_idempotent(spark):
     m = _mentions(spark)
     ad = alias_dict_df(spark)
