@@ -293,13 +293,13 @@ def pages_from_docs(docs, partitions: int | None = None):
     (shared by the driver entry, the glre_* ops, and the UDF-surface ops —
     one generator, identical corpus everywhere).
 
-    ``partitions=None`` sizes the gen stage to the cluster width,
-    replacing the former constant 16 that under-fanned wide masters.
-    1x defaultParallelism, not the 2x rule for CPU-per-row stages: after
-    the _pick pool-cache fix the gen is ~70 us/doc, so Python-worker task
-    dispatch (~20 ms/task) dominates and fewer, fuller tasks win
-    (measured sf1.0: 0.67 s at 32 tasks vs 1.08 s at 64 on local[32]).
-    Explicit callers (driver entry, tests) still pin their own."""
+    ``partitions=None`` gives max(16, defaultParallelism) gen tasks: the
+    cluster width on wide masters, never fewer than 16 on narrow ones.
+    Not the 2x-width rule for CPU-per-row stages: after the _pick
+    pool-cache fix the gen is ~70 us/doc, so Python-worker task dispatch
+    (~20 ms/task) dominates and fewer, fuller tasks win (measured sf1.0:
+    0.67 s at 32 tasks vs 1.08 s at 64 on local[32]). Explicit callers
+    (driver entry, tests) still pin their own."""
     if partitions is None:
         partitions = max(16, docs.sparkSession.sparkContext.defaultParallelism)
     ids = docs.selectExpr("doc_id AS id").repartition(partitions)

@@ -219,15 +219,13 @@ def run_with_checkpoints(
     return run_id
 
 
-def read_triples(spark: SparkSession, base: str, dedup: bool = True) -> DataFrame:
-    """Read the combined triple table. ``dedup=True`` (default) re-applies
-    the exact (subj, pred, obj) dedup across bucket groups — group-scoped
-    commits mean a triple witnessed in two groups is stored twice; the
-    re-aggregation (max score, min url, sum n_sources) restores the global
-    invariant build_triples guarantees."""
+def read_triples(spark: SparkSession, base: str) -> DataFrame:
+    """Read the combined triple table, re-applying the exact (subj, pred,
+    obj) dedup across bucket groups — group-scoped commits mean a triple
+    witnessed in two groups is stored twice; the re-aggregation (max
+    score, min url, sum n_sources) restores the global invariant
+    build_triples guarantees."""
     from glre_spark.linking import dedup_triples
 
     df = spark.read.parquet(os.path.join(base, "triples"))
-    if dedup:
-        df = dedup_triples(df.drop("bucket_group"))
-    return df
+    return dedup_triples(df.drop("bucket_group"))

@@ -260,9 +260,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def near_dup_keepers(
-    docs: DataFrame, sketch_k: int | None = None, check_ids: bool = True,
-) -> DataFrame:
+def near_dup_keepers(docs: DataFrame, sketch_k: int | None = None) -> DataFrame:
     """The dedup DECISION over an ARBITRARY (doc_id, text) DataFrame:
     MinHash → capped LSH blocks → Jaccard ≥ KEEPER_TAU verify → connected
     components → (doc_id, keeper, is_dup), min-id keeper per near-dup
@@ -300,25 +298,23 @@ def near_dup_keepers(
 
     PRECONDITION: ``doc_id`` must be unique — a duplicate fans out the
     verify join and collapses the per-row keep/drop decision across the
-    duplicate's rows (ADVICE r5). ``check_ids=True`` (default) enforces
-    it with one groupBy on the fixed-width id (map-side combine; the
-    cheapest possible whole-input probe). It is an extra eager action:
-    callers whose input DAG is expensive should localCheckpoint first
-    (pipeline.build_triples does) or, at true web scale where the input
-    is a materialized table with a key guarantee, pass False."""
+    duplicate's rows (ADVICE r5), so it is enforced with one groupBy on
+    the fixed-width id (map-side combine; the cheapest possible
+    whole-input probe). It is an extra eager action: callers whose input
+    DAG is expensive should localCheckpoint first (pipeline.build_triples
+    does)."""
     docs = fan_out(docs.select("doc_id", "text"))
-    if check_ids:
-        dup = (
-            docs.groupBy("doc_id").agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1).limit(3).collect()
+    dup = (
+        docs.groupBy("doc_id").agg(F.count("*").alias("n"))
+        .filter(F.col("n") > 1).limit(3).collect()
+    )
+    if dup:
+        ids = [r["doc_id"] for r in dup]
+        raise ValueError(
+            f"near_dup_keepers: doc_id not unique (e.g. {ids}); the "
+            "keeper decision is per-document — dedup or re-key the "
+            "input first"
         )
-        if dup:
-            ids = [r["doc_id"] for r in dup]
-            raise ValueError(
-                f"near_dup_keepers: doc_id not unique (e.g. {ids}); the "
-                "keeper decision is per-document — dedup or re-key the "
-                "input first"
-            )
     # one shingle-hash pass feeds the signatures, the block-size count and
     # the sketches (the local analog of "write the signature table once,
     # then join")

@@ -43,28 +43,25 @@ SCORE_THRESHOLD = 0.9  # θ — frozen with the weights; calibrated in tests
 PRED_DTYPE = np.dtype([("h", np.int64), ("t", np.int64), ("rel", np.int64), ("score", np.float64)])
 
 
-_TOK_CACHE: dict[str, int] = {}
+class TokenIds(dict):
+    """Token → embedding-row id, filled on first lookup: the md5 of the
+    lower-cased token, mod VHASH. ``predict_batch`` makes one per call, so
+    the table lives as long as the Arrow batch it serves."""
+
+    def __missing__(self, token: str) -> int:
+        h = hashlib.md5(token.lower().encode()).digest()
+        v = self[token] = int.from_bytes(h[:8], "big") % VHASH
+        return v
 
 
-def _tok_id(token: str) -> int:
-    t = token.lower()
-    v = _TOK_CACHE.get(t)
-    if v is None:
-        h = hashlib.md5(t.encode()).digest()
-        v = int.from_bytes(h[:8], "big") % VHASH
-        if len(_TOK_CACHE) < 1_000_000:  # bound worker memory
-            _TOK_CACHE[t] = v
-    return v
-
-
-def encode_words(w: dict, sents: list[list[str]]) -> list[np.ndarray]:
+def encode_words(w: dict, sents: list[list[str]], tok_ids: TokenIds) -> list[np.ndarray]:
     """i5: deterministic encoder stand-in — hash embedding + a local
     context mixer (0.5 self + 0.25 prev + 0.25 next). Returns per-sentence
     (n_tok, D) float32 arrays."""
     out = []
     emb = w["emb"]
     for toks in sents:
-        ids = np.fromiter((_tok_id(t) for t in toks), dtype=np.int64, count=len(toks))
+        ids = np.fromiter((tok_ids[t] for t in toks), dtype=np.int64, count=len(toks))
         e = emb[ids]
         mixed = 0.5 * e
         mixed[1:] += 0.25 * e[:-1]
@@ -219,7 +216,7 @@ class GLREModel:
         self.w = weights
         self.threshold = threshold
 
-    def _pair_stage(self, doc: Doc):
+    def _pair_stage(self, doc: Doc, tok_ids: TokenIds):
         """Per-document stage: graph forward + per-pair local (attention)
         reps. Returns None when the doc can emit nothing, else the flat
         pair features the batched ff1/head tail consumes:
@@ -227,7 +224,7 @@ class GLREModel:
         if not doc.entities or len(doc.entities) < 2:
             return None
         w = self.w
-        word_reps = encode_words(w, doc.sents)
+        word_reps = encode_words(w, doc.sents, tok_ids)
         nodes, nm, ne, ns = build_nodes(w, doc, word_reps)
         A = build_adj(doc, nm, ne, ns)
         g = rgcn_forward(w, nodes, A)                      # global reps
@@ -322,8 +319,9 @@ class GLREModel:
         w = self.w
         F1 = w["ff1_w"]
         per, ent_blocks, ctx_rows, doc_idx = [], [], [], []
+        tok_ids = TokenIds()
         for di, doc in enumerate(docs):
-            st = self._pair_stage(doc)
+            st = self._pair_stage(doc, tok_ids)
             if st is None:
                 continue
             per.append(st[:6])

@@ -37,7 +37,8 @@ def stateful_user_totals_op(spark, sf_dir):
     user (max_by on the strictly-increasing n_events). Equals the batch
     groupBy — the batch↔stream parity contract of §2.10."""
     from glre_spark.streaming import (
-        read_events_stream,
+        EVENTS_SCHEMA,
+        read_stream,
         run_stream_to_memory,
         stateful_user_totals,
     )
@@ -48,7 +49,7 @@ def stateful_user_totals_op(spark, sf_dir):
         load(spark, sf_dir, "events").repartition(12).write.mode("overwrite").parquet(
             src_dir
         )
-        updates = stateful_user_totals(read_events_stream(spark, src_dir))
+        updates = stateful_user_totals(read_stream(spark, src_dir, EVENTS_SCHEMA))
         run_stream_to_memory(updates, name, mode="update")
         return (
             spark.table(name)
@@ -89,8 +90,9 @@ def dedup_events_stream_op(spark, sf_dir):
     import time
 
     from glre_spark.streaming import (
+        EVENTS_SCHEMA,
         dedup_events_stream,
-        read_events_stream,
+        read_stream,
         run_stream_to_memory,
     )
 
@@ -111,7 +113,7 @@ def dedup_events_stream_op(spark, sf_dir):
             if f.startswith("part-") and os.path.getmtime(p) > now - 300:
                 os.utime(p, (now, now))  # the re-delivery file arrives LAST
         run_stream_to_memory(
-            dedup_events_stream(read_events_stream(spark, src_dir)),
+            dedup_events_stream(read_stream(spark, src_dir, EVENTS_SCHEMA)),
             name,
             mode="append",
         )
@@ -132,8 +134,9 @@ def domain_stats_stream_op(spark, sf_dir):
     final state plus the floor-div average — which must equal the batch
     domain_stats/DuckDB answer exactly."""
     from glre_spark.streaming import (
+        DOCS_SCHEMA,
         domain_running_stats,
-        read_documents_stream,
+        read_stream,
         run_stream_to_memory,
     )
 
@@ -144,7 +147,7 @@ def domain_stats_stream_op(spark, sf_dir):
             "doc_id", "text", "lang", "source", "n_chars"
         ).repartition(12).write.mode("overwrite").parquet(src_dir)
         agg = domain_running_stats(
-            read_documents_stream(spark, src_dir), _domain_col()
+            read_stream(spark, src_dir, DOCS_SCHEMA), _domain_col()
         )
         run_stream_to_memory(agg, name, mode="complete")
         # detach from scratch files + memory sink
@@ -162,10 +165,10 @@ def compact_stream_triples_op(spark, sf_dir):
     log), and return the post-compaction read — which tests assert equals
     the pre-compaction read and the one-shot batch run
     (tests/test_streaming.py::test_stream_log_compaction)."""
-    from glre_spark.datagen import pages_from_docs
+    from glre_spark.datagen import PAGES_SCHEMA, pages_from_docs
     from glre_spark.streaming import (
         compact_stream_triples,
-        read_pages_stream,
+        read_stream,
         read_stream_triples,
         stream_build_triples,
     )
@@ -176,7 +179,7 @@ def compact_stream_triples_op(spark, sf_dir):
         docs = load(spark, sf_dir, "documents").filter("doc_id < 60")
         pages_from_docs(docs, partitions=4).write.parquet(src)
         stream_build_triples(
-            read_pages_stream(spark, src, files_per_trigger=2), target
+            read_stream(spark, src, PAGES_SCHEMA, files_per_trigger=2), target
         )
         compact_stream_triples(spark, target)
         return read_stream_triples(spark, target).localCheckpoint(eager=True)

@@ -1,27 +1,40 @@
 """Structured Streaming wiring (SURVEY.md §2.10 — stretch surface).
 
-The reference is a batch pipeline; these helpers re-run the identical
-windowed aggregations from operators/windows_ops.py as streams (readStream
-→ watermark → window agg → writeStream), proving the batch/stream parity
-of the event ops. Used by tests/test_streaming.py with a file source.
+The reference is a batch pipeline; this module re-runs the batch
+pipeline's own pieces as streams: one parquet file-source reader
+(``read_stream``, given the table's schema — ``EVENTS_SCHEMA``,
+``DOCS_SCHEMA`` or ``datagen.PAGES_SCHEMA``), the windowed event
+aggregations of operators/windows_ops.py, one arbitrary-stateful operator
+(``stateful_user_totals``), and incremental KG construction
+(``stream_build_triples`` → ``read_stream_triples``). Every query runs
+as a bounded availableNow stream through one loop, ``_run_bounded``.
+Used by tests/test_streaming.py and operators/streaming_ops.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
+# A file stream needs an explicit schema: inferring one would add a job.
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+DOCS_SCHEMA = (
+    "doc_id bigint, text string, lang string, source string, n_chars bigint"
+)
 
 
-def read_events_stream(
-    spark: SparkSession, path: str, files_per_trigger: int = 4
+def read_stream(
+    spark: SparkSession, path: str, schema: str, files_per_trigger: int = 4
 ) -> DataFrame:
+    """Parquet files under ``path`` as a stream of ``schema`` rows, at
+    most ``files_per_trigger`` files per micro-batch (oldest mtime
+    first)."""
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(path)
     )
@@ -112,51 +125,15 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same running per-user totals as ``stateful_user_totals``,
-    expressed in Spark 4's transformWithState API
-    (StatefulProcessor + typed ValueState) — the successor surface to
-    applyInPandasWithState, with explicit state handles, TTL support and
-    timers. Output parity with the batch groupBy is asserted in
-    tests/test_streaming.py — SKIPPED where the runtime dependency is
-    missing: transformWithState's Python↔JVM state protocol needs a
-    working google.protobuf, which this sandbox lacks (the test probes
-    for it; applyInPandasWithState needs no protobuf and remains the
-    proven stateful surface here). Integer-cents HALF_UP state, identical
-    to streaming_ops' convention."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, c long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._state.get() if self._state.exists() else None
-            total, acc = got if got is not None else (0, 0)
-            for pdf in rows:
-                total += len(pdf)
-                v = pdf["value"].to_numpy() * 100
-                # HALF_UP away from zero — the shared cents convention
-                acc += int((np.sign(v) * np.floor(np.abs(v) + 0.5)).sum())
-            self._state.update((total, acc))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [total], "sum_cents": [acc]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, sum_cents long",
-        outputMode="Update",
-        timeMode="None",
-    )
+def _run_bounded(writer: DataStreamWriter, timeout_s: int, what: str):
+    """Run ``writer`` as an availableNow stream to completion. A stream
+    still running after ``timeout_s`` is stopped and raises instead of
+    leaving a partial sink."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{what} still running after {timeout_s}s")
+    return q
 
 
 def run_stream_to_memory(df: DataFrame, name: str, mode: str = "complete"):
@@ -165,39 +142,10 @@ def run_stream_to_memory(df: DataFrame, name: str, mode: str = "complete"):
     ``mode="update"`` for arbitrary-stateful queries (complete unsupported).
     Raises if the stream does not finish within MEMORY_STREAM_TIMEOUT_S —
     a partial memory table would silently yield wrong results downstream."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(MEMORY_STREAM_TIMEOUT_S):
-        q.stop()
-        raise TimeoutError(
-            f"stream {name!r} still running after {MEMORY_STREAM_TIMEOUT_S}s; "
-            "refusing to read a partial memory sink"
-        )
-    return q
-
-
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
-
-
-DOCS_SCHEMA = (
-    "doc_id bigint, text string, lang string, source string, n_chars bigint"
-)
-
-
-def read_documents_stream(
-    spark: SparkSession, path: str, files_per_trigger: int = 4
-) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(path)
+    return _run_bounded(
+        df.writeStream.format("memory").queryName(name).outputMode(mode),
+        MEMORY_STREAM_TIMEOUT_S,
+        f"stream {name!r}",
     )
 
 
@@ -221,14 +169,6 @@ def domain_running_stats(docs: DataFrame, domain) -> DataFrame:
             F.sum("nt").cast("bigint").alias("n_tokens"),
             F.sum("nc").cast("bigint").alias("n_chars"),
         )
-    )
-
-
-def read_pages_stream(spark: SparkSession, path: str, files_per_trigger: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(path)
     )
 
 
@@ -393,17 +333,12 @@ def stream_build_triples(
             .parquet(target + "_crawls")
         )
 
-    q = (
+    _run_bounded(
         pages_stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target + "_ckpt")
-        .start()
+        .option("checkpointLocation", target + "_ckpt"),
+        BUILD_STREAM_TIMEOUT_S,
+        "streaming KG build",
     )
-    if not q.awaitTermination(BUILD_STREAM_TIMEOUT_S):
-        q.stop()
-        raise TimeoutError(
-            f"streaming KG build still running after {BUILD_STREAM_TIMEOUT_S}s"
-        )
 
 
 def _heal_compact_swap(path: str) -> None:

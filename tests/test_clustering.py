@@ -98,8 +98,7 @@ def test_near_dup_keepers_sketch_matches_exact(spark):
 def test_near_dup_keepers_rejects_duplicate_doc_ids(spark):
     """PRECONDITION guard (ADVICE r5): a duplicate doc_id fans out the
     verify join and collapses the per-row keep/drop decision — the
-    default check must refuse the input loudly; check_ids=False skips
-    the probe for callers with an upstream key guarantee."""
+    check must refuse the input loudly."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -111,5 +110,3 @@ def test_near_dup_keepers_rejects_duplicate_doc_ids(spark):
     )
     with pytest.raises(ValueError, match="doc_id not unique"):
         near_dup_keepers(docs).collect()
-    # opt-out still computes (caller has asserted uniqueness elsewhere)
-    assert near_dup_keepers(docs, check_ids=False).count() > 0

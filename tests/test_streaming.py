@@ -5,8 +5,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from glre_spark.datagen import PAGES_SCHEMA
 from glre_spark.streaming import (
-    read_events_stream,
+    EVENTS_SCHEMA,
+    read_stream,
     run_stream_to_memory,
     tumbling_counts,
 )
@@ -39,7 +41,7 @@ def test_streaming_tumbling_matches_batch(spark, tmp_path):
     src_dir.mkdir()
     shutil.copy(f"{SF_DIR}/events.parquet", src_dir / "part-000.parquet")
     path = str(src_dir)
-    stream = read_events_stream(spark, path)
+    stream = read_stream(spark, path, EVENTS_SCHEMA)
     assert stream.isStreaming
     run_stream_to_memory(tumbling_counts(stream), "tumbling_mem")
     got = {
@@ -68,7 +70,7 @@ def test_stateful_operator_accumulates_across_microbatches(spark, tmp_path):
     batch_src = spark.read.parquet(f"{SF_DIR}/events.parquet")
     batch_src.repartition(12).write.parquet(src_dir)  # ≥3 micro-batches
 
-    stream = read_events_stream(spark, src_dir)
+    stream = read_stream(spark, src_dir, EVENTS_SCHEMA)
     run_stream_to_memory(stateful_user_totals(stream), "stateful_mem", mode="update")
     updates = spark.sql("SELECT * FROM stateful_mem")
     # several updates per user (state crossed batches), final = max
@@ -94,56 +96,6 @@ def test_stateful_operator_accumulates_across_microbatches(spark, tmp_path):
     assert final == want
 
 
-def _protobuf_usable() -> bool:
-    # transformWithState's state-server protocol imports google.protobuf
-    # inside the dedicated Python driver worker; a broken install crashes
-    # the stream with no catchable Python error, so probe up front
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_usable(),
-    reason="transformWithState needs google.protobuf (absent in sandbox); "
-    "applyInPandasWithState covers the stateful surface here",
-)
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """Spark 4 transformWithState (StatefulProcessor + ValueState) must
-    carry state across micro-batches and land on the same final per-user
-    totals as the applyInPandasWithState op and the batch aggregate."""
-    from glre_spark.operators import cents
-    from glre_spark.streaming import stateful_user_totals_tws
-
-    src_dir = str(tmp_path / "events_tws")
-    batch_src = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    batch_src.repartition(12).write.parquet(src_dir)  # ≥3 micro-batches
-
-    stream = read_events_stream(spark, src_dir)
-    run_stream_to_memory(stateful_user_totals_tws(stream), "tws_mem", mode="update")
-    updates = spark.sql("SELECT * FROM tws_mem")
-    final = {
-        r.user_id: (r.n_events, r.sum_cents)
-        for r in updates.groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"), F.max("sum_cents").alias("sum_cents"))
-        .collect()
-    }
-    assert updates.count() > len(final), "state never crossed a micro-batch"
-    want = {
-        r.user_id: (r.n, r.c)
-        for r in batch_src.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(cents(F.col("value"))).alias("c"),
-        )
-        .collect()
-    }
-    assert final == want
-
-
 def test_streaming_sliding_matches_batch(spark, tmp_path):
     import shutil
 
@@ -152,7 +104,7 @@ def test_streaming_sliding_matches_batch(spark, tmp_path):
     src_dir = tmp_path / "events_sliding"
     src_dir.mkdir()
     shutil.copy(f"{SF_DIR}/events.parquet", src_dir / "part-000.parquet")
-    stream = read_events_stream(spark, str(src_dir))
+    stream = read_stream(spark, str(src_dir), EVENTS_SCHEMA)
     run_stream_to_memory(sliding_counts(stream), "sliding_mem")
     got = {
         (r.w_start, r.event_type): r.n
@@ -180,7 +132,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     batch_src.repartition(4).write.parquet(src_dir)
     batch_src.repartition(4).write.mode("append").parquet(src_dir)
 
-    stream = read_events_stream(spark, src_dir, files_per_trigger=2)
+    stream = read_stream(spark, src_dir, EVENTS_SCHEMA, files_per_trigger=2)
     run_stream_to_memory(dedup_events_stream(stream), "dedup_mem", mode="append")
     got = spark.sql("SELECT event_id, count(*) AS c FROM dedup_mem GROUP BY event_id")
     assert got.filter("c > 1").count() == 0, "a re-delivered event survived"
@@ -205,10 +157,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     import time
 
     def write_events_file(rows, src_dir, name, mtime):
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
+        df = spark.createDataFrame(rows, EVENTS_SCHEMA)
         _stage_one_file(df, src_dir, name, mtime)
 
     t = lambda m: dt.datetime(2024, 1, 1, 10, m)  # noqa: E731
@@ -229,7 +178,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         src, "f3.parquet", now - 60,
     )
 
-    stream = read_events_stream(spark, src, files_per_trigger=1)
+    stream = read_stream(spark, src, EVENTS_SCHEMA, files_per_trigger=1)
     run_stream_to_memory(tumbling_counts(stream), "late_mem", mode="update")
     # update-mode memory sink accumulates per-trigger update rows; the
     # [10:00,10:05) window must have exactly ONE update (n=2 from trigger
@@ -249,7 +198,6 @@ def test_streaming_kg_build_equals_batch(spark, tmp_path):
     from glre_spark.datagen import pages_df
     from glre_spark.pipeline import build_triples
     from glre_spark.streaming import (
-        read_pages_stream,
         read_stream_triples,
         stream_build_triples,
     )
@@ -259,7 +207,7 @@ def test_streaming_kg_build_equals_batch(spark, tmp_path):
     pages = pages_df(spark, 120, partitions=8)  # 8 files / 4 per trigger → 2+ batches
     pages.write.parquet(src)
 
-    stream_build_triples(read_pages_stream(spark, src), target)
+    stream_build_triples(read_stream(spark, src, PAGES_SCHEMA), target)
 
     got = {
         (r.subj, r.pred, r.obj, r.score, r.url, r.n_sources)
@@ -281,7 +229,6 @@ def test_all_filtered_microbatch_yields_observation(spark, tmp_path):
 
     from glre_spark.datagen import pages_df
     from glre_spark.pipeline import build_triples
-    from glre_spark.streaming import read_pages_stream
 
     src = str(tmp_path / "pages_src")
     pages_df(spark, 16, partitions=4).withColumn("lang", F.lit("de")).write.parquet(src)
@@ -297,7 +244,7 @@ def test_all_filtered_microbatch_yields_observation(spark, tmp_path):
         seen.append(obs.get["rows"])
 
     q = (
-        read_pages_stream(spark, src).writeStream.foreachBatch(process)
+        read_stream(spark, src, PAGES_SCHEMA).writeStream.foreachBatch(process)
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -309,7 +256,7 @@ def test_all_filtered_microbatch_yields_observation(spark, tmp_path):
 
 def _write_page_file(spark, doc_ids, src_dir, name, mtime):
     """One parquet FILE of generated pages with a controlled mtime."""
-    from glre_spark.datagen import PAGES_SCHEMA, gen_page_row
+    from glre_spark.datagen import gen_page_row
 
     rows = [gen_page_row(i) for i in doc_ids]
     df = spark.createDataFrame(
@@ -336,7 +283,6 @@ def test_streaming_recrawl_across_microbatches(spark, tmp_path):
     from glre_spark.datagen import doc_url
     from glre_spark.pipeline import build_triples
     from glre_spark.streaming import (
-        read_pages_stream,
         read_stream_triples,
         stream_build_triples,
     )
@@ -350,7 +296,7 @@ def test_streaming_recrawl_across_microbatches(spark, tmp_path):
     _write_page_file(spark, [6, 17, 21, 76], src, "b1.parquet", now - 120)
     _write_page_file(spark, [7, 16, 22, 77], src, "b2.parquet", now - 60)
 
-    stream_build_triples(read_pages_stream(spark, src, files_per_trigger=1), target)
+    stream_build_triples(read_stream(spark, src, PAGES_SCHEMA, files_per_trigger=1), target)
 
     log = spark.read.parquet(target)
     crawls = spark.read.parquet(target + "_crawls")
@@ -399,7 +345,6 @@ def test_stream_replay_idempotent(spark, tmp_path):
 
     from glre_spark.pipeline import build_triples
     from glre_spark.streaming import (
-        read_pages_stream,
         read_stream_triples,
         stream_build_triples,
     )
@@ -410,7 +355,7 @@ def test_stream_replay_idempotent(spark, tmp_path):
     now = time.time()
     _write_page_file(spark, [6, 21], src, "b1.parquet", now - 120)
     _write_page_file(spark, [7, 22], src, "b2.parquet", now - 60)
-    stream_build_triples(read_pages_stream(spark, src, files_per_trigger=1), target)
+    stream_build_triples(read_stream(spark, src, PAGES_SCHEMA, files_per_trigger=1), target)
 
     def result():
         return {
@@ -449,11 +394,10 @@ def test_stream_log_compaction(spark, tmp_path):
     import os
     import time
 
-    from glre_spark.datagen import PAGES_SCHEMA, gen_page_row
+    from glre_spark.datagen import gen_page_row
     from glre_spark.pipeline import build_triples
     from glre_spark.streaming import (
         compact_stream_triples,
-        read_pages_stream,
         read_stream_triples,
         stream_build_triples,
     )
@@ -464,7 +408,7 @@ def test_stream_log_compaction(spark, tmp_path):
     now = time.time()
     _write_page_file(spark, [6, 21], src, "b1.parquet", now - 180)
     _write_page_file(spark, [7, 22], src, "b2.parquet", now - 120)
-    stream_build_triples(read_pages_stream(spark, src, files_per_trigger=1), target)
+    stream_build_triples(read_stream(spark, src, PAGES_SCHEMA, files_per_trigger=1), target)
 
     def result():
         return {
@@ -489,7 +433,7 @@ def test_stream_log_compaction(spark, tmp_path):
     )
     _stage_one_file(df, src, "b3.parquet")
     # same checkpoint dir → availableNow processes ONLY the new file
-    stream_build_triples(read_pages_stream(spark, src, files_per_trigger=1), target)
+    stream_build_triples(read_stream(spark, src, PAGES_SCHEMA, files_per_trigger=1), target)
 
     want = {
         (r.subj, r.pred, r.obj, r.score, r.url, r.n_sources)
@@ -510,8 +454,8 @@ def test_warc_invariant_guard_rejects_ambiguous_bodies(spark, tmp_path):
     versions' triples."""
     import os
 
-    from glre_spark.datagen import PAGES_SCHEMA, gen_page_row
-    from glre_spark.streaming import read_pages_stream, stream_build_triples
+    from glre_spark.datagen import gen_page_row
+    from glre_spark.streaming import stream_build_triples
 
     src = str(tmp_path / "pages_src")
     target = str(tmp_path / "stream_triples")
@@ -529,7 +473,7 @@ def test_warc_invariant_guard_rejects_ambiguous_bodies(spark, tmp_path):
     _stage_one_file(df, src, "b1.parquet")
     with pytest.raises(Exception, match="WARC invariant"):
         stream_build_triples(
-            read_pages_stream(spark, src), target, validate_warc=True
+            read_stream(spark, src, PAGES_SCHEMA), target, validate_warc=True
         )
 
 
@@ -543,7 +487,6 @@ def test_compact_swap_crash_self_heals(spark, tmp_path):
     import time
 
     from glre_spark.streaming import (
-        read_pages_stream,
         read_stream_triples,
         stream_build_triples,
     )
@@ -553,7 +496,7 @@ def test_compact_swap_crash_self_heals(spark, tmp_path):
     os.makedirs(src)
     now = time.time()
     _write_page_file(spark, [6, 21], src, "b1.parquet", now - 120)
-    stream_build_triples(read_pages_stream(spark, src), target)
+    stream_build_triples(read_stream(spark, src, PAGES_SCHEMA), target)
 
     def result():
         return {
@@ -584,8 +527,8 @@ def test_warc_guard_catches_null_body_representation_ambiguity(spark, tmp_path):
     ambiguous versions and must be rejected."""
     import os
 
-    from glre_spark.datagen import PAGES_SCHEMA, gen_page_row
-    from glre_spark.streaming import read_pages_stream, stream_build_triples
+    from glre_spark.datagen import gen_page_row
+    from glre_spark.streaming import stream_build_triples
 
     src = str(tmp_path / "pages_src")
     target = str(tmp_path / "stream_triples")
@@ -601,7 +544,7 @@ def test_warc_guard_catches_null_body_representation_ambiguity(spark, tmp_path):
     _stage_one_file(df, src, "b1.parquet")
     with pytest.raises(Exception, match="WARC invariant"):
         stream_build_triples(
-            read_pages_stream(spark, src), target, validate_warc=True
+            read_stream(spark, src, PAGES_SCHEMA), target, validate_warc=True
         )
 
 
@@ -612,19 +555,19 @@ def test_stream_drop_near_dups_true_is_refused(spark, tmp_path):
     (VERDICT r5 next-round #6)."""
     import os
 
-    from glre_spark.streaming import read_pages_stream, stream_build_triples
+    from glre_spark.streaming import stream_build_triples
 
     src = str(tmp_path / "pages_src")
     os.makedirs(src)
     _write_page_file(spark, [6], src, "b1.parquet", None)
     with pytest.raises(ValueError, match="batch_local"):
         stream_build_triples(
-            read_pages_stream(spark, src), str(tmp_path / "t"),
+            read_stream(spark, src, PAGES_SCHEMA), str(tmp_path / "t"),
             drop_near_dups=True,
         )
     with pytest.raises(ValueError, match="batch_local"):
         stream_build_triples(
-            read_pages_stream(spark, src), str(tmp_path / "t"),
+            read_stream(spark, src, PAGES_SCHEMA), str(tmp_path / "t"),
             drop_near_dups="typo_mode",
         )
 
@@ -641,8 +584,8 @@ def test_stream_drop_near_dups_batch_local_semantics(spark, tmp_path):
     import os
     import time
 
-    from glre_spark.datagen import PAGES_SCHEMA, gen_page_row
-    from glre_spark.streaming import read_pages_stream, stream_build_triples
+    from glre_spark.datagen import gen_page_row
+    from glre_spark.streaming import stream_build_triples
 
     def mirror(row, tag):
         return dict(row, url=row["url"] + "?" + tag)
@@ -669,7 +612,7 @@ def test_stream_drop_near_dups_batch_local_semantics(spark, tmp_path):
 
     target = str(tmp_path / "stream_triples")
     stream_build_triples(
-        read_pages_stream(spark, src, files_per_trigger=1), target,
+        read_stream(spark, src, PAGES_SCHEMA, files_per_trigger=1), target,
         drop_near_dups="batch_local",
     )
 
