@@ -76,7 +76,8 @@ def infer_stage_agg(
                 texts = (t or "" for t in pdf["text"])
             urls = pdf["url"].to_numpy(dtype=object)
             docs = [analyze(url, text) for url, text in zip(urls, texts)]
-            # one cross-document batched pair pass (model.predict_batch)
+            # per-doc graph stage; the pair tail runs across docs in
+            # chunks of model.net.TAIL_PAIRS gated pairs
             preds = model.predict_batch(docs)
             rec = np.concatenate(preds)
             doc = np.repeat(np.arange(len(docs)), [len(p) for p in preds])

@@ -8,6 +8,7 @@ Spark. All ops are vectorized numpy over the document's nodes/pairs.
 from __future__ import annotations
 
 import hashlib
+from typing import NamedTuple
 
 import numpy as np
 
@@ -184,43 +185,91 @@ _GATE_COLS = {
 _GATE_ANY = _GATE_MASK.any(axis=2)  # (6, 6): does this type-pair gate open?
 
 
+# Gated pairs the ff1 + gated-head tail takes at once. ``predict_batch``
+# runs the tail whenever its pending pairs reach this count, and once more
+# at the end of the call, so a Python worker's peak memory is bounded by
+# it plus one document's pairs, whatever the Arrow batch size or the
+# document length. 16384 is where r7's cross-document GEMMs had amortized
+# numpy's per-call dispatch. It is a fixed size, not a setting: the memory
+# bound and the GEMM width are both properties of this model.
+TAIL_PAIRS = 16384
+
+
+class _PairStage(NamedTuple):
+    """One document's output of ``GLREModel._pair_stage``.
+
+    ``hh`` / ``tt``: doc-local head / tail entity ids of the gated pairs;
+    ``dist``: distance bucket; ``gidx``: type-pair group id. ``ent_g``:
+    per-entity global reps; ``ctx``: the doc's context rep; ``l_single``:
+    per-entity local rep, 0 on multi-mention entities. ``rows_h`` /
+    ``l_h_multi``: pair rows whose head is multi-mention and their
+    attended head reps; ``rows_t`` / ``l_t_multi`` the same for tails."""
+
+    hh: np.ndarray
+    tt: np.ndarray
+    dist: np.ndarray
+    gidx: np.ndarray
+    ent_g: np.ndarray
+    ctx: np.ndarray
+    l_single: np.ndarray
+    rows_h: np.ndarray
+    l_h_multi: np.ndarray
+    rows_t: np.ndarray
+    l_t_multi: np.ndarray
+
+
 class GLREModel:
     """Frozen deterministic GLRE. ``predict_batch(docs)`` → one PRED_DTYPE
     record array per doc: (h, t, rel, score) with score > θ, one (argmax)
     relation per ordered entity pair, gated by entity-type compatibility.
 
+    The classifier scores a pair on ``[g_h; l_h; g_t; l_t; ctx; dist] @
+    ff1_w + ff1_b``, ReLU, then the ff2 logits. The forward pass rests on
+    four algebraic identities (same predictions; floats reassociate, so
+    scores drift by ≤2e-7, and emit sets were verified identical):
+
+    1. (r5) every feature block that is constant per entity / per doc /
+       per distance bucket goes through its ff1 / mha_q weight block
+       BEFORE pair fan-out, so those GEMMs run at ne (not ne²) rows;
+    2. (r5) the classifier head computes logits only at a pair's ≤3
+       type-gated relation columns instead of all 97;
+    3. (r5) single-mention entities (~91% of this corpus) skip attention —
+       softmax over one slot is exactly 1, so their local rep is the
+       per-entity chain v·W_o;
+    4. by (3), ``l_h`` / ``l_t`` of a single-mention entity is a
+       per-entity value, so it folds into the per-entity head / tail
+       blocks of (1): ``H = g @ F1[0:D] + l_single @ F1[D:2D] + (ctx @
+       F1[4D:5D] + b)[doc]``, ``T = g @ F1[2D:3D] + l_single @ F1[3D:4D]``
+       (``l_single`` is 0 on multi-mention entities), and a pair's hidden
+       row is ``H[h] + T[t] + dist_block[dist]`` plus, only on the rows
+       whose head or tail is multi-mention (~9% of entities), that role's
+       attended rep @ its F1 block. No (P, D) local-rep array is built.
+
     The graph + attention stages are vectorized PER DOCUMENT: full
     cross-document TENSOR batching (the (pairs, M, H, dh) attention
     gathers) was tried in r5 and measured 6× MORE CPU — those gathers
     fall out of cache, while a document's ~10³ gated pairs are
-    L2-resident — so per-doc work stays per-doc. r7 batches ONLY the
-    flat 2-D tail (ff1 + gated head) across the docs of one
-    ``predict_batch`` call: the per-doc (≈50, 64) GEMMs were numpy
-    dispatch-bound (~37% of the forward pass), and concatenating them
-    into per-batch (≈13k, 64) GEMMs measured 1298 → 962 us/doc at the
-    production Arrow batch size (256 docs). Same math, same per-element
-    add order; emit sets verified identical over 50k docs and the
-    score drift bound (BLAS kernel choice by row count) is ≤2e-7 —
-    the same standard as r5's restructure below. r5 notes: 
-    three algebraic identities (2.7× on the kernel, structurally
-    identical predictions, scores shift ≤1e-6): (1) every feature block
-    that is constant per entity / per doc / per distance bucket goes
-    through its ff1/mha_q weight block BEFORE pair fan-out, so those
-    GEMMs run at ne (not ne²) rows; (2) the classifier head computes
-    logits only at a pair's ≤3 type-gated relation columns instead of all
-    97; (3) single-mention entities (~91% of this corpus) skip attention
-    entirely — softmax over one slot is exactly 1, so their local rep is
-    the per-entity chain v·W_o."""
+    L2-resident — so per-doc work stays per-doc. r7 batched the flat 2-D
+    tail (ff1 + gated head) across documents: the per-doc (≈50, 64) GEMMs
+    were numpy dispatch-bound (~37% of the forward pass), and per-batch
+    GEMMs measured 1298 → 962 us/doc at 256-doc Arrow batches.
+
+    The tail runs every ``TAIL_PAIRS`` pending pairs rather than once per
+    call: run once over a 256-doc batch it held every pair at once,
+    ~1.1 KB per pair (a 465 MB worker peak over 256 long pages), so memory
+    grew with the batch. A fixed pair count keeps the GEMMs wide and the
+    memory bounded. A per-doc tail needs no constant but was rejected: on
+    short docs (kg_resume-shaped) it measured 1073 → 1328 us/doc (+24%),
+    the r7 dispatch cost again."""
 
     def __init__(self, weights: dict[str, np.ndarray], threshold: float = SCORE_THRESHOLD):
         self.w = weights
         self.threshold = threshold
 
-    def _pair_stage(self, doc: Doc, tok_ids: TokenIds):
-        """Per-document stage: graph forward + per-pair local (attention)
-        reps. Returns None when the doc can emit nothing, else the flat
-        pair features the batched ff1/head tail consumes:
-        (hh, tt, l_h, l_t, dist, gidx, ent_g, ctx)."""
+    def _pair_stage(self, doc: Doc, tok_ids: TokenIds) -> _PairStage | None:
+        """Per-document stage: graph forward + attended local reps of the
+        pairs with a multi-mention head or tail. Returns None when the doc
+        can emit nothing, else the features the pair tail consumes."""
         if not doc.entities or len(doc.entities) < 2:
             return None
         w = self.w
@@ -248,112 +297,95 @@ class GLREModel:
         hh, tt = hh[keep], tt[keep]
         if hh.size == 0:
             return None
+        dist = np.minimum(np.abs(first_sent[hh] - first_sent[tt]), N_DIST - 1)
+        gidx = type_idx[hh] * len(_TYPES) + type_idx[tt]
 
-        dh = D // HEADS
-        # r5: q = concat(ent_h, ent_t) @ mha_q ≡ ent_h @ mha_q[:D] +
-        # ent_t @ mha_q[D:], so the GEMM runs at ne rows once and the pair
-        # fan-out is a gather+add — replaces a (P, 2D) concatenate plus a
-        # (P, 2D)@(2D, D) matmul at P ≈ ne² rows.
-        qh_e = ent_g @ w["mha_q"][:D]                             # (ne, D)
-        qt_e = ent_g @ w["mha_q"][D:]                             # (ne, D)
-
-        # r5 single-mention shortcut: ~91% of this corpus' entities have
-        # exactly ONE mention, and softmax over one slot is exactly 1.0, so
-        # their local rep is query-independent: v[e, 0] @ mha_o, a
-        # per-ENTITY matmul chain with no pair fan-out. Only multi-mention
-        # entities get the padded tensor + per-pair attention, at ~9% of
-        # the former (P, M, H, dh) gather/einsum volume. The two role
-        # passes stay SEPARATE — fusing them into one (2P, …) einsum
-        # measured 1.4× slower (the doubled gather spills L2, same cache
-        # cliff as cross-doc tensor batching, see class docstring).
+        # identity 3: a single-mention entity's local rep is v[e, 0] @
+        # mha_o, per ENTITY. Identity 4 folds it into the tail's entity
+        # blocks, so multi-mention rows are zeroed here and corrected per
+        # pair below.
         n_ment = np.array([len(c) for c in doc.entities], dtype=np.int64)
         first_idx = np.array([c[0] for c in doc.entities], dtype=np.int64)
         l_single = (ment_g[first_idx] @ w["mha_v"]) @ w["mha_o"]  # (ne, D)
         multi = n_ment > 1
+        l_single[multi] = 0.0
+        rows_h = np.nonzero(multi[hh])[0]
+        rows_t = np.nonzero(multi[tt])[0]
+        if rows_h.size + rows_t.size == 0:
+            none = np.zeros((0, D), dtype=l_single.dtype)
+            return _PairStage(hh, tt, dist, gidx, ent_g, ctx, l_single,
+                              rows_h, none, rows_t, none)
+
+        # Only multi-mention entities get the padded tensor + per-pair
+        # attention. The two role passes stay SEPARATE — fusing them into
+        # one (2P, …) einsum measured 1.4× slower (the doubled gather
+        # spills L2, the same cache cliff as cross-doc tensor batching).
+        dh = D // HEADS
+        # r5: q = concat(ent_h, ent_t) @ mha_q ≡ ent_h @ mha_q[:D] +
+        # ent_t @ mha_q[D:], so the GEMM runs at ne rows once and the pair
+        # fan-out is a gather+add.
+        qh_e = ent_g @ w["mha_q"][:D]                             # (ne, D)
+        qt_e = ent_g @ w["mha_q"][D:]                             # (ne, D)
         midx = np.nonzero(multi)[0]
-        if midx.size:
-            remap = np.zeros(ne, dtype=np.int64)
-            remap[midx] = np.arange(midx.size)
-            M = int(n_ment[midx].max())
-            ment_pad = np.zeros((midx.size, M, D), dtype=np.float32)
-            ment_msk = np.zeros((midx.size, M), dtype=bool)
-            for j, e in enumerate(midx):
-                cluster = doc.entities[e]
-                ment_pad[j, : len(cluster)] = ment_g[cluster]
-                ment_msk[j, : len(cluster)] = True
-            k = (ment_pad @ w["mha_k"]).reshape(midx.size, M, HEADS, dh)
-            v = (ment_pad @ w["mha_v"]).reshape(midx.size, M, HEADS, dh)
+        remap = np.zeros(ne, dtype=np.int64)
+        remap[midx] = np.arange(midx.size)
+        M = int(n_ment[midx].max())
+        ment_pad = np.zeros((midx.size, M, D), dtype=np.float32)
+        ment_msk = np.zeros((midx.size, M), dtype=bool)
+        for j, e in enumerate(midx):
+            cluster = doc.entities[e]
+            ment_pad[j, : len(cluster)] = ment_g[cluster]
+            ment_msk[j, : len(cluster)] = True
+        k = (ment_pad @ w["mha_k"]).reshape(midx.size, M, HEADS, dh)
+        v = (ment_pad @ w["mha_v"]).reshape(midx.size, M, HEADS, dh)
 
-        def batched_local(ent_idx: np.ndarray) -> np.ndarray:
-            """i9 for all pairs at once, one entity role: (P, D)."""
-            out = l_single[ent_idx]          # fancy index → fresh array
-            rows = np.nonzero(multi[ent_idx])[0]
-            if rows.size:
-                ei = remap[ent_idx[rows]]
-                qq = (qh_e[hh[rows]] + qt_e[tt[rows]]).reshape(-1, HEADS, dh)
-                ke, ve, me = k[ei], v[ei], ment_msk[ei]
-                scores = np.einsum("phd,pmhd->phm", qq, ke) / np.sqrt(dh)
-                scores = np.where(me[:, None, :], scores, -np.inf)
-                att = _softmax(scores, axis=2)
-                out[rows] = (
-                    np.einsum("phm,pmhd->phd", att, ve).reshape(-1, D)
-                    @ w["mha_o"]
-                )
-            return out
+        def attended(rows: np.ndarray, ent_idx: np.ndarray) -> np.ndarray:
+            """i9 at the given pair rows, one entity role: (rows, D)."""
+            ei = remap[ent_idx[rows]]
+            qq = (qh_e[hh[rows]] + qt_e[tt[rows]]).reshape(-1, HEADS, dh)
+            ke, ve, me = k[ei], v[ei], ment_msk[ei]
+            scores = np.einsum("phd,pmhd->phm", qq, ke) / np.sqrt(dh)
+            scores = np.where(me[:, None, :], scores, -np.inf)
+            att = _softmax(scores, axis=2)
+            return np.einsum("phm,pmhd->phd", att, ve).reshape(-1, D) @ w["mha_o"]
 
-        l_h = batched_local(hh)
-        l_t = batched_local(tt)
-        dist = np.minimum(np.abs(first_sent[hh] - first_sent[tt]), N_DIST - 1)
-        gidx = type_idx[hh] * len(_TYPES) + type_idx[tt]
-        return hh, tt, l_h, l_t, dist, gidx, ent_g, ctx
+        return _PairStage(hh, tt, dist, gidx, ent_g, ctx, l_single,
+                          rows_h, attended(rows_h, hh), rows_t, attended(rows_t, tt))
 
-    def predict_batch(self, docs: list[Doc]) -> list[np.ndarray]:
-        """Per-doc graph stage (see class docstring), then ONE ff1 + gated
-        head over the concatenation of every doc's gated pairs. The r5 FF
-        restructure comments apply unchanged — feat @ ff1_w decomposes
-        over ff1_w's six row blocks; the entity / doc / distance-bucket
-        blocks run at ne / n_docs / 7 rows and fan out by gather+add; the
-        classifier computes logits only at each pair's ≤3 type-gated
-        columns, ascending, so the per-group argmax keeps the exact
-        lowest-index tie-break."""
+    def _tail(self, staged: list[_PairStage]) -> list[np.ndarray]:
+        """ff1 + gated head over the concatenated pairs of ``staged``
+        (identities 1, 2 and 4 of the class docstring) → one PRED_DTYPE
+        array per staged doc. The classifier computes logits only at each
+        pair's ≤3 type-gated columns, ascending, so the per-group argmax
+        keeps the exact lowest-index tie-break."""
         w = self.w
         F1 = w["ff1_w"]
-        per, ent_blocks, ctx_rows, doc_idx = [], [], [], []
-        tok_ids = TokenIds()
-        for di, doc in enumerate(docs):
-            st = self._pair_stage(doc, tok_ids)
-            if st is None:
-                continue
-            per.append(st[:6])
-            ent_blocks.append(st[6])
-            ctx_rows.append(st[7])
-            doc_idx.append(di)
-        if not per:
-            return [np.empty(0, dtype=PRED_DTYPE) for _ in docs]
+        ne_sizes = [st.ent_g.shape[0] for st in staged]
+        p_sizes = [st.hh.size for st in staged]
+        ent_off = np.cumsum([0, *ne_sizes[:-1]])
+        p_off = np.cumsum([0, *p_sizes[:-1]])
+        ent_all = np.vstack([st.ent_g for st in staged])
+        l_all = np.vstack([st.l_single for st in staged])
+        ctx_all = np.vstack([st.ctx for st in staged])
 
-        ne_sizes = np.array([b.shape[0] for b in ent_blocks])
-        ent_off = np.concatenate([[0], np.cumsum(ne_sizes)])[:-1]
-        p_sizes = np.array([p[0].size for p in per])
-        pair_doc = np.repeat(np.arange(len(per)), p_sizes)
-        ent_all = np.vstack(ent_blocks)
-        hh_g = np.concatenate([p[0] + o for p, o in zip(per, ent_off)])
-        tt_g = np.concatenate([p[1] + o for p, o in zip(per, ent_off)])
-        l_h = np.vstack([p[2] for p in per])
-        l_t = np.vstack([p[3] for p in per])
-        dist = np.concatenate([p[4] for p in per])
-        gidx = np.concatenate([p[5] for p in per])
-        ctx_all = np.vstack(ctx_rows)
+        H = ent_all @ F1[0 * D : 1 * D]                             # (Ne, F)
+        H += l_all @ F1[1 * D : 2 * D]
+        H += (ctx_all @ F1[4 * D : 5 * D] + w["ff1_b"])[np.repeat(np.arange(len(staged)), ne_sizes)]
+        T = ent_all @ F1[2 * D : 3 * D]
+        T += l_all @ F1[3 * D : 4 * D]
 
-        hid = (ent_all @ F1[0 * D : 1 * D])[hh_g]                 # (P, F)
-        hid += (ent_all @ F1[2 * D : 3 * D])[tt_g]
-        hid += l_h @ F1[1 * D : 2 * D]
-        hid += l_t @ F1[3 * D : 4 * D]
-        hid += (ctx_all @ F1[4 * D : 5 * D] + w["ff1_b"])[pair_doc]
-        hid += (w["dist"] @ F1[5 * D :])[dist]
+        hid = H[np.concatenate([st.hh + o for st, o in zip(staged, ent_off)])]  # (P, F)
+        hid += T[np.concatenate([st.tt + o for st, o in zip(staged, ent_off)])]
+        rows = np.concatenate([st.rows_h + o for st, o in zip(staged, p_off)])
+        hid[rows] += np.vstack([st.l_h_multi for st in staged]) @ F1[1 * D : 2 * D]
+        rows = np.concatenate([st.rows_t + o for st, o in zip(staged, p_off)])
+        hid[rows] += np.vstack([st.l_t_multi for st in staged]) @ F1[3 * D : 4 * D]
+        hid += (w["dist"] @ F1[5 * D :])[np.concatenate([st.dist for st in staged])]
         np.maximum(hid, 0.0, out=hid)
 
-        best = np.zeros(hh_g.size, dtype=np.int64)
-        score = np.zeros(hh_g.size, dtype=np.float64)
+        gidx = np.concatenate([st.gidx for st in staged])
+        best = np.zeros(gidx.size, dtype=np.int64)
+        score = np.zeros(gidx.size, dtype=np.float64)
         for gid in np.unique(gidx):
             cols = _GATE_COLS[int(gid)]
             sel = gidx == gid
@@ -363,10 +395,33 @@ class GLREModel:
             score[sel] = _sigmoid(lg[np.arange(lg.shape[0]), bi])
         emit = score > self.threshold
         rec = np.empty(int(emit.sum()), dtype=PRED_DTYPE)
-        rec["h"] = np.concatenate([p[0] for p in per])[emit]   # doc-local ids
-        rec["t"] = np.concatenate([p[1] for p in per])[emit]
+        rec["h"] = np.concatenate([st.hh for st in staged])[emit]   # doc-local ids
+        rec["t"] = np.concatenate([st.tt for st in staged])[emit]
         rec["rel"] = best[emit]
         rec["score"] = score[emit]
         # emitted rows are in doc order: one split at the per-doc counts
-        n_emit = np.bincount(np.asarray(doc_idx)[pair_doc[emit]], minlength=len(docs))
+        pair_doc = np.repeat(np.arange(len(staged)), p_sizes)
+        n_emit = np.bincount(pair_doc[emit], minlength=len(staged))
         return np.split(rec, np.cumsum(n_emit)[:-1])
+
+    def predict_batch(self, docs: list[Doc]) -> list[np.ndarray]:
+        """One PRED_DTYPE record array per doc, in ``docs`` order (empty
+        for a doc that can emit nothing). Runs the per-doc graph stage
+        doc by doc and the batched ff1 + gated-head tail (``_tail``) each
+        time the pending gated pairs reach ``TAIL_PAIRS``, then once over
+        the rest: the tail's width is bounded by pairs, not by
+        ``len(docs)``. See the class docstring for the identities."""
+        out = [np.empty(0, dtype=PRED_DTYPE) for _ in docs]
+        tok_ids = TokenIds()
+        pending, n_pairs = [], 0
+        for di, doc in enumerate(docs):
+            st = self._pair_stage(doc, tok_ids)
+            if st is not None:
+                pending.append((di, st))
+                n_pairs += st.hh.size
+            if pending and (n_pairs >= TAIL_PAIRS or di == len(docs) - 1):
+                recs = self._tail([st for _, st in pending])
+                for (i, _), rec in zip(pending, recs):
+                    out[i] = rec
+                pending, n_pairs = [], 0
+        return out

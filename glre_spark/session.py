@@ -12,7 +12,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 # Docs are fat rows (html binary + full text): keep Arrow batches small so
-# the mapInPandas inference stage stays allocation-bounded (SURVEY.md §4.3).
+# the mapInPandas inference stage's page frames stay small (SURVEY.md §4.3).
+# The model's pair tail is bounded separately, by gated pairs
+# (model.net.TAIL_PAIRS), not by this batch size.
 ARROW_MAX_RECORDS_PER_BATCH = 256
 
 

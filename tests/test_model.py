@@ -9,13 +9,16 @@ from __future__ import annotations
 
 import json
 import pathlib
+import tracemalloc
 
 import numpy as np
 import pytest
 
-from glre_spark.datagen import gen_pages
-from glre_spark.model import GLREModel, build_weights
+from glre_spark.datagen import gen_page_row, gen_pages
+from glre_spark.extract import extract_text
+from glre_spark.model import GLREModel, build_weights, net
 from glre_spark.model.net import REL_IDS
+from glre_spark.model.weights import D, HEADS, N_DIST
 from glre_spark.nlp import analyze, detect_mentions, sent_split, tokenize
 
 GOLDEN = pathlib.Path(__file__).parent / "goldens" / "golden_predictions.json"
@@ -83,6 +86,93 @@ def test_docred_labels_match_reference_goldens(tmp_path):
     want = {tuple(x) for x in json.loads(GOLDEN.read_text()) if x[0] in titles}
     assert len(docred) == 40 and len(want) == 370
     assert got == want
+
+
+def _literal_predictions(w: dict, doc) -> dict[tuple[int, int, int], float]:
+    """{(h, t, rel): score} for one doc, straight from the paper's math:
+    per gated ordered pair, softmax attention over the entity's mentions
+    for EVERY entity (single-mention ones included), the concatenated
+    [g_h; l_h; g_t; l_t; ctx; dist] @ ff1 + b, ReLU, all 97 logits, the
+    type-gate mask and argmax. None of the model's pair-stage identities
+    (per-entity ff1 blocks, gated columns, single-mention shortcut, the
+    folded local reps, the batched tail) are used."""
+    if len(doc.entities) < 2:
+        return {}
+    nodes, nm, ne, ns = net.build_nodes(w, doc, net.encode_words(w, doc.sents, net.TokenIds()))
+    g = net.rgcn_forward(w, nodes, net.build_adj(doc, nm, ne, ns))
+    ment_g, ent_g = g[:nm], g[nm : nm + ne]
+    ctx = net.context_pool(w, g[nm + ne :])
+    dh = D // HEADS
+
+    def local(e: int, q: np.ndarray) -> np.ndarray:
+        ments = ment_g[doc.entities[e]]
+        k = (ments @ w["mha_k"]).reshape(-1, HEADS, dh)
+        v = (ments @ w["mha_v"]).reshape(-1, HEADS, dh)
+        scores = (k * q.reshape(HEADS, dh)).sum(axis=2) / np.sqrt(dh)   # (m, H)
+        att = np.exp(scores - scores.max(axis=0))
+        att /= att.sum(axis=0)
+        return (att[:, :, None] * v).sum(axis=0).reshape(D) @ w["mha_o"]
+
+    out = {}
+    for h in range(ne):
+        for t in range(ne):
+            gate = net.TYPE_GATE.get((doc.entity_types[h], doc.entity_types[t]))
+            if h == t or gate is None:
+                continue
+            q = np.concatenate([ent_g[h], ent_g[t]]) @ w["mha_q"]
+            sh = doc.mentions[doc.entities[h][0]].sent_id
+            st = doc.mentions[doc.entities[t][0]].sent_id
+            feat = np.concatenate([
+                ent_g[h], local(h, q), ent_g[t], local(t, q), ctx,
+                w["dist"][min(abs(sh - st), N_DIST - 1)],
+            ])
+            hid = np.maximum(feat @ w["ff1_w"] + w["ff1_b"], 0.0)
+            logits = hid @ w["ff2_w"] + w["ff2_b"]
+            masked = np.full(len(REL_IDS), -np.inf, dtype=logits.dtype)
+            masked[gate] = logits[gate]
+            r = int(masked.argmax())
+            score = 1.0 / (1.0 + np.exp(-logits[r]))
+            if score > net.SCORE_THRESHOLD:
+                out[(h, t, r)] = float(score)
+    return out
+
+
+def test_predict_batch_matches_literal_math():
+    """The batched, folded forward pass emits exactly what the literal
+    per-pair classifier emits over the golden corpus, with scores within
+    float reassociation (|Δ| ≤ 1e-6)."""
+    w = build_weights()
+    docs = [analyze(p["url"], p["text"]) for p in gen_pages(N_GOLD_DOCS)]
+    preds = GLREModel(w).predict_batch(docs)
+    n_emit = 0
+    for doc, rec in zip(docs, preds):
+        want = _literal_predictions(w, doc)
+        got = {(h, t, r): s for h, t, r, s in rec.tolist()}
+        assert set(got) == set(want), doc.url
+        assert all(abs(got[k] - want[k]) <= 1e-6 for k in got), doc.url
+        n_emit += len(got)
+    assert n_emit > 0
+
+
+def test_predict_batch_memory_bounded_by_pairs():
+    """The pair tail runs at a fixed pair count, so one call's peak
+    traced memory does not grow with the number of docs in the call:
+    256 long kg_build-shaped pages peak at most 2× their first 32."""
+    rows = (gen_page_row(i, 42, (12, 28)) for i in range(400))
+    docs = [analyze(r["url"], extract_text(r["html"])) for r in rows if r["lang"] == "en"][:256]
+    assert len(docs) == 256
+    model = GLREModel(build_weights())
+
+    def peak(batch) -> int:
+        tracemalloc.start()
+        try:
+            model.predict_batch(batch)
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    small, full = peak(docs[:32]), peak(docs)
+    assert full <= 2 * small, f"peak {full / 2**20:.1f} MB over 256 docs vs {small / 2**20:.1f} MB over 32"
 
 
 if __name__ == "__main__":  # regenerate goldens after an INTENTIONAL model change
