@@ -253,8 +253,8 @@ def gen_page_row(
     }
 
 
-def gen_pages(n_docs: int, seed: int = 42, sent_range: tuple[int, int] = (2, 8)) -> list[dict]:
-    return [gen_page_row(i, seed, sent_range) for i in range(n_docs)]
+def gen_pages(n_docs: int) -> list[dict]:
+    return [gen_page_row(i) for i in range(n_docs)]
 
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"

@@ -50,15 +50,9 @@ def _extract_series(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-_UDF = None
-
-
 def extract_text_udf(col):
-    """Arrow-vectorized UDF wrapper (built lazily — pandas_udf needs an
+    """Arrow-vectorized UDF wrapper (built per call — pandas_udf needs an
     active SparkSession to resolve its return type)."""
-    global _UDF
-    if _UDF is None:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        _UDF = F.pandas_udf(_extract_series, "string")
-    return _UDF(col)
+    return F.pandas_udf(_extract_series, "string")(col)

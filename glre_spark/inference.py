@@ -37,12 +37,13 @@ _REL = np.array(REL_IDS, dtype=object)
 
 def infer_stage_agg(
     df: DataFrame,
-    weights_bc=None,
+    weights_bc,
     extract_html: bool = False,
     group_col: str | None = None,
 ) -> DataFrame:
     """(…, url, text|html) → per-partition aggregated predictions
-    (h_name, r, t_name, score, url, n_pred_rows).
+    (h_name, r, t_name, score, url, n_pred_rows), scored with the weight
+    dict ``weights_bc`` broadcasts (``broadcast_weights``).
 
     With ``extract_html=True`` the i1 extraction step runs INSIDE this same
     Arrow stage (SURVEY.md §2.11: i1-i12 are one fused mapInPandas) — html
@@ -67,7 +68,7 @@ def infer_stage_agg(
     keys = ["h_name", "r", "t_name", *([group_col] if group_col else [])]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_model(weights_bc.value if weights_bc is not None else None)
+        model = _get_model(weights_bc.value)
         frames = []
         for pdf in batches:
             if extract_html:

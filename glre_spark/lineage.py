@@ -17,8 +17,9 @@ exact resume. Mechanism (works on plain parquet; Iceberg-ready layout):
 - the manifest is appended AFTER the data lands — manifest-last commit
   order means a crash can only lose uncommitted work (whose partitions the
   resume overwrites idempotently), never record phantom work;
-- on restart, ``pending_groups`` left-anti joins the manifest and only
-  missing groups are recomputed (resume_filter op).
+- on restart, ``pending_groups`` collects the manifest's done groups and
+  only the missing ones are recomputed (the resume_filter op is the
+  relational form).
 
 Dedup scope: triples are exact-deduped WITHIN a bucket group (the unit of
 idempotent commit); the same (subj, pred, obj) observed in two groups is
@@ -89,10 +90,13 @@ def append_manifest_rows(
 
 
 def pending_groups(spark: SparkSession, base: str, n_groups: int) -> list[int]:
-    all_groups = spark.range(n_groups).select(F.col("id").cast("int").alias("bucket_group"))
-    done = read_manifest(spark, base).filter("status = 'done'").select("bucket_group")
-    rows = all_groups.join(done, "bucket_group", "left_anti").collect()
-    return sorted(r.bucket_group for r in rows)
+    """Groups 0..n_groups-1 without a 'done' manifest row, ascending."""
+    done = {
+        r.bucket_group
+        for r in read_manifest(spark, base).filter("status = 'done'")
+        .select("bucket_group").collect()
+    }
+    return [g for g in range(n_groups) if g not in done]
 
 
 def _process_groups(
@@ -209,7 +213,7 @@ def run_with_checkpoints(
     run_id = uuid.uuid4().hex[:12]
     _heal_torn_writes(base)
     pages_g = pages.withColumn(
-        "bucket_group", F.pmod(url_bucket(F.col("url")), F.lit(n_groups)).cast("int")
+        "bucket_group", F.pmod(url_bucket(), F.lit(n_groups)).cast("int")
     )
     todo = pending_groups(spark, base, n_groups)
     if fail_after is not None and fail_after < len(todo):

@@ -81,35 +81,36 @@ MAX_LSH_BLOCK = 64  # block-size cap: one hot band block would otherwise go
                     # quadratic in the self-join (cartesian bomb at web
                     # scale); oversized blocks are dropped (SURVEY M4)
 KEEPER_TAU = 0.8  # classic near-dup Jaccard threshold
+NAME_TAU = 0.85   # name-cluster Jaccard threshold
 CC_MAX_ITER = 20  # connected-components round cap (pointer jumping
                   # converges in O(log diameter) rounds)
 
 
-def shingle_set(c, k: int = SHINGLE_K):
-    """Distinct character k-shingles via a higher-order function
+def shingle_set(c):
+    """Distinct character SHINGLE_K-shingles via a higher-order function
     (str_shingle §2.8)."""
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
-            lambda i: c.substr(i, F.lit(k)),
+            F.sequence(F.lit(1), F.greatest(F.length(c) - (SHINGLE_K - 1), F.lit(1))),
+            lambda i: c.substr(i, F.lit(SHINGLE_K)),
         )
     )
 
 
-def shingle_hashes(c, k: int = SHINGLE_K):
-    """Distinct k-shingles → 28-bit base hashes (one md5 per shingle)."""
+def shingle_hashes(c):
+    """Distinct shingles → 28-bit base hashes (one md5 per shingle)."""
     return F.transform(
-        shingle_set(c, k),
+        shingle_set(c),
         lambda x: F.conv(F.md5(x).substr(1, 7), 16, 10).cast("bigint"),
     )
 
 
-def exact_shingles(c, k: int = SHINGLE_K):
-    """Distinct k-shingles as xxhash64 longs — the exact-verify set: ~2.5×
+def exact_shingles(c):
+    """Distinct shingles as xxhash64 longs — the exact-verify set: ~2.5×
     less shuffle through the pair join than 3-char strings, identical set
     sizes (64 bits are injective on a trigram vocabulary whp). The 28-bit
     base hash is for signatures only; it would blur the verify."""
-    return F.transform(shingle_set(c, k), lambda x: F.xxhash64(x))
+    return F.transform(shingle_set(c), lambda x: F.xxhash64(x))
 
 
 def perm_hash(i: int):
@@ -180,8 +181,10 @@ def with_sets(pairs: DataFrame, sets: DataFrame) -> DataFrame:
     )
 
 
-def jaccard(a: str = "sh_a", b: str = "sh_b"):
-    return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
+def jaccard():
+    """Exact Jaccard of the sh_a / sh_b sets ``with_sets`` joins on."""
+    inter, union = F.array_intersect("sh_a", "sh_b"), F.array_union("sh_a", "sh_b")
+    return F.size(inter).cast("double") / F.size(union)
 
 
 # ---------------------------------------------------------------------------
@@ -365,25 +368,17 @@ def near_dup_keepers(docs: DataFrame, sketch_k: int | None = None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def cluster_names(
-    names: DataFrame,
-    weight_col: str | None = None,
-    jaccard_threshold: float = 0.85,
-) -> DataFrame:
-    """(name [, weight]) → (name, cluster_name) mapping for near-duplicate
+def cluster_names(names: DataFrame) -> DataFrame:
+    """(name, n_sources) → (name, cluster_name) mapping for near-duplicate
     names. Pure DataFrame ops: the near-duplicate chain with NAME_BANDS
-    bands → Jaccard verify on the normalized names' shingle strings →
-    connected components (by hashed name id) → ``canonicalize`` (max
-    summed weight, tie → lexicographic).
+    bands → Jaccard verify (≥ NAME_TAU) on the normalized names' shingle
+    strings → connected components (by hashed name id) → ``canonicalize``
+    (max summed n_sources, tie → lexicographic).
 
     Node ids are xxhash64(name): fully parallel (a dense_rank over a
     global no-partition window would funnel every distinct name through
     one task) and collision-safe at 64 bits for name-clustering scale."""
-    w = (
-        names.groupBy("name").agg(F.sum(weight_col).alias("_w"))
-        if weight_col
-        else names.select("name").distinct().withColumn("_w", F.lit(1))
-    )
+    w = names.groupBy("name").agg(F.sum("n_sources").alias("_w"))
     ided = w.withColumn("doc_id", F.xxhash64(F.col("name"))).withColumn(
         "_norm", norm_name(F.col("name"))
     )
@@ -391,7 +386,7 @@ def cluster_names(
     sets = ided.select("doc_id", shingle_set(F.col("_norm")).alias("sh"))
     pairs = (
         with_sets(candidates(band_rows(sig, NAME_BANDS)), sets)
-        .filter(jaccard() >= jaccard_threshold)
+        .filter(jaccard() >= NAME_TAU)
         .select("id_a", "id_b")
     )
     comps = connected_components(pairs)  # only ids that appear in edges

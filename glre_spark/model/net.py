@@ -262,9 +262,8 @@ class GLREModel:
     short docs (kg_resume-shaped) it measured 1073 → 1328 us/doc (+24%),
     the r7 dispatch cost again."""
 
-    def __init__(self, weights: dict[str, np.ndarray], threshold: float = SCORE_THRESHOLD):
+    def __init__(self, weights: dict[str, np.ndarray]):
         self.w = weights
-        self.threshold = threshold
 
     def _pair_stage(self, doc: Doc, tok_ids: TokenIds) -> _PairStage | None:
         """Per-document stage: graph forward + attended local reps of the
@@ -393,7 +392,7 @@ class GLREModel:
             bi = lg.argmax(axis=1)
             best[sel] = cols[bi]
             score[sel] = _sigmoid(lg[np.arange(lg.shape[0]), bi])
-        emit = score > self.threshold
+        emit = score > SCORE_THRESHOLD
         rec = np.empty(int(emit.sum()), dtype=PRED_DTYPE)
         rec["h"] = np.concatenate([st.hh for st in staged])[emit]   # doc-local ids
         rec["t"] = np.concatenate([st.tt for st in staged])[emit]

@@ -21,8 +21,8 @@ N_REL = 97        # 96 DocRED-style relations + NA at index 0
 D_FF = 64         # classifier hidden
 
 
-def build_weights(seed: int = MODEL_SEED) -> dict[str, np.ndarray]:
-    rng = np.random.default_rng(seed)
+def build_weights() -> dict[str, np.ndarray]:
+    rng = np.random.default_rng(MODEL_SEED)
     s = 1.0 / np.sqrt(D)
 
     def mat(*shape, scale=s):

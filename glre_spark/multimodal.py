@@ -136,10 +136,10 @@ def ahash64(img: np.ndarray) -> int:
     return v
 
 
-def sample_frames(b: bytes, every: int = 4) -> list[tuple[int, bytes]]:
-    """Every k-th frame of a video binary → (frame_idx, frame bytes)."""
+def sample_frames(b: bytes) -> list[tuple[int, bytes]]:
+    """Every 4th frame of a video binary → (frame_idx, frame bytes)."""
     frames = decode_video(b)
-    return [(i, frames[i].tobytes()) for i in range(0, frames.shape[0], every)]
+    return [(i, frames[i].tobytes()) for i in range(0, frames.shape[0], 4)]
 
 
 def audio_features(b: bytes) -> dict:

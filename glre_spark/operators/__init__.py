@@ -77,13 +77,13 @@ def fround(col, d: int = 4):
     return F.round(col + F.lit(1e-9), d) + F.lit(0.0)
 
 
-def cents(col, scale: int = 100):
-    """Fixed-point lift: money/metric doubles → exact BIGINT (order-
-    independent sums — float SUM order differs across engines/partitions).
-    Oracle twin: ``CAST(ROUND(x * scale) AS BIGINT)``."""
+def cents(col):
+    """Fixed-point lift: money/metric doubles → exact BIGINT hundredths
+    (order-independent sums — float SUM order differs across
+    engines/partitions). Oracle twin: ``CAST(ROUND(x * 100) AS BIGINT)``."""
     from pyspark.sql import functions as F
 
-    return F.round(col * scale, 0).cast("bigint")
+    return F.round(col * 100, 0).cast("bigint")
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -16,6 +16,8 @@ from glre_spark.operators import cents, fround, load, op, staging_dir
 from glre_spark.operators.scans import PAGES_CTE, pages_view
 from glre_spark.pipeline import latest_per_url
 
+SALT_BUCKETS = 8  # join_salted_skew's fact-side salt range / dim-side replication
+
 
 @op(
     "join_inner_eq",
@@ -58,19 +60,19 @@ def join_broadcast(spark, sf_dir):
        FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
        GROUP BY s.s_name""",
 )
-def join_salted_skew(spark, sf_dir, salt_buckets: int = 8):
+def join_salted_skew(spark, sf_dir):
     """Salted broadcast join: fact side salted by row hash, dim side
-    replicated ×N via explode(sequence) — result ≡ the plain join (the
-    oracle IS the plain join)."""
+    replicated ×SALT_BUCKETS via explode(sequence) — result ≡ the plain
+    join (the oracle IS the plain join)."""
     li = load(spark, sf_dir, "lineitem").withColumn(
         "_salt",
         F.pmod(
-            F.xxhash64("l_orderkey", "l_linenumber"), F.lit(salt_buckets)
+            F.xxhash64("l_orderkey", "l_linenumber"), F.lit(SALT_BUCKETS)
         ).cast("int"),
     )
     sup = (
         load(spark, sf_dir, "supplier")
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
+        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1))))
     )
     return (
         li.join(

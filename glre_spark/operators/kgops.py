@@ -302,12 +302,12 @@ def repartition_urlhash(spark, sf_dir):
     """Explicit url-hash bucketing before inference; verified by bucket
     histogram (layout itself isn't SQL-observable)."""
     from glre_spark.operators.scans import pages_view
-    from glre_spark.pipeline import URL_BUCKETS, url_bucket
+    from glre_spark.pipeline import url_bucket
 
     pages = pages_view(spark, sf_dir)
     return (
-        pages.repartition(32, url_bucket(F.col("url")))
-        .withColumn("bucket", url_bucket(F.col("url")))
+        pages.repartition(32, url_bucket())
+        .withColumn("bucket", url_bucket())
         .groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
     )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from glre_spark.operators import fround, load, op
 
 
-def _media_df(spark, sf_dir, gen_fn, schema="doc_id long, media binary"):
+def _media_df(spark, sf_dir, gen_fn):
     """doc_ids → (doc_id, media binary) via mapInPandas: the binary column
     crosses the Arrow boundary exactly like real blob columns would.
 
@@ -37,7 +37,7 @@ def _media_df(spark, sf_dir, gen_fn, schema="doc_id long, media binary"):
                 }
             )
 
-    return docs.mapInPandas(gen, schema)
+    return docs.mapInPandas(gen, "doc_id long, media binary")
 
 
 @op(

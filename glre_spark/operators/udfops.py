@@ -92,12 +92,13 @@ _DOCRED_PATH = _os.path.join(
 
 def _materialize_docred(path: str = _DOCRED_PATH) -> str:
     """Write the 40-doc DocRED-shaped nested JSON (deterministic: frozen
-    model over gen_pages(40)) if not already present; returns the path."""
+    model over gen_pages(40)); returns the path. Rebuilt on every call: a
+    file left by an earlier model would feed stale labels to the op and
+    its DuckDB twin alike, and both would still agree."""
     import json
     import os
+    import uuid
 
-    if os.path.exists(path):
-        return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
     from glre_spark.datagen import gen_pages
     from glre_spark.model import GLREModel, build_weights
@@ -131,7 +132,7 @@ def _materialize_docred(path: str = _DOCRED_PATH) -> str:
                 ],
             }
         )
-    tmp = path + ".tmp"
+    tmp = f"{path}.{os.getpid()}.{uuid.uuid4().hex}.tmp"  # one per writer
     with open(tmp, "w") as f:
         json.dump(docs, f)
     os.replace(tmp, path)  # atomic: concurrent callers see whole files only

@@ -36,9 +36,10 @@ LANG = "en"  # the one language the model and alias dictionary cover
 URL_BUCKETS = 1024  # deterministic lineage buckets, decoupled from task count
 
 
-def url_bucket(col=None):
-    """Stable url-hash bucket (repartition_urlhash, SURVEY.md §2.9)."""
-    return F.pmod(F.xxhash64(col if col is not None else F.col("url")), F.lit(URL_BUCKETS)).cast("int")
+def url_bucket():
+    """Stable hash bucket of the ``url`` column (repartition_urlhash,
+    SURVEY.md §2.9)."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(URL_BUCKETS)).cast("int")
 
 
 def latest_per_url(pages: DataFrame) -> DataFrame:
@@ -101,11 +102,10 @@ def prepare_pages(pages: DataFrame, use_extractor: bool = True,
     one Python stage. With ``use_extractor`` the html column is carried
     through; otherwise the trusted text column is (and html is pruned from
     the scan by Catalyst)."""
-    # `bucket` is the deterministic lineage-key COLUMN (resume
-    # filtering), decoupled from the physical task count.
-    df = latest_per_url(eligible_pages(pages)).withColumn("bucket", url_bucket())
     payload = "html" if use_extractor else "text"
-    return df.select("url", "warc_ts", payload, "lang", "bucket", *(carry_cols or []))
+    return latest_per_url(eligible_pages(pages)).select(
+        "url", "warc_ts", payload, "lang", *(carry_cols or [])
+    )
 
 
 def predictions_to_triples(preds: DataFrame, alias_df: DataFrame) -> DataFrame:
@@ -209,6 +209,6 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         names = deduped.select(F.col("subj").alias("name"), F.col("n_sources")).unionByName(
             deduped.select(F.col("obj").alias("name"), F.col("n_sources"))
         )
-        mapping = cluster_names(names, weight_col="n_sources")
+        mapping = cluster_names(names)
         deduped = apply_name_clusters(deduped, mapping)
     return deduped

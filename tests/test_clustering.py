@@ -14,10 +14,10 @@ def test_near_duplicate_names_cluster_to_heaviest(spark):
         ("Globex Industries", 5),
         ("Initech Systems", 3),
     ]
-    names = spark.createDataFrame(rows, "name string, n long")
+    names = spark.createDataFrame(rows, "name string, n_sources long")
     mapping = {
         r.name: r.cluster_name
-        for r in cluster_names(names, weight_col="n").collect()
+        for r in cluster_names(names).collect()
     }
     assert mapping["Vandelay Industries Incorporate"] == "Vandelay Industries Incorporated"
     assert mapping["Vandelay Industries Incorporatedd"] == "Vandelay Industries Incorporated"
@@ -37,7 +37,7 @@ def test_apply_name_clusters_rewrites_and_redupes(spark):
     names = triples.selectExpr("subj AS name", "n_sources").unionByName(
         triples.selectExpr("obj AS name", "n_sources")
     )
-    mapping = cluster_names(names, weight_col="n_sources", jaccard_threshold=0.6)
+    mapping = cluster_names(names)
     out = apply_name_clusters(triples, mapping).collect()
     assert len(out) == 1
     (row,) = out
@@ -50,9 +50,9 @@ def test_clustering_deterministic(spark):
         ("Entity Number 7x", 1),
         ("Entity Number 17x", 1),
     ]
-    names = spark.createDataFrame(rows, "name string, n long")
-    a = sorted(map(tuple, cluster_names(names, weight_col="n").collect()))
-    b = sorted(map(tuple, cluster_names(names, weight_col="n").collect()))
+    names = spark.createDataFrame(rows, "name string, n_sources long")
+    a = sorted(map(tuple, cluster_names(names).collect()))
+    b = sorted(map(tuple, cluster_names(names).collect()))
     assert a == b
 
 

@@ -88,6 +88,19 @@ def test_docred_labels_match_reference_goldens(tmp_path):
     assert got == want
 
 
+def test_docred_corpus_is_rebuilt_over_a_stale_file(tmp_path):
+    """A file already at the corpus path (an earlier model's labels, a
+    torn write) is replaced by the fresh corpus, not returned as is: the
+    op and its DuckDB twin both read it, so parity cannot see it stale."""
+    from glre_spark.operators.udfops import _materialize_docred
+
+    fresh = pathlib.Path(_materialize_docred(str(tmp_path / "fresh.json"))).read_bytes()
+    stale = tmp_path / "docred.json"
+    stale.write_bytes(b'[{"title": "stale", "labels": []}]')
+    assert pathlib.Path(_materialize_docred(str(stale))).read_bytes() == fresh
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["docred.json", "fresh.json"]
+
+
 def _literal_predictions(w: dict, doc) -> dict[tuple[int, int, int], float]:
     """{(h, t, rel): score} for one doc, straight from the paper's math:
     per gated ordered pair, softmax attention over the entity's mentions

@@ -68,7 +68,7 @@ def test_spark_ahash_matches_python_oracle(spark):
 
 def test_sampled_frames_content():
     b = gen_video(11)
-    frames = sample_frames(b, every=4)
+    frames = sample_frames(b)
     vid = decode_video(b)
     assert [i for i, _ in frames] == list(range(0, video_frames(11), 4))
     for i, fb in frames:

@@ -69,9 +69,9 @@ def test_cluster_names_has_no_global_window(spark):
     from glre_spark.linking import cluster_names
 
     names = spark.createDataFrame(
-        [(f"Entity {i}", 1) for i in range(20)], "name string, n long"
+        [(f"Entity {i}", 1) for i in range(20)], "name string, n_sources long"
     )
-    df = cluster_names(names, weight_col="n")
+    df = cluster_names(names)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     # id assignment is xxhash64(name), never a global dense_rank
     assert "dense_rank" not in plan, "global dense_rank id assignment is back"

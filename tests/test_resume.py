@@ -221,7 +221,7 @@ def test_manifest_triples_match_disk_per_group(spark, tmp_path):
 
     base = str(tmp_path / "per_group")
     empty_group = GROUPS - 1
-    group = F.pmod(url_bucket(F.col("url")), F.lit(GROUPS))
+    group = F.pmod(url_bucket(), F.lit(GROUPS))
     pages = pages_df(spark, N_DOCS, partitions=4)
     pages = pages.unionByName(pages.withColumn("url", F.concat("url", F.lit("?mirror"))))
     pages = pages.withColumn(
