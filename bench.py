@@ -54,7 +54,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -62,16 +61,7 @@ def main() -> None:
     from glre_spark.session import get_spark
 
     _ensure_loaded()
-    # AQE byte-based coalescing OFF, as in the scaling bench (rev 3). The
-    # flagship's Python stage no longer depends on it: its url exchange is
-    # a REPARTITION_BY_NUM sized by session.stage_width, which AQE never
-    # coalesces. What the override still does is keep every other op's
-    # shuffle exchanges at the static shuffle_partitions width instead of
-    # letting AQE merge them by bytes; the headline timings were taken so.
-    spark = get_spark(
-        "glre_bench", cores=cores, shuffle_partitions=max(cores, 16),
-        extra_conf={"spark.sql.adaptive.coalescePartitions.enabled": "false"},
-    )
+    spark = get_spark("glre_bench")
 
     # warmup: JVM + Arrow + Python workers, on the largest table the sf dir
     # ships (a subset run may point at a dir holding only some tables)
@@ -112,7 +102,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "cores": cores,
+                "cores": spark.sparkContext.defaultParallelism,
             }
         )
     )

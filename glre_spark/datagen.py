@@ -127,8 +127,6 @@ TEMPLATES = [
     "{O} announced a partnership with {O2} .",
 ]
 
-LANGS = {3: "de", 5: "fr"}  # doc_id % 17 == 3 → de; % 23 == 5 → fr; else en
-
 _EPOCH = _dt.datetime(2024, 1, 1, 0, 0, 0)
 
 

@@ -81,6 +81,7 @@ MAX_LSH_BLOCK = 64  # block-size cap: one hot band block would otherwise go
                     # quadratic in the self-join (cartesian bomb at web
                     # scale); oversized blocks are dropped (SURVEY M4)
 KEEPER_TAU = 0.8  # classic near-dup Jaccard threshold
+KEEPER_SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
 NAME_TAU = 0.85   # name-cluster Jaccard threshold
 CC_MAX_ITER = 20  # connected-components round cap (pointer jumping
                   # converges in O(log diameter) rounds)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from glre_spark.linking import (
     DOC_BANDS,
+    KEEPER_SKETCH_K,
     KEEPER_TAU,
     MAX_LSH_BLOCK,
     MINHASH_A,
@@ -435,14 +436,11 @@ def dedup_keeper_table(spark, sf_dir):
     return near_dup_keepers(load(spark, sf_dir, "documents"))
 
 
-_SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
-
-
 @op(
     "dedup_keeper_sketch",
     _keeper_sql(
         f"""sk AS MATERIALIZED (
-  SELECT doc_id, list_slice(list_sort(list(h)), 1, {_SKETCH_K}) AS sh
+  SELECT doc_id, list_slice(list_sort(list(h)), 1, {KEEPER_SKETCH_K}) AS sh
   FROM sh GROUP BY doc_id
 ),
 ver AS MATERIALIZED (
@@ -453,8 +451,8 @@ ver AS MATERIALIZED (
   WHERE CAST(len(list_intersect(
                list_intersect(a.sh, b.sh),
                list_slice(list_sort(list_distinct(list_concat(a.sh, b.sh))),
-                          1, {_SKETCH_K}))) AS DOUBLE)
-        / least({_SKETCH_K}, len(list_distinct(list_concat(a.sh, b.sh))))
+                          1, {KEEPER_SKETCH_K}))) AS DOUBLE)
+        / least({KEEPER_SKETCH_K}, len(list_distinct(list_concat(a.sh, b.sh))))
         >= {KEEPER_TAU}
 )"""
     ),
@@ -472,7 +470,7 @@ def dedup_keeper_sketch(spark, sf_dir):
     (list_sort + list_slice) and hence the identical estimate and keeper
     table — the KMV estimator itself is cross-checked, not just row
     counts (VERDICT r5 next-round #4)."""
-    return near_dup_keepers(load(spark, sf_dir, "documents"), sketch_k=_SKETCH_K)
+    return near_dup_keepers(load(spark, sf_dir, "documents"), sketch_k=KEEPER_SKETCH_K)
 
 
 # --- embedding similarity ----------------------------------------------------

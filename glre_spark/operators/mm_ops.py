@@ -11,7 +11,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from glre_spark.operators import fround, load, op
+from glre_spark.operators import load, op
 
 
 def _media_df(spark, sf_dir, gen_fn):
@@ -163,7 +163,7 @@ def mm_frame_sample(spark, sf_dir):
     columns are byte-derived: n_frames rides out of the decode as the
     parsed GVID header count, n_sampled counts the materialized frames;
     only the oracle recomputes the generator formulas."""
-    from glre_spark.multimodal import decode_video, gen_video
+    from glre_spark.multimodal import decode_video, gen_video, sample_frames
 
     media = _media_df(spark, sf_dir, gen_video)
 
@@ -171,9 +171,9 @@ def mm_frame_sample(spark, sf_dir):
         for pdf in batches:
             rows = []
             for doc_id, b in zip(pdf["doc_id"], pdf["media"]):
-                decoded = decode_video(bytes(b))
-                for idx in range(0, decoded.shape[0], 4):
-                    rows.append((int(doc_id), int(decoded.shape[0]), idx))
+                b = bytes(b)
+                n_frames = len(decode_video(b))
+                rows.extend((int(doc_id), n_frames, idx) for idx, _ in sample_frames(b))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "n_frames", "frame_idx"]
             ).astype({"doc_id": "int64", "n_frames": "int32", "frame_idx": "int32"})

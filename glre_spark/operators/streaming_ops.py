@@ -11,7 +11,6 @@ count/sum-per-user aggregation. State is accumulated in integer cents
 
 from __future__ import annotations
 
-import itertools
 import shutil
 import tempfile
 
@@ -19,8 +18,6 @@ from pyspark.sql import functions as F
 
 from glre_spark.operators import fround, load, op
 from glre_spark.operators.textops import DOMAIN_STATS_SQL, _domain_col, with_avg_chars
-
-_MEM_SEQ = itertools.count()
 
 
 @op(
@@ -44,7 +41,7 @@ def stateful_user_totals_op(spark, sf_dir):
     )
 
     src_dir = tempfile.mkdtemp(prefix="stateful_events_")
-    name = f"stateful_totals_mem_{next(_MEM_SEQ)}"
+    name = "stateful_totals_mem"
     try:
         load(spark, sf_dir, "events").repartition(12).write.mode("overwrite").parquet(
             src_dir
@@ -66,6 +63,7 @@ def stateful_user_totals_op(spark, sf_dir):
             .localCheckpoint(eager=True)  # detach from scratch files + memory sink
         )
     finally:
+        spark.catalog.dropTempView(name)
         shutil.rmtree(src_dir, ignore_errors=True)
 
 
@@ -97,7 +95,7 @@ def dedup_events_stream_op(spark, sf_dir):
     )
 
     src_dir = tempfile.mkdtemp(prefix="dedup_events_")
-    name = f"dedup_events_mem_{next(_MEM_SEQ)}"
+    name = "dedup_events_mem"
     try:
         ev = load(spark, sf_dir, "events")
         ev.repartition(8).write.mode("overwrite").parquet(src_dir)
@@ -123,6 +121,7 @@ def dedup_events_stream_op(spark, sf_dir):
             .localCheckpoint(eager=True)
         )
     finally:
+        spark.catalog.dropTempView(name)
         shutil.rmtree(src_dir, ignore_errors=True)
 
 
@@ -141,7 +140,7 @@ def domain_stats_stream_op(spark, sf_dir):
     )
 
     src_dir = tempfile.mkdtemp(prefix="domain_docs_")
-    name = f"domain_stats_mem_{next(_MEM_SEQ)}"
+    name = "domain_stats_mem"
     try:
         load(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "source", "n_chars"
@@ -153,6 +152,7 @@ def domain_stats_stream_op(spark, sf_dir):
         # detach from scratch files + memory sink
         return with_avg_chars(spark.table(name)).localCheckpoint(eager=True)
     finally:
+        spark.catalog.dropTempView(name)
         shutil.rmtree(src_dir, ignore_errors=True)
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from glre_spark.inference import broadcast_weights
 from glre_spark.linking import (
+    KEEPER_SKETCH_K,
     alias_dict_df,
     apply_name_clusters,
     cluster_names,
@@ -193,7 +194,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         ided = docs.localCheckpoint(eager=True)
         keepers = near_dup_keepers(
             ided.select(F.col("url").alias("doc_id"), content.alias("text")),
-            sketch_k=256,
+            sketch_k=KEEPER_SKETCH_K,
         )
         keep_ids = keepers.filter(~F.col("is_dup")).select(
             F.col("doc_id").alias("url")

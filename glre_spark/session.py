@@ -18,10 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 ARROW_MAX_RECORDS_PER_BATCH = 256
 
 
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-
 def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
     """Spread a narrow input across the cluster before a CPU-heavy
     per-row stage (guide §2.5 "input skew: one huge unsplittable file …
@@ -74,7 +70,6 @@ def url_exchange_width(df: DataFrame) -> int:
 def get_spark(
     app_name: str = "glre_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the SparkSession.
@@ -83,19 +78,18 @@ def get_spark(
     exists (builder.master would silently OVERRIDE it — measured: two
     spark-submit runs at local[4] and local[16] both actually ran
     local[32] before this guard), else ``local[$SPARK_GRAFT_CPUS or
-    nproc]``. An explicit ``cores=`` always wins (tests and the bench
-    protocol pin their own level).
+    nproc]``. An explicit ``cores=`` always wins (perfbench pins its
+    own level).
+
+    One shuffle-width rule for every master: ``max(defaultParallelism,
+    8)``, read from the live context once it exists.
     """
     # Under spark-submit the driver JVM (PythonRunner) already holds the
     # --master conf and exposes its gateway via PYSPARK_GATEWAY_PORT; a
     # fresh SparkConf() here CANNOT see it (it lives in the launcher's
     # SparkConf, not in system properties), so the only correct move is
-    # to not call .master() at all and size shuffle partitions AFTER the
-    # session exists, from sc.defaultParallelism.
+    # to not call .master() at all.
     submitted = cores is None and bool(os.environ.get("PYSPARK_GATEWAY_PORT"))
-    cores = cores or default_parallelism()
-    shuffle_after = submitted and shuffle_partitions is None
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     # One BLAS thread per Python worker: N workers × multi-threaded
     # OpenBLAS/MKL oversubscribes the box quadratically and *anti*-scales
     # (measured 2.3× slower at local[32] than local[8] before this).
@@ -105,7 +99,6 @@ def get_spark(
         os.environ.setdefault(var, "1")
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -132,15 +125,14 @@ def get_spark(
         )
     )
     if not submitted:
+        cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
         builder = builder.master(f"local[{cores}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if shuffle_after:
-        # size the shuffle to the ACTUAL submitted cluster width
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(spark.sparkContext.defaultParallelism, 8)),
-        )
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(max(spark.sparkContext.defaultParallelism, 8)),
+    )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -14,7 +14,7 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 def spark():
     from glre_spark.session import get_spark
 
-    s = get_spark("glre_spark_tests", shuffle_partitions=8)
+    s = get_spark("glre_spark_tests")
     yield s
 
 

@@ -50,7 +50,6 @@ def _cell(x) -> str:
 
 
 def canon(df) -> tuple[list[str], list[tuple]]:
-    import numpy as np
     import pandas as pd
 
     cols = sorted(df.columns)

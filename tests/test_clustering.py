@@ -65,7 +65,7 @@ def test_near_dup_keepers_sketch_matches_exact(spark):
     from pyspark.sql import functions as F
 
     from glre_spark.datagen import pages_df
-    from glre_spark.linking import near_dup_keepers
+    from glre_spark.linking import KEEPER_SKETCH_K, near_dup_keepers
 
     # id folds warc_ts: the corpus seeds RECRAWLS (ids 6/7, 16/17, …
     # share a url), so xxhash64(url) alone duplicates — which the r6
@@ -88,7 +88,7 @@ def test_near_dup_keepers_sketch_matches_exact(spark):
     }
     sketch = {
         r["doc_id"]: (r["keeper"], r["is_dup"])
-        for r in near_dup_keepers(docs, sketch_k=256).collect()
+        for r in near_dup_keepers(docs, sketch_k=KEEPER_SKETCH_K).collect()
     }
     assert exact == sketch
     n_dups = sum(1 for _, d in exact.values() if d)

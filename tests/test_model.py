@@ -12,14 +12,13 @@ import pathlib
 import tracemalloc
 
 import numpy as np
-import pytest
 
 from glre_spark.datagen import gen_page_row, gen_pages
 from glre_spark.extract import extract_text
 from glre_spark.model import GLREModel, build_weights, net
 from glre_spark.model.net import REL_IDS
 from glre_spark.model.weights import D, HEADS, N_DIST
-from glre_spark.nlp import analyze, detect_mentions, sent_split, tokenize
+from glre_spark.nlp import analyze
 
 GOLDEN = pathlib.Path(__file__).parent / "goldens" / "golden_predictions.json"
 N_GOLD_DOCS = 120

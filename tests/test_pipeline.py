@@ -239,7 +239,6 @@ def test_spark_submit_master_is_honored(tmp_path):
     silently defeating the two-cluster-size protocol). Launch a real
     spark-submit at local[3] and assert the session sees it."""
     import subprocess
-    import sys
     import textwrap
 
     probe = tmp_path / "probe.py"

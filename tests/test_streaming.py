@@ -96,6 +96,22 @@ def test_stateful_operator_accumulates_across_microbatches(spark, tmp_path):
     assert final == want
 
 
+def test_stateful_op_drops_its_memory_table(spark):
+    """A memory sink registers its query name as a temp view holding every
+    emitted row; the registry op must drop it once its result is
+    checkpointed, so no call leaves driver-side rows behind."""
+    from glre_spark.operators import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    got = REGISTRY["stateful_user_totals"][0](spark, SF_DIR)
+    left = [
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("stateful_totals_mem")
+    ]
+    assert left == []
+    assert got.count() > 0  # the checkpointed result outlives the view
+
+
 def test_streaming_sliding_matches_batch(spark, tmp_path):
     import shutil
 
