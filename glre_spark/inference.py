@@ -7,9 +7,11 @@ per-batch, never per-row.
 
 Scale notes: documents are independent → embarrassingly parallel; the
 stage preserves the upstream url-hash partitioning (no shuffle), so its
-task count is the width of pipeline.latest_per_url's url exchange
-(session.stage_width); Arrow batch size is capped in session.py so fat
-rows stay allocation-bounded.
+task count is the width of pipeline.latest_per_url's url exchange (one
+partition per core). A Python worker holds one Arrow batch at a time (at
+most session.ARROW_MAX_RECORDS_PER_BATCH docs): the first-level collapse
+runs per batch and keeps nothing across batches, so worker memory does
+not grow with docs per task.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ def infer_stage_agg(
     extract_html: bool = False,
     group_col: str | None = None,
 ) -> DataFrame:
-    """(…, url, text|html) → per-partition aggregated predictions
+    """(…, url, text|html) → per-Arrow-batch aggregated predictions
     (h_name, r, t_name, score, url, n_pred_rows), scored with the weight
     dict ``weights_bc`` broadcasts (``broadcast_weights``).
 
@@ -49,15 +51,16 @@ def infer_stage_agg(
     Arrow stage (SURVEY.md §2.11: i1-i12 are one fused mapInPandas) — html
     crosses the JVM↔Python boundary exactly once and no intermediate text
     column is shuffled. The first-level (h_name, r, t_name) → (max score,
-    min url, count) aggregation also runs INSIDE the stage, per
-    partition: each Arrow batch's prediction records become one frame
-    (names gathered by doc offset, no per-prediction Python) and ONE
-    groupby over the partition's frames collapses them. Traced kg_build
-    (seed 42, ~80 docs per partition) sends 32,797 stage rows for 47,419
-    predictions (1.45×); the collapse grows with docs per partition (7.2×
-    at 920). After per-row linking, the one map-side-combining
-    (subj, pred, obj) aggregation merges partitions
-    (linking.dedup_triples).
+    min url, count) aggregation also runs INSIDE the stage, per Arrow
+    batch (at most session.ARROW_MAX_RECORDS_PER_BATCH docs): the batch's
+    prediction records become one frame (names gathered by doc offset, no
+    per-prediction Python), one groupby collapses it, and the result is
+    yielded before the next batch is read. Traced kg_build (seed 42, ~80
+    docs per partition, one batch each) sends 32,797 stage rows for
+    47,419 predictions (1.45×); at sf0.1 (~1,000 docs per partition, 4
+    batches each) 41,063 rows for 45,815. After per-row linking, the one
+    map-side-combining (subj, pred, obj) aggregation merges batches and
+    partitions (linking.dedup_triples: max / min / sum are associative).
 
     ``group_col`` (e.g. lineage bucket_group, or the streaming crawl_key)
     joins the agg key and rides through with its input Spark type — the
@@ -69,7 +72,6 @@ def infer_stage_agg(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _get_model(weights_bc.value)
-        frames = []
         for pdf in batches:
             if extract_html:
                 texts = (extract_text(h) for h in pdf["html"])
@@ -85,30 +87,26 @@ def infer_stage_agg(
             n_ent = np.array([len(d.entity_names) for d in docs], dtype=np.int64)
             ent = (np.cumsum(n_ent) - n_ent)[doc]
             names = np.array([n for d in docs for n in d.entity_names], dtype=object)
-            frame = pd.DataFrame({
+            # min url as an int64 rank into the batch's sorted urls:
+            # pandas' min over an object column compares row by row in Python
+            url_rank, by_rank = pd.factorize(urls, sort=True)
+            pred = pd.DataFrame({
                 "h_name": names[ent + rec["h"]],
                 "r": _REL[rec["rel"]],
                 "t_name": names[ent + rec["t"]],
                 "score": rec["score"],
-                "url": urls[doc],
+                "url": url_rank[doc],
             })
             if group_col:
-                frame[group_col] = pdf[group_col].to_numpy()[doc]
-            frames.append(frame)
-        if not frames:  # an empty partition sends no batches
-            return
-        pred = pd.concat(frames, ignore_index=True)
-        # min url as an int64 rank into the partition's sorted urls:
-        # pandas' min over an object column compares row by row in Python
-        pred["url"], by_rank = pd.factorize(pred["url"].to_numpy(), sort=True)
-        out = pred.groupby(keys, sort=False, dropna=False).agg(
-            score=("score", "max"), url=("url", "min"), n_pred_rows=("score", "size"),
-        ).reset_index()
-        # Python's correctly rounded round(x, 6), once per output row: it
-        # is monotone, so round(max) == max of the rounded scores
-        out["score"] = [round(x, 6) for x in out["score"].tolist()]
-        out["url"] = by_rank[out["url"].to_numpy()]
-        yield out[[*keys[:3], "score", "url", "n_pred_rows", *keys[3:]]]
+                pred[group_col] = pdf[group_col].to_numpy()[doc]
+            out = pred.groupby(keys, sort=False, dropna=False).agg(
+                score=("score", "max"), url=("url", "min"), n_pred_rows=("score", "size"),
+            ).reset_index()
+            # Python's correctly rounded round(x, 6), once per output row: it
+            # is monotone, so round(max) == max of the rounded scores
+            out["score"] = [round(x, 6) for x in out["score"].tolist()]
+            out["url"] = by_rank[out["url"].to_numpy()]
+            yield out[[*keys[:3], "score", "url", "n_pred_rows", *keys[3:]]]
 
     cols = ["url", "html" if extract_html else "text"]
     schema = LEAN_SCHEMA

@@ -14,12 +14,7 @@ from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        return bool(
-            spark.conf.get("spark.sql.catalog.glre", None)
-        )
-    except Exception:
-        return False
+    return bool(spark.conf.get("spark.sql.catalog.glre", None))
 
 
 def sink_triples(spark: SparkSession, triples: DataFrame, target: str) -> None:
@@ -46,8 +41,12 @@ def sink_metrics(spark: SparkSession, metrics: DataFrame, target: str) -> None:
 
 
 def entity_table(triples: DataFrame) -> DataFrame:
-    """Entity dimension from the triple stream: every subj/obj with its
-    document frequency (north_star's entity table)."""
+    """Entity dimension from the triple stream: every subj/obj with
+    ``n_docs``, the number of distinct witness urls among its deduped
+    triples (north_star's entity table). dedup_triples keeps one url (the
+    min) per (subj, pred, obj), so a triple seen in five documents adds
+    one url: ``n_docs`` is a lower bound on document frequency, not the
+    frequency itself."""
     subj = triples.select(F.col("subj").alias("entity"), "url")
     obj = triples.select(F.col("obj").alias("entity"), "url")
     return (

@@ -2,7 +2,7 @@
 
 scan_pages → filter_lang → as-of dedup (latest crawl per url, over one
 core-sized url-hash exchange) → extract_text (byte-identical invariant)
-→ mapInPandas GLRE inference (per-partition aggregation) → per-row
+→ mapInPandas GLRE inference (per-Arrow-batch aggregation) → per-row
 entity linking (two broadcast alias joins) → exact dedup, the one
 aggregation and the one hash exchange between the inference stage and
 the sink.
@@ -30,7 +30,6 @@ from glre_spark.linking import (
     link_aliases,
     near_dup_keepers,
 )
-from glre_spark.session import url_exchange_width
 
 MAX_DOC_CHARS = 100_000
 LANG = "en"  # the one language the model and alias dictionary cover
@@ -46,11 +45,14 @@ def url_bucket():
 def latest_per_url(pages: DataFrame) -> DataFrame:
     """join_asof flavor: keep the newest warc_ts crawl per url.
 
-    The url exchange is an explicit ``repartition(n, "url")`` under the
-    ``groupBy("url")``: it satisfies the aggregate, and its partitions are
-    the fused inference stage's tasks. ``n`` is session.url_exchange_width;
+    The url exchange is an explicit ``repartition(defaultParallelism,
+    "url")`` under the ``groupBy("url")``: it satisfies the aggregate, and
+    its partitions are the fused inference stage's tasks, one per core.
+    The stage is CPU-bound per document, which byte sizing does not see:
     AQE would coalesce the aggregate's own exchange by bytes (at 400
-    pages, 0.27 MB, into ONE task) but never a REPARTITION_BY_NUM one.
+    pages, 0.27 MB, into ONE task) but never a REPARTITION_BY_NUM one, and
+    one wave beats two (400 pages, local[4]: width 1 / 4 / 8 = 1.62 /
+    0.94 / 1.15 s).
 
     max_by over the row struct, NOT a window + row_number (r02 flagship-
     scaling suspect #1). Spark plans it as a SortAggregate, partial and
@@ -72,7 +74,9 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
     # and drops the stage, with any observation on build_triples' input
     # (lineage's per-group counts: Observation.get then fails). Emptiness
     # does not propagate through a CollectMetrics.
-    parted = pages.repartition(url_exchange_width(pages), "url").observe(
+    parted = pages.repartition(
+        pages.sparkSession.sparkContext.defaultParallelism, "url"
+    ).observe(
         f"url_exchange_{uuid.uuid4().hex}", F.count(F.lit(1)).alias("rows")
     )
     return (
@@ -119,8 +123,8 @@ def predictions_to_triples(preds: DataFrame, alias_df: DataFrame) -> DataFrame:
     linking.dedup_triples' max / min / sum are associative, so its one
     (subj, pred, obj[, group]) exchange merges what a (h_name, r, t_name)
     pre-aggregation would have. The trade: the normalization regexes run
-    once per stage-output row (already collapsed per partition inside the
-    stage), not once per globally distinct (h_name, r, t_name)."""
+    once per stage-output row (already collapsed per Arrow batch inside
+    the stage), not once per globally distinct (h_name, r, t_name)."""
     rest = [c for c in preds.columns if c not in ("h_name", "r", "t_name", "n_pred_rows")]
     linked_h = link_aliases(preds, alias_df, name_col="h_name").select(
         F.col("canonical_name").alias("subj"), "r", "t_name", "n_pred_rows", *rest,

@@ -12,7 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 # Docs are fat rows (html binary + full text): keep Arrow batches small so
-# the mapInPandas inference stage's page frames stay small (SURVEY.md §4.3).
+# the mapInPandas inference stage's page and prediction frames stay small
+# (SURVEY.md §4.3); the stage holds one batch at a time.
 # The model's pair tail is bounded separately, by gated pairs
 # (model.net.TAIL_PAIRS), not by this batch size.
 ARROW_MAX_RECORDS_PER_BATCH = 256
@@ -40,31 +41,6 @@ def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
     return df.repartition(factor * sc.defaultParallelism)
-
-
-def stage_width(est_bytes: int, cores: int, max_width: int, advisory_bytes: int) -> int:
-    """Partition count for the exchange feeding a CPU-bound Python stage,
-    whose per-row CPU cost AQE's byte sizing does not see: one task per
-    core, more only when core-wide partitions would exceed the advisory
-    size, capped at the shuffle width. One wave beats two (400 pages,
-    local[4]: width 1 / 4 / 8 = 1.62 / 0.94 / 1.15 s)."""
-    return max(cores, min(max_width, -(-est_bytes // advisory_bytes)))
-
-
-def url_exchange_width(df: DataFrame) -> int:
-    """``stage_width`` for ``df`` from Catalyst's plan-time size estimate
-    (no job runs) and its session's settings."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    advisory = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    return stage_width(
-        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
-        sc.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        advisory,
-    )
 
 
 def get_spark(

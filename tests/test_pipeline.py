@@ -77,7 +77,7 @@ def test_one_aggregation_matches_two_aggregation_reference(spark):
 
 def _reference_stage(docs, schema, group_col):
     """The stage's former per-prediction dict loop over predict_batch
-    records, per partition: (group, h_name, r, t_name) → [max
+    records, per Arrow batch: (group, h_name, r, t_name) → [max
     round(score, 6), min url, count]."""
     import pandas as pd
 
@@ -88,8 +88,8 @@ def _reference_stage(docs, schema, group_col):
 
     def fn(batches):
         model = _get_model()
-        acc = {}
         for pdf in batches:
+            acc = {}
             urls = pdf["url"].tolist()
             groups = pdf[group_col].tolist() if group_col else [None] * len(urls)
             docs = [analyze(u, extract_text(h)) for u, h in zip(urls, pdf["html"])]
@@ -105,9 +105,9 @@ def _reference_stage(docs, schema, group_col):
                         cur[0] = max(cur[0], score)
                         cur[1] = min(cur[1], url)
                         cur[2] += 1
-        rows = [(h, r, t, s, u, n, g) for (g, h, r, t), (s, u, n) in acc.items()]
-        frame = pd.DataFrame(rows, columns=[*schema.fieldNames()[:6], "_g"])
-        yield frame.rename(columns={"_g": group_col}) if group_col else frame.drop(columns="_g")
+            rows = [(h, r, t, s, u, n, g) for (g, h, r, t), (s, u, n) in acc.items()]
+            frame = pd.DataFrame(rows, columns=[*schema.fieldNames()[:6], "_g"])
+            yield frame.rename(columns={"_g": group_col}) if group_col else frame.drop(columns="_g")
 
     cols = ["url", "html", *([group_col] if group_col else [])]
     return docs.select(*cols).mapInPandas(fn, schema)
@@ -115,10 +115,10 @@ def _reference_stage(docs, schema, group_col):
 
 def test_stage_matches_per_prediction_reference(spark):
     """infer_stage_agg's columnar aggregation (prediction records → one
-    frame per Arrow batch → one groupby per partition) must give exactly
-    the rows of the per-prediction dict loop, score bits included: with
-    no group, an int group and a string group, over partitions that span
-    several Arrow batches."""
+    frame and one groupby per Arrow batch) must give exactly the rows of
+    the per-prediction dict loop, score bits included: with no group, an
+    int group and a string group, over partitions that span several Arrow
+    batches."""
     from pyspark.sql import functions as F
 
     from glre_spark.inference import broadcast_weights, infer_stage_agg

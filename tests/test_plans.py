@@ -126,9 +126,10 @@ def test_one_exchange_between_inference_and_sink(spark):
 def test_inference_stage_fed_by_one_core_sized_exchange(spark, tmp_path):
     """Between the parquet scan and the fused inference MapInPandas there
     is exactly ONE exchange: latest_per_url's explicit url repartition,
-    one partition per core for a small corpus. A REPARTITION_BY_NUM
-    exchange is never coalesced by AQE (its byte-based sizing ran the
-    whole Python stage as one task)."""
+    one partition per core whatever the input's size. A
+    REPARTITION_BY_NUM exchange is never coalesced by AQE (its byte-based
+    sizing ran the whole Python stage as one task), and a small advisory
+    partition size does not widen it either."""
     import re
 
     from glre_spark.datagen import pages_df
@@ -136,16 +137,24 @@ def test_inference_stage_fed_by_one_core_sized_exchange(spark, tmp_path):
 
     src = str(tmp_path / "pages")
     pages_df(spark, 50, partitions=4).write.parquet(src)
-    tree = _simple_plan(build_triples(spark, spark.read.parquet(src))).splitlines()
-    mip = next(i for i, l in enumerate(tree) if "MapInPandas" in l)
-    scan = next(i for i, l in enumerate(tree) if "FileScan parquet" in l)
-    exchanges = [l for l in tree[mip:scan] if "Exchange" in l]
-    assert len(exchanges) == 1, exchanges
-    m = re.search(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", exchanges[0])
-    assert m, exchanges[0]
-    assert m.groups() == (
-        "url", str(spark.sparkContext.defaultParallelism), "REPARTITION_BY_NUM",
-    )
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(advisory)
+    trees = [_simple_plan(build_triples(spark, spark.read.parquet(src)))]
+    spark.conf.set(advisory, "1k")
+    try:
+        trees.append(_simple_plan(build_triples(spark, spark.read.parquet(src))))
+    finally:
+        spark.conf.set(advisory, before)
+    for tree in (t.splitlines() for t in trees):
+        mip = next(i for i, l in enumerate(tree) if "MapInPandas" in l)
+        scan = next(i for i, l in enumerate(tree) if "FileScan parquet" in l)
+        exchanges = [l for l in tree[mip:scan] if "Exchange" in l]
+        assert len(exchanges) == 1, exchanges
+        m = re.search(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", exchanges[0])
+        assert m, exchanges[0]
+        assert m.groups() == (
+            "url", str(spark.sparkContext.defaultParallelism), "REPARTITION_BY_NUM",
+        )
 
 
 def test_join_asof_is_the_pipelines_asof(spark):
@@ -162,26 +171,6 @@ def test_join_asof_is_the_pipelines_asof(spark):
     assert re.search(
         r"Exchange hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_NUM", exchanges[0]
     ), exchanges[0]
-
-
-def test_stage_width_rule():
-    """session.stage_width: one task per core unless the byte estimate
-    needs more partitions of the advisory size, capped at the shuffle
-    width."""
-    from glre_spark.session import stage_width
-
-    advisory = 64 << 20
-    assert stage_width(320, 4, 8, advisory) == 4
-    assert stage_width(350_000, 4, 8, advisory) == 4
-    assert stage_width(0, 4, 8, advisory) == 4
-    # a 100 TB estimate gets the byte-driven width, capped by the shuffle
-    # width; the core floor only matters when the cap is below it
-    tb100 = 100 * 10**12
-    assert stage_width(tb100, 4, 2000, advisory) == 2000
-    assert stage_width(tb100, 4, 10**9, advisory) == -(-tb100 // advisory)
-    assert stage_width(10 * advisory, 4, 2000, advisory) == 10
-    assert stage_width(10 * advisory + 1, 4, 2000, advisory) == 11
-    assert stage_width(tb100, 16, 8, advisory) == 16
 
 
 def test_keeper_semi_join_below_inference_stage(spark):
