@@ -135,17 +135,16 @@ def _rng(seed: int, doc_id: int) -> random.Random:
     return random.Random(int.from_bytes(h[:8], "big"))
 
 
+# Entity names per type, in ENTITIES order (the order fixes the RNG stream
+# and so the page bytes). Built once at import: rebuilding a pool on every
+# pick was ~85% of gen_page_row (measured 628 -> 95 us/doc).
 _POOLS: dict[str, list[str]] = {}
+for _name, _typ, _ in ENTITIES:
+    _POOLS.setdefault(_typ, []).append(_name)
 
 
 def _pick(rng: random.Random, typ: str) -> str:
-    # pool per type cached once: rebuilding the ~360-entry comprehension on
-    # every pick was ~85% of gen_page_row (measured 628 -> 95 us/doc);
-    # list order is unchanged so the RNG stream and output bytes are
-    # identical
-    pool = _POOLS.get(typ)
-    if pool is None:
-        pool = _POOLS[typ] = [n for n, t, _ in ENTITIES if t == typ]
+    pool = _POOLS[typ]
     return pool[rng.randrange(len(pool))]
 
 
@@ -267,7 +266,7 @@ def pages_df(
 ):
     """Distributed generation: parallelize doc_ids, generate per-partition
     inside mapInPandas — scales to any n_docs without driver materialize."""
-    ids = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
+    ids = spark.range(0, n_docs, 1, partitions)
     return _gen_pages(ids, seed, sent_range)
 
 
@@ -291,17 +290,13 @@ def pages_from_docs(docs, partitions: int | None = None):
     (shared by the driver entry, the glre_* ops, and the UDF-surface ops —
     one generator, identical corpus everywhere).
 
-    ``partitions=None`` gives max(16, defaultParallelism) gen tasks: the
-    cluster width on wide masters, never fewer than 16 on narrow ones.
-    Not the 2x-width rule for CPU-per-row stages: after the _pick
-    pool-cache fix the gen is ~70 us/doc, so Python-worker task dispatch
-    (~20 ms/task) dominates and fewer, fuller tasks win (measured sf1.0:
-    0.67 s at 32 tasks vs 1.08 s at 64 on local[32]). Explicit callers
-    (driver entry, tests) still pin their own."""
-    if partitions is None:
-        partitions = max(16, docs.sparkSession.sparkContext.defaultParallelism)
-    ids = docs.selectExpr("doc_id AS id").repartition(partitions)
-    return _gen_pages(ids)
+    ``partitions=None`` spreads the ids with ``session.fan_out``, one gen
+    task per core. Callers that set a file count (the driver entry, the
+    sink and stream ops) pass ``partitions`` and get exactly that many."""
+    from glre_spark.session import fan_out
+
+    ids = docs.selectExpr("doc_id AS id")
+    return _gen_pages(fan_out(ids) if partitions is None else ids.repartition(partitions))
 
 
 # --------------------------------------------------------------------------

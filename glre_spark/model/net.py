@@ -165,13 +165,14 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-x))
 
 
-# Dense (type_h, type_t) → relation-gate mask lookup for the vectorized
-# pair loop. Types indexed once; mask[ti, tj] is a bool vector over REL_IDS.
+# Types indexed once for the vectorized pair loop. _GATE_ANY[ti, tj]: does
+# the (type_h, type_t) gate open? Every TYPE_GATE entry lists at least one
+# relation, so a key is an open gate.
 _TYPES = ["PER", "ORG", "LOC", "TIME", "NUM", "MISC"]
 _TYPE_IDX = {t: i for i, t in enumerate(_TYPES)}
-_GATE_MASK = np.zeros((len(_TYPES), len(_TYPES), len(REL_IDS)), dtype=bool)
-for (_th, _tt), _idxs in TYPE_GATE.items():
-    _GATE_MASK[_TYPE_IDX[_th], _TYPE_IDX[_tt], _idxs] = True
+_GATE_ANY = np.zeros((len(_TYPES), len(_TYPES)), dtype=bool)
+for _th, _tt in TYPE_GATE:
+    _GATE_ANY[_TYPE_IDX[_th], _TYPE_IDX[_tt]] = True
 
 # Flat type-pair group id → SORTED gated relation columns (ascending, so a
 # per-group argmax breaks float ties exactly like argmax over the full
@@ -182,7 +183,6 @@ _GATE_COLS = {
     _TYPE_IDX[th] * len(_TYPES) + _TYPE_IDX[tt]: np.sort(idxs)
     for (th, tt), idxs in TYPE_GATE.items()
 }
-_GATE_ANY = _GATE_MASK.any(axis=2)  # (6, 6): does this type-pair gate open?
 
 
 # Gated pairs the ff1 + gated-head tail takes at once. ``predict_batch``

@@ -884,10 +884,7 @@ def simhash_dedup(spark, sf_dir):
                 out.append((int(doc_id), sh))
             yield pd.DataFrame(out, columns=["doc_id", "simhash"])
 
-    # factor=1: per-doc CPU here is light (~70 us), so Python-task
-    # dispatch dominates and 1x cluster width beats 2x (measured sf1.0:
-    # 0.84 s at 32 tasks vs 1.23 s at 64 on local[32])
-    docs = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text"), factor=1)
+    docs = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text"))
     sims = docs.mapInPandas(sim_batch, "doc_id long, simhash long")
     return (
         sims.groupBy("simhash")

@@ -12,21 +12,13 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from glre_spark.operators import load, op
+from glre_spark.session import fan_out
 
 
 def _media_df(spark, sf_dir, gen_fn):
     """doc_ids → (doc_id, media binary) via mapInPandas: the binary column
-    crosses the Arrow boundary exactly like real blob columns would.
-
-    Stage sizing: 1x cluster width, derived instead of the former
-    constant 8 that serialized the decode stage on wide masters. Not the
-    2x-tasks-per-core rule for heavy CPU stages: per-doc work here is
-    ~140 us, so Python-task dispatch dominates and fuller tasks win
-    (measured sf1.0: 1.18 s at 32 tasks vs 1.83 s at 64 on local[32])."""
-    para = spark.sparkContext.defaultParallelism
-    docs = (
-        load(spark, sf_dir, "documents").select("doc_id").repartition(max(8, para))
-    )
+    crosses the Arrow boundary exactly like real blob columns would."""
+    docs = fan_out(load(spark, sf_dir, "documents").select("doc_id"))
 
     def gen(batches):
         for pdf in batches:

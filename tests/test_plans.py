@@ -4,9 +4,12 @@ parquet scan, broadcast joins for dims, no Python UDFs in relational ops."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from glre_spark.operators import REGISTRY, _ensure_loaded
+from glre_spark.datagen import pages_from_docs
+from glre_spark.operators import REGISTRY, _ensure_loaded, load
+from glre_spark.session import fan_out
 from tests.conftest import SF_DIR
 
 _ensure_loaded()
@@ -192,6 +195,32 @@ def test_keeper_semi_join_below_inference_stage(spark):
     assert min(mip) < min(semi) < max(mip), (
         "keeper semi-join is not between the inference stage and the scan"
     )
+
+
+NARROW_INPUTS = {
+    "fan_out": lambda spark: fan_out(spark.range(0, 100, 1, 1)),
+    "pages_from_docs": lambda spark: pages_from_docs(load(spark, SF_DIR, "documents")),
+    "mm_image_meta": lambda spark: REGISTRY["mm_image_meta"][0](spark, SF_DIR),
+    "minhash_sig": lambda spark: REGISTRY["minhash_sig"][0](spark, SF_DIR),
+}
+
+
+@pytest.mark.parametrize("case", sorted(NARROW_INPUTS))
+def test_narrow_input_fans_out_to_one_task_per_core(spark, case):
+    """Every narrow-input CPU stage is spread by session.fan_out alone:
+    exactly one round-robin exchange, to defaultParallelism partitions
+    (one wave of tasks), whatever the stage's per-row cost."""
+    import re
+
+    plan = _simple_plan(NARROW_INPUTS[case](spark))
+    widths = re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)
+    assert widths == [str(spark.sparkContext.defaultParallelism)], plan
+
+
+def test_fan_out_leaves_a_core_wide_input_alone(spark):
+    df = spark.range(0, 100, 1, spark.sparkContext.defaultParallelism)
+    assert fan_out(df) is df
+    assert "Exchange" not in _simple_plan(fan_out(df))
 
 
 def test_repetition_score_has_no_shuffle(spark):
